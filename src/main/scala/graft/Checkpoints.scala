@@ -23,47 +23,39 @@ import org.apache.spark.sql.DataFrame
   */
 object Checkpoints {
   val ConfKey = "spark.graft.checkpointDir"
-  /** Escape hatch: `spark.graft.ckpt.eager=true` restores the pre-r21
-    * eager localCheckpoint (one materialization job per call). */
-  val EagerKey = "spark.graft.ckpt.eager"
 
-  /** Truncate lineage. `eager = false` (r21, guide §1.2/§2.4) opts a
-    * call site into LAZY localCheckpoint: the blocks are persisted
-    * DURING the first consuming action instead of by a dedicated
-    * materialization job, saving one full pass over the frame per
-    * checkpoint (measured 0.26 s per call on the BPE fixpoint corpus
-    * at sf0.1; at 100 TB the saved pass is a full corpus
-    * write+re-read). Correct ONLY where the first consuming job reads
-    * the frame through a SINGLE dependency branch (a loop hop whose
-    * convergence action follows immediately, e.g. hashMinLabels'
+  /** Truncate lineage, EAGERLY: one materialization job per call, so
+    * every consumer reads the persisted blocks. */
+  def ckpt(df: DataFrame): DataFrame = truncate(df, eager = true)
+
+  /** LAZY checkpoint with a NAMED sole consumer (r21/r22, guide
+    * §1.2/§2.4): the blocks are persisted DURING the first consuming
+    * action instead of by a dedicated materialization job, saving one
+    * full pass over the frame per checkpoint (measured 0.26 s per call
+    * on the BPE fixpoint corpus at sf0.1; at 100 TB the saved pass is a
+    * full corpus write+re-read). Correct ONLY where the first consuming
+    * job reads the frame through a SINGLE dependency branch (a loop hop
+    * whose convergence action follows immediately, e.g. hashMinLabels'
     * lblSum, the BPE round's top-pair collect, Redirects' frontier
     * count): with several concurrent consumer stages in one job —
     * q_triangles' 3-way self-join, hashMinLabels' membership read by
     * both sides of the hop — the racing map stages each recompute the
     * un-materialized upstream (measured: q_dedup_cluster 2.1 s → 3.2 s
-    * when its membership checkpoint went lazy), so multi-consumer
-    * sites keep the default eager materialization. Semantics are
-    * unchanged either way: persist() registers the RDD at call time
-    * (getPersistentRDDs bookkeeping still sees it) and
-    * LocalRDDCheckpointData fills any partitions a partial first
-    * action skipped before truncating lineage.
-    * `spark.graft.ckpt.eager=true` forces eager everywhere. */
-  /** LAZY checkpoint with a NAMED sole consumer (r22, VERDICT r21 #7).
-    * The lazy mode is correct ONLY while the first consuming job reads
-    * the frame through a single dependency branch — a property the r21
-    * sites enforced by comment alone. Every lazy call site must route
-    * through this helper and name the single consuming action; a
+    * when its membership checkpoint went lazy), so multi-consumer sites
+    * use [[ckpt]]. This helper is the ONLY way to reach the lazy mode,
+    * and `soleConsumer` names the single consuming action, so a
     * refactor that adds a second concurrent consumer has to touch this
-    * call (and its named contract) to compile, instead of silently
-    * reintroducing the measured 1.5× recompute race. `soleConsumer` is
-    * the documentation-of-record; CheckpointsSpec pins the helper's
-    * semantics (lazy persistence, identical frame). */
+    * call and its named contract. Semantics are unchanged either way:
+    * persist() registers the RDD at call time (getPersistentRDDs
+    * bookkeeping still sees it) and LocalRDDCheckpointData fills any
+    * partitions a partial first action skipped before truncating
+    * lineage. */
   def ckptLazy(df: DataFrame, soleConsumer: String): DataFrame = {
     require(soleConsumer.nonEmpty, "ckptLazy requires the sole consumer's name")
-    ckpt(df, eager = false)
+    truncate(df, eager = false)
   }
 
-  def ckpt(df: DataFrame, eager: Boolean = true): DataFrame = {
+  private def truncate(df: DataFrame, eager: Boolean): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption(ConfKey).filter(_.nonEmpty) match {
       case Some(dir) =>
@@ -73,50 +65,7 @@ object Checkpoints {
           sc.setCheckpointDir(dir)
         df.checkpoint()
       case None =>
-        val forceEager =
-          spark.conf.getOption(EagerKey).exists(_.equalsIgnoreCase("true"))
-        df.localCheckpoint(eager = eager || forceEager)
+        df.localCheckpoint(eager = eager)
     }
   }
-}
-
-/** SESSION-SCOPED reuse of expensive shared artifacts (VERDICT r17 #8):
-  * the BPE training fixpoint's final corpus and the LSH dedup-cluster
-  * labels are deterministic functions of (input dir, params), yet the
-  * downstream QA queries (`q_tok_fertility`, `q_dedup_survivor`)
-  * recomputed them per query. With `spark.graft.reuse.checkpoints=true`
-  * the first computation is checkpointed and registered here; later
-  * queries in the SAME session get the materialized frame back — at
-  * 100 TB this is "the fertility report reads the trainer's final
-  * checkpoint" made literal, one equi-join instead of a repeated
-  * corpus fixpoint.
-  *
-  * OFF by default: reuse pins checkpoint blocks for the session
-  * lifetime, and harnesses that unpersist aggressively between queries
-  * (graft.Bench's cleanup) would invalidate cached blocks — the opt-in
-  * conf is the contract that the caller manages block lifetime. Keys
-  * embed the SparkContext identity, so a fresh session never reads a
-  * dead session's blocks; outputs are bit-equal by determinism of the
-  * cached computation (ArtifactReuseSpec asserts it on both consumers).
-  */
-object ArtifactCache {
-  val ConfKey = "spark.graft.reuse.checkpoints"
-
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[String, AnyRef]
-
-  def enabled(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.getOption(ConfKey).exists(_.equalsIgnoreCase("true"))
-
-  /** Compute-once-per-session under `key` when reuse is on; transparent
-    * pass-through when off. `f` must be deterministic in `key`. */
-  def getOrCompute[T <: AnyRef](spark: org.apache.spark.sql.SparkSession,
-                                key: String)(f: => T): T =
-    if (!enabled(spark)) f
-    else cache.getOrElseUpdate(
-      key + "|sc=" + System.identityHashCode(spark.sparkContext), f)
-      .asInstanceOf[T]
-
-  /** Test hook: forget everything (e.g. between conf A/B passes). */
-  private[graft] def clear(): Unit = cache.clear()
 }

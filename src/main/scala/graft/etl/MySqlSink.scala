@@ -250,12 +250,29 @@ object MySqlSink {
                         stageDdl: String => Seq[String],
                         cols: Seq[String], pk: Seq[String],
                         batchSize: Int = 5000): Long = {
-    val stage = target + "_stg"
-    dropBestEffort(url, user, password, stage)
-    bootstrap(url, user, password, stageDdl(stage))
-    writer(df.selectExpr(cols: _*), url, stage, user, password, batchSize).save()
+    val stage = writeStage(df, url, user, password, target, stageDdl, cols, batchSize)
     val n = promoteStage(url, user, password, target, stage, cols, pk)
     dropBestEffort(url, user, password, stage)
     n
+  }
+
+  /** Steps 1-3 of [[exactlyOnceAppend]]: (re)create `<target>_stg` and
+    * append `df`'s `cols` into it; returns the stage name. Embedded Derby
+    * refills a table's IDENTITY generator in a no-wait nested transaction
+    * and fails the insert with a lock timeout ("too much contention")
+    * when two writers refill at once, so a Derby stage is written by ONE
+    * task, behind a shuffle that keeps the upstream parallel (a single
+    * embedded-Derby writer inserts as fast as four). */
+  private[graft] def writeStage(df: DataFrame, url: String, user: String,
+                                password: String, target: String,
+                                stageDdl: String => Seq[String],
+                                cols: Seq[String], batchSize: Int): String = {
+    val stage = target + "_stg"
+    dropBestEffort(url, user, password, stage)
+    bootstrap(url, user, password, stageDdl(stage))
+    val rows = df.selectExpr(cols: _*)
+    writer(if (url.startsWith("jdbc:derby:")) rows.repartition(1) else rows,
+      url, stage, user, password, batchSize).save()
+    stage
   }
 }

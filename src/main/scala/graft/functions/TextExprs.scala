@@ -976,25 +976,37 @@ object TextExprs {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** See [[SortJoin]]. */
+  /** See [[SortJoin]]. NULL elements and NULL `v`s are skipped, as
+    * array_join skips them; a NULL `k` sorts first, as in array_sort. */
   def sortJoin(arr: ArrayData): UTF8String = {
-    val n = arr.numElements()
-    val ks = new Array[Long](n)
-    val vs = new Array[UTF8String](n)
+    val n0 = arr.numElements()
+    val kNull = new Array[Boolean](n0)
+    val ks = new Array[Long](n0)
+    val vs = new Array[UTF8String](n0)
+    var n = 0
+    var bytes = 0
     var i = 0
-    var bytes = if (n > 0) n - 1 else 0
-    while (i < n) {
-      val st = arr.getStruct(i, 2)
-      ks(i) = st.getLong(0)
-      vs(i) = st.getUTF8String(1)
-      bytes += vs(i).numBytes()
+    while (i < n0) {
+      if (!arr.isNullAt(i)) {
+        val st = arr.getStruct(i, 2)
+        if (!st.isNullAt(1)) {
+          kNull(n) = st.isNullAt(0)
+          ks(n) = if (kNull(n)) 0L else st.getLong(0)
+          vs(n) = st.getUTF8String(1)
+          bytes += vs(n).numBytes()
+          n += 1
+        }
+      }
       i += 1
     }
+    if (n > 0) bytes += n - 1
     val idx = new Array[Integer](n)
     i = 0
     while (i < n) { idx(i) = i; i += 1 }
     java.util.Arrays.sort(idx, (a: Integer, b: Integer) => {
-      val c = java.lang.Long.compare(ks(a), ks(b))
+      val c =
+        if (kNull(a) || kNull(b)) java.lang.Boolean.compare(kNull(b), kNull(a))
+        else java.lang.Long.compare(ks(a), ks(b))
       if (c != 0) c else vs(a).compareTo(vs(b))
     })
     val out = new Array[Byte](bytes)

@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   * vocabulary contributes nothing to per-row cost beyond the
   * executor-shared lookup table, the plan depth is constant, and the
   * same code serves an 8-merge spec table and a 32k-merge production
-  * vocab (BpeApplyBench: 0.54 / 0.62 / 0.62 s at 8 / 1024 / 32768
-  * merges over sf0.1 — flat; the first gated-probe cut measured 9.2 s
-  * at 32k, the r18 fold could not run at all).
+  * vocab (SCALING.md "r19: BPE serving path": 0.54 / 0.62 / 0.62 s at
+  * 8 / 1024 / 32768 merges over sf0.1 — flat; the first gated-probe
+  * cut measured 9.2 s at 32k, the r18 fold could not run at all).
   *
   * Bit-equality: the stored table IS the trainer's output, and
   * [[BpeApply.applyAll]] applies merges in step order where each fired

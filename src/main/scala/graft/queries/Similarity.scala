@@ -82,7 +82,7 @@ object Similarity {
   private def minhashEstFrame(s: SparkSession, d: String): DataFrame = {
     val dw = docWords(s, d).filter(col("doc_id") < 100)
     val sigs = minhashSigsLocal(
-      load(s, d, "documents").filter(col("doc_id") < 100), 1)
+      docToks(load(s, d, "documents").filter(col("doc_id") < 100)), 1)
     val bands = sigs.select(col("doc_id"), explode(array(bandSig: _*)).as("bs"))
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
     val cand = bands.select(col("doc_id").as("a_id"), col("band"), col("sig"))
@@ -122,16 +122,19 @@ object Similarity {
     * min over the distinct set, so skipping the exploded form's
     * array_distinct changes nothing; docs with no gram yield NULL and
     * are dropped, matching the exploded form's absence of rows
-    * (TextExprsSpec pins signature equality for n = 1 and n = 4). */
-  private def minhashSigsLocal(docs: DataFrame, gramN: Int): DataFrame = {
-    graft.functions.TextExprs.register(docs.sparkSession)
-    docs.select(col("doc_id"),
-        expr(s"graft_minhash8(filter(split(text, ' '), x -> x <> ''), $gramN)")
-          .as("ms"))
+    * (TextExprsSpec pins signature equality for n = 1 and n = 4).
+    * Takes the (doc_id, toks) frame of [[docToks]]. */
+  private def minhashSigsLocal(toks: DataFrame, gramN: Int): DataFrame = {
+    graft.functions.TextExprs.register(toks.sparkSession)
+    toks.select(col("doc_id"), expr(s"graft_minhash8(toks, $gramN)").as("ms"))
       .filter(col("ms").isNotNull)
       .select((col("doc_id") +: (0 until 8).map(i =>
         element_at(col("ms"), i + 1).as(s"m$i"))): _*)
   }
+
+  /** (doc_id, toks): the whitespace tokens of each document's text. */
+  private def docToks(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), expr("filter(split(text, ' '), x -> x <> '')").as("toks"))
 
   /** 4 bands of 2 minhashes → per-band order-insensitive md5 signature. */
   private val bandSig: Seq[Column] = (0 until 4).map(b =>
@@ -223,29 +226,23 @@ object Similarity {
     * [[minhashSigsLocal]]): signature construction shuffles NOTHING;
     * the band explode and bucket concat stay row-local too, so the
     * first exchange in the dedup family is the CC loop's own. */
-  def lshBuckets(docs: DataFrame): DataFrame =
-    minhashSigsLocal(docs, 4)
-      .select(col("doc_id"), explode(array(bandSig: _*)).as("bs"))
-      .select(col("doc_id"),
-        concat(col("bs.band").cast("string"), lit("|"), col("bs.sig")).as("bucket"))
+  def lshBuckets(docs: DataFrame): DataFrame = lshBucketsFromToks(docToks(docs))
 
   /** [[lshBuckets]] over a PRE-TOKENIZED (doc_id, toks) frame — r22
     * (guide §2.4 do-fewer-passes): q_pipeline_e2e already checkpoints
     * the tokenized corpus for its quality/decontamination stages, so
-    * the near-dup stage must not re-read and re-tokenize raw text.
-    * Identical buckets by construction: graft_minhash8 over the same
-    * token arrays the text form would produce (the text form IS
-    * `graft_minhash8(graft_toks(text), 4)` after the tokenizer
-    * rewrite). */
-  private[graft] def lshBucketsFromToks(toks: DataFrame): DataFrame = {
-    graft.functions.TextExprs.register(toks.sparkSession)
-    toks.select(col("doc_id"), expr("graft_minhash8(toks, 4)").as("ms"))
-      .filter(col("ms").isNotNull)
-      .select((col("doc_id") +: (0 until 8).map(i =>
-        element_at(col("ms"), i + 1).as(s"m$i"))): _*)
+    * the near-dup stage must not re-read and re-tokenize raw text. */
+  private[graft] def lshBucketsFromToks(toks: DataFrame): DataFrame =
+    minhashSigsLocal(toks, 4)
       .select(col("doc_id"), explode(array(bandSig: _*)).as("bs"))
       .select(col("doc_id"),
         concat(col("bs.band").cast("string"), lit("|"), col("bs.sig")).as("bucket"))
+
+  /** The minhash-LSH dedup-cluster label frame (doc_id, lbl) — shared
+    * kernel of q_dedup_cluster and q_dedup_survivor. */
+  private def dedupLabels(s: SparkSession, d: String): DataFrame = {
+    val docs = load(s, d, "documents")
+    hashMinLabels(lshBuckets(docs), docs)
   }
 
   /** Hash-min label propagation over the BIPARTITE doc–bucket graph:
@@ -258,19 +255,6 @@ object Similarity {
     * labels only ever DECREASE, so the exact-decimal label sum strictly
     * decreases until the fixpoint — convergence is one narrow aggregate
     * per hop, not a prev-vs-next join. */
-  /** The minhash-LSH dedup-cluster label frame (doc_id, lbl) — shared
-    * kernel of q_dedup_cluster and q_dedup_survivor. Under
-    * `spark.graft.reuse.checkpoints` (graft.ArtifactCache, VERDICT r17
-    * #8) one session computes it ONCE; the policy query then adds only
-    * its combining aggregates on top of the materialized labels. */
-  private def dedupLabels(s: SparkSession, d: String): DataFrame =
-    graft.ArtifactCache.getOrCompute(s, s"dedup_labels|$d") {
-      val docs = load(s, d, "documents")
-      val labels = hashMinLabels(lshBuckets(docs), docs)
-      if (graft.ArtifactCache.enabled(s)) graft.Checkpoints.ckpt(labels)
-      else labels
-    }
-
   def hashMinLabels(memb0: DataFrame, docIds: DataFrame): DataFrame = {
     // Measured and rejected (bench, sf0.1): (a) pre-filtering to the
     // collision subgraph (buckets with ≥2 docs) and (b) keeping two
@@ -315,16 +299,7 @@ object Similarity {
     // LOUDLY below — a silently truncated clustering would diverge
     // from the oracle's unbounded closure while looking exact
     val maxIters = 64
-    // Per-hop wall time, logged at convergence when
-    // spark.graft.hopLog=true — the r8 battery showed one rep of
-    // q_dedup_cluster at 4× its min and min-of-3 reporting hid WHERE
-    // the stall sat; per-hop attribution makes a straggler hop visible
-    // from the bench log alone.
-    val hopLog = memb0.sparkSession.conf
-      .getOption("spark.graft.hopLog").contains("true")
-    val hopMs = scala.collection.mutable.ArrayBuffer.empty[Long]
     while (!converged && iters < maxIters) {
-      val t0 = System.nanoTime()
       val bucketMin = membC.join(labels, "doc_id")
         .groupBy(col("bucket")).agg(min(col("lbl")).as("bl"))
       val docMin = membC.join(bucketMin, "bucket")
@@ -346,11 +321,7 @@ object Similarity {
       labelIds = nextIds
       labels = next
       iters += 1
-      hopMs += (System.nanoTime() - t0) / 1000000
     }
-    if (hopLog)
-      System.err.println(
-        s"graft.hopLog hashMinLabels hops=${hopMs.size} ms=${hopMs.mkString("[", ",", "]")}")
     if (!converged)
       throw new IllegalStateException(
         s"hashMinLabels: label propagation not converged after $maxIters hops")
@@ -835,7 +806,7 @@ object Similarity {
     // minhashSigs) — no vocabulary table, no broadcast, no join; the
     // plan is explode → codegen'd md5 columns → one hash aggregate.
     "q_minhash_dedup" -> ((s, d) => {
-      val sigs = minhashSigsLocal(load(s, d, "documents"), 1)
+      val sigs = minhashSigsLocal(docToks(load(s, d, "documents")), 1)
       sigs.select(col("doc_id"), explode(array(bandSig: _*)).as("bs"))
         .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
         .groupBy(col("band"), col("sig"))
@@ -850,7 +821,7 @@ object Similarity {
     // n_bands = how many of the 4 bands collide.
     "q_minhash_pairs" -> ((s, d) => {
       val sigs = minhashSigsLocal(
-        load(s, d, "documents").filter(col("doc_id") < 100), 1)
+        docToks(load(s, d, "documents").filter(col("doc_id") < 100)), 1)
       val bands = sigs.select(col("doc_id"), explode(array(bandSig: _*)).as("bs"))
         .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
       bands.select(col("doc_id").as("a_id"), col("band"), col("sig"))

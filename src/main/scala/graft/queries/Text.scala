@@ -555,17 +555,8 @@ object Text {
       .filter(_ >= 1).getOrElse(nMerges)
     val batchK = s.conf.getOption("spark.graft.bpe.batchK")
       .map(_.toInt).filter(_ > 1).getOrElse(1)
-    // shared-artifact reuse (VERDICT r17 #8): the trained corpus is a
-    // deterministic function of (dir, budget, batchK) — under
-    // spark.graft.reuse.checkpoints, q_bpe_train/q_bpe_apply/
-    // q_tok_fertility in one session run the fixpoint ONCE and the
-    // final frame is checkpointed for the consumers
-    graft.ArtifactCache.getOrCompute(s, s"bpe|$d|$budget|$batchK|${pretokMode(s)}") {
-      val (m, e, _) = bpeLoopBatched(s, d, budget, batchK)
-      val eMat =
-        if (graft.ArtifactCache.enabled(s)) graft.Checkpoints.ckpt(e) else e
-      (m, eMat)
-    }
+    val (m, e, _) = bpeLoopBatched(s, d, budget, batchK)
+    (m, e)
   }
 
   /** GPT-2-CLASS PRETOKENIZER (r20, VERDICT r19 #3). The r19 BPE family

@@ -83,11 +83,8 @@ object StreamingJdbc {
     ensureLedger(url, user, password, ledger, ledgerDdl)
     if (ledgerHas(url, user, password, ledger, target, batchId)) -1L
     else {
-      val stage = target + "_stg"
-      MySqlSink.dropBestEffort(url, user, password, stage)
-      MySqlSink.bootstrap(url, user, password, stageDdl(stage))
-      MySqlSink.writer(batch.selectExpr(cols: _*), url, stage, user, password,
-        batchSize).save()
+      val stage = MySqlSink.writeStage(batch, url, user, password, target,
+        stageDdl, cols, batchSize)
       val n = MySqlSink.promoteStageLedgered(url, user, password, target, stage,
         cols, pk, ledger, batchId)
       MySqlSink.dropBestEffort(url, user, password, stage)

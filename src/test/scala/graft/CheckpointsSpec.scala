@@ -103,21 +103,11 @@ class CheckpointsSpec extends SparkTestBase {
       spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
     intercept[IllegalArgumentException] { Checkpoints.ckptLazy(df, "") }
 
-    // tripwire: the single-dependency-branch contract of lazy
-    // checkpointing is enforced by routing every lazy site through
-    // ckptLazy (which names the sole consumer). A refactor that calls
-    // ckpt(..., eager = false) directly bypasses the contract — fail it
-    // here at the source level.
-    import scala.jdk.CollectionConverters._
-    val offenders = Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      .iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        !p.toString.endsWith("Checkpoints.scala"))
-      .filter(p => Files.readString(p).matches(
-        "(?s).*ckpt\\([^)]*eager\\s*=\\s*false.*"))
-      .toList
-    assert(offenders.isEmpty,
-      s"raw lazy ckpt call sites outside Checkpoints.ckptLazy: $offenders")
+    // the single-dependency-branch contract of lazy checkpointing is
+    // enforced by the compiler: ckptLazy (which names the sole
+    // consumer) is the only way to reach the lazy mode
+    assertTypeError("Checkpoints.ckpt(df, eager = false)")
+    assertTypeError("Checkpoints.truncate(df, eager = false)")
   }
 
   test("redirect resolution works under reliable checkpointing") {

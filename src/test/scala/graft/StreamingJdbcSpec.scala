@@ -136,6 +136,18 @@ class StreamingJdbcSpec extends SparkTestBase {
     assert(read(ledger).count() == 2L)
   }
 
+  test("a many-partition batch stages without an identity-generator lock timeout") {
+    // eight concurrent writers into a fresh Derby IDENTITY table failed
+    // about one batch in twenty-five with "A lock could not be obtained"
+    resetAll()
+    MySqlSink.bootstrap(url, "app", "app", sinkDdl)
+    for (b <- 0 until 50) {
+      val ids = (b * 8L until b * 8L + 8L)
+      assert(commit(frame(ids).repartition(8), b.toLong) == 8L)
+    }
+    assert(sinkIds() == (0L until 400L))
+  }
+
   test("reference-shaped pipeline: wiki dump dir streams into bodies " +
     "exactly once, redirects held back") {
     val url2 = "jdbc:derby:memory:graft_stream_wiki;create=true"

@@ -379,17 +379,26 @@ class TextExprsSpec extends SparkTestBase {
     import spark.implicits._
     // adversarial: out-of-order keys, duplicate keys (tie broken by the
     // string in unsigned byte order), empty strings, non-ASCII, one
-    // group with a single element, one empty-string-only group
-    val rows = Seq(
+    // group with a single element, one empty-string-only group, NULL
+    // values (skipped) and NULL keys (sorted first)
+    val rows = Seq[(Long, java.lang.Long, String)](
       (1L, 5L, "e"), (1L, 1L, "a"), (1L, 3L, "c"), (1L, 3L, "b"),
       (1L, 2L, ""), (1L, 4L, "déjà"),
       (2L, 10L, "solo"),
-      (3L, 1L, ""), (3L, 2L, ""))
+      (3L, 1L, ""), (3L, 2L, ""),
+      (4L, 2L, "x"), (4L, 1L, null), (4L, 3L, "y"),
+      (5L, null, "n"), (5L, 0L, "m"), (5L, -1L, null))
     val df = rows.toDF("g", "k", "v").repartition(2).groupBy("g")
       .agg(expr("graft_sort_join(collect_list(struct(k, v)))").as("fast"),
         expr("array_join(transform(array_sort(collect_list(struct(k, v)))," +
           " x -> x.v), ' ')").as("ref"))
     df.collect().foreach(r => assert(r.getString(1) === r.getString(2), r.getLong(0)))
+    // a NULL array element
+    val arr = "array(named_struct('k', 2L, 'v', 'b'), NULL, named_struct('k', 1L, 'v', 'a'))"
+    val one = spark.sql(s"SELECT graft_sort_join($arr), " +
+      s"array_join(transform(array_sort($arr), x -> x.v), ' ')").head()
+    assert(one.getString(0) === "a b")
+    assert(one.getString(0) === one.getString(1))
     // and on the real corpus through the exact q_substring_strip shape
     val toks = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),

@@ -3,6 +3,8 @@
 #   1. full scalatest suite
 #   2. tri-scale graft.Verify dump (sf0.001 / sf0.01 / sf0.1)
 #   3. DuckDB differential oracle over each dump (tools/check_oracle.py)
+#   4. EtlBench throughput gate
+#   5. repo benchmark, one run per workload (perfbench/run.py)
 # Exit nonzero on the first red step. Artifacts land under
 # /tmp/graft-closing-<ts>/ and a one-line PASS/FAIL summary per step is
 # printed at the end for the round status block.
@@ -55,6 +57,25 @@ sys.exit(1 if bad else 0)
 PY
 }
 step "etl-throughput" etl_check
+
+# Repo benchmark (BENCHMARK.json), one run per workload. perfbench
+# compiles src/main/scala with its own scalac, so this also catches a
+# source change sbt accepts but that build rejects. run.py exits 0 even
+# when its output checks fail: the last line must say correct and
+# report no failed operation.
+perfbench_check() { # workload
+  python3 perfbench/run.py --workload "$1" --seed 1 --seconds 10 \
+    > "$OUT/perfbench-$1.out" || return 1
+  tail -n 1 "$OUT/perfbench-$1.out"
+  python3 - "$OUT/perfbench-$1.out" <<'PY'
+import json, sys
+r = json.loads(open(sys.argv[1]).read().strip().splitlines()[-1])
+sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)
+PY
+}
+for w in etl_redirects query_mix; do
+  step "perfbench-$w" perfbench_check "$w"
+done
 
 echo
 echo "=== closing summary ($OUT) ==="
