@@ -36,7 +36,7 @@ object Checkpoints {
     * full corpus write+re-read). Correct ONLY where the first consuming
     * job reads the frame through a SINGLE dependency branch (a loop hop
     * whose convergence action follows immediately, e.g. hashMinLabels'
-    * lblSum, the BPE round's top-pair collect, Redirects' frontier
+    * lblSum, the BPE round's top-pair collect, Redirects' open-row
     * count): with several concurrent consumer stages in one job —
     * q_triangles' 3-way self-join, hashMinLabels' membership read by
     * both sides of the hop — the racing map stages each recompute the

@@ -7,80 +7,101 @@ import org.apache.spark.sql.functions._
 /** Transitive redirect resolution — the Spark-native form of the
   * reference's `resolve()` chain walk (`/root/reference/dbfy.py:108-121`,
   * driven at `dbfy.py:155-176`). The reference walks driver-memory dicts
-  * recursively; here the whole graph lives in DataFrames and each hop is
-  * one distributed self-join, so the redirect graph is no longer bounded
-  * by driver RAM (SURVEY.md §1.1).
+  * recursively; here the whole graph lives in DataFrames and the walks
+  * advance by distributed self-joins, so the redirect graph is no longer
+  * bounded by driver RAM (SURVEY.md §1.1).
   *
-  * Semantics preserved exactly:
-  *   - follow the chain until a title hits the content set → its body id
+  * Semantics (RedirectsProps pins them against a driver-side port of
+  * the walk):
+  *   - the walk resolves through one entry per title, as the reference's
+  *     dicts do (`dbfy.py:183-185`): a content title maps to `min(bid)`
+  *     and wins over any outgoing edge; any other title forwards to
+  *     `min(dst)` of its non-self edges
+  *   - every start row `(src, dst)` walks from its own `dst` and resolves
+  *     iff the walk reaches content in ≤ `maxIters` hops, counting the
+  *     row's own edge; duplicate and self-loop start rows each give one
+  *     output row or none
   *   - cycles never reach content → dropped (reference: RecursionError
   *     caught → None, `dbfy.py:118-121`)
   *   - dead-ends (target neither content nor redirect) → dropped
   *     (`dbfy.py:161-166`)
   *   - hop budget `maxIters` plays the role of Python's recursion limit,
   *     and the DuckDB oracle's WITH RECURSIVE uses the same bound so both
-  *     engines drop identical rows (SURVEY.md §7.3).
+  *     engines drop identical rows (SURVEY.md §7.3)
+  *   - null titles never match; a content title whose bids are all null
+  *     is not content
   */
 object Redirects {
 
-  /** @param redirects (src, dst) — one outgoing edge per redirect title
-    * @param content   (title, bid) — resolved body id per content title
-    * @return (src, bid) for every redirect whose chain reaches content
+  /** @param redirects (src, dst) — the redirect edges, one start row each
+    * @param content   (title, bid) — body id per content title
+    * @return (src, bid) for every start row whose walk reaches content
     *
-    * Scale: the frontier shrinks every hop (real redirect chains are a
-    * few hops) and is checkpointed (Checkpoints.ckpt) each iteration — lineage stays
-    * O(1) per hop instead of compounding joins across iterations, and
-    * the eager checkpoint doubles as the materialization for the
-    * early-exit count. Joins against `content` shuffle on the title key;
-    * AQE picks broadcast automatically once the frontier shrinks below
-    * the threshold.
+    * Pointer jumping (Wyllie's list ranking). The state is one row per
+    * title, `(n, p, b, d)`: a terminal has body id `b` at `d` hops; an
+    * open row points at the title `p`, `d` hops down its walk. A round
+    * joins the state with itself on `p = n`: an open row takes its
+    * target's pointer, or its body id if the target is terminal, and
+    * adds the target's `d`; an open row whose target is gone drops. So
+    * an open row's `d` doubles every round (1, 2, 4, …). A row with
+    * `d > maxIters − 1` can serve no walk within the budget (`d` only
+    * grows) and is pruned, which is also what drains cycles. Hence at
+    * most ⌈log₂ maxIters⌉ rounds (one when maxIters ≤ 2) and a final
+    * join of the start rows against the terminals: ⌈log₂ maxIters⌉ + 1
+    * joins, whatever the chain lengths.
+    *
+    * Scale: the state holds every title of the redirect graph in every
+    * round, terminals included. Each round is checkpointed
+    * (Checkpoints.ckptLazy), so lineage stays O(1) per round, and the
+    * open-row count that tests convergence is what materializes it. A
+    * superseded round's blocks are freed as soon as the next one is
+    * materialized; the last round's stay persisted under the returned
+    * frame, for the caller to release (WikiEtl.run's cleanup).
     */
   def resolveTransitive(
       redirects: DataFrame,
       content: DataFrame,
       maxIters: Int = 20): DataFrame = {
-    // Self-loop edges can never resolve (the reference's recursion just
-    // blows up and drops them, dbfy.py:118-121); removing them up front
-    // turns those walks into dead-ends — same result, and the frontier
-    // drains in O(longest chain) iterations instead of burning the full
-    // budget keeping cyclic rows alive.
-    // The reference resolves through DICTS (redirects / ttl2bid,
-    // dbfy.py:183-185) — one entry per title by construction. Mirror
-    // that: unique keys on both join sides, deterministically (min), so
-    // a dirty dump with duplicate titles can't fan a frontier row into
-    // duplicate hits through the left joins below.
-    val edges = redirects.filter(col("src") =!= col("dst"))
-      .groupBy(col("src").as("e_src")).agg(min(col("dst")).as("e_dst"))
-    val tgt = content.groupBy(col("title").as("c_title"))
-      .agg(min(col("bid")).as("c_bid"))
-
-    // One expensive materialization per hop: a single left-join pass
-    // tags hits (c_bid non-null) and the next frontier (has an outgoing
-    // edge) in the SAME checkpoint, so hits are never recomputed
-    // when the final union materializes, the per-hop count is a cheap
-    // scan of cached blocks, and lineage resets every hop. Hits are
-    // buffered and unioned ONCE at the end (r1 unioned inside the loop,
-    // compounding lineage across iterations — VERDICT r1 #4).
-    var frontier = redirects.select(col("src"), col("dst").as("cur"))
-    val hits = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var iter = 0
-    var remaining = 1L
-    while (iter < maxIters && remaining > 0) {
-      // lazy ckpt (r21): the frontier.count() below is the single next
-      // consumer and materializes the hop in its own pass
-      val step = Checkpoints.ckptLazy(frontier
-        .join(tgt, col("cur") === col("c_title"), "left")
-        .join(edges, col("cur") === col("e_src"), "left"),
-        soleConsumer = "frontier.count() — the hop's remaining-walkers probe")
-      hits += step.filter(col("c_bid").isNotNull)
-        .select(col("src"), col("c_bid").as("bid"))
-      frontier = step // non-hits with an edge walk on; dead-ends drop
-        .filter(col("c_bid").isNull && col("e_dst").isNotNull)
-        .select(col("src"), col("e_dst").as("cur"))
-      remaining = frontier.count()
-      iter += 1
+    val sc = redirects.sparkSession.sparkContext
+    def persistentIds: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    val budget = maxIters - 1 // hops left after a start row's own edge
+    // the node table, one groupBy: content is terminal (b, d = 0), any
+    // other title with a non-self edge forwards (p, d = 1); self-loops
+    // only revisit, so they are never a way on
+    val titles = content.select(col("title").as("n"), col("bid").as("b"))
+      .unionByName(redirects.filter(col("src") =!= col("dst"))
+        .select(col("src").as("n"), col("dst").as("p")), allowMissingColumns = true)
+      .groupBy(col("n")).agg(min(col("b")).as("b"), min(col("p")).as("p"))
+      .filter(col("b").isNotNull || col("p").isNotNull)
+    var state = titles.select(col("n"), when(col("b").isNull, col("p")).as("p"), col("b"),
+        when(col("b").isNull, lit(1)).otherwise(lit(0)).as("d"))
+      .filter(col("d") <= budget)
+    var stateIds = Set.empty[Int]
+    var open = 1L
+    while (open > 0) {
+      val target = state.select(col("n").as("t_n"), col("p").as("t_p"),
+        col("b").as("t_b"), col("d").as("t_d"))
+      val pre = persistentIds
+      val next = Checkpoints.ckptLazy(state
+        .join(target, col("p") === col("t_n"), "left")
+        .filter(col("p").isNull || col("t_n").isNotNull)
+        .select(col("n"), col("t_p").as("p"), coalesce(col("b"), col("t_b")).as("b"),
+          (col("d") + coalesce(col("t_d"), lit(0))).as("d"))
+        .filter(col("d") <= budget),
+        soleConsumer = "the open-row count — the round's convergence test")
+      val nextIds = persistentIds -- pre
+      open = next.filter(col("p").isNotNull).count()
+      // `next` is materialized and its lineage truncated: the superseded
+      // round's blocks are dead weight. Dataset.unpersist does not free
+      // checkpoint blocks, hence the RDD ids.
+      stateIds.foreach(id =>
+        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+      stateIds = nextIds
+      state = next
     }
-    if (hits.isEmpty) redirects.select(col("src"), lit(0L).as("bid")).limit(0)
-    else hits.reduce(_ union _)
+    // no open row is left: every state row is a terminal within budget
+    redirects.select(col("src"), col("dst"))
+      .join(state, col("dst") === col("n"))
+      .select(col("src"), col("b").as("bid"))
   }
 }

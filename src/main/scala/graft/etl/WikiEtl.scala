@@ -75,9 +75,15 @@ object WikiEtl {
     // title → body-id map; cycles/dead-ends drop (A7 semantics).
     val redirectPages = pages.filter(col("rdr") =!= "")
       .select(col("title").as("src"), col("rdr").as("dst"), col("aid").as("r_aid"))
-    val resolved = Redirects.resolveTransitive(
+    val sc = spark.sparkContext
+    val preResolve = sc.getPersistentRDDs.keySet.toSet
+    val resolvedRaw = Redirects.resolveTransitive(
         redirectPages.select(col("src"), col("dst")),
         contentArticles.select(col("title"), col("body_id").as("bid")))
+    // the last redirect round stays persisted under `resolvedRaw` until
+    // `articles` is materialized; cleanup releases it by RDD id
+    val redirectBlocks = sc.getPersistentRDDs.keySet.toSet -- preResolve
+    val resolved = resolvedRaw
       .join(redirectPages, "src")
       .select(col("r_aid").as("aid"), col("src").as("title"), col("bid").as("body_id"))
 
@@ -89,6 +95,8 @@ object WikiEtl {
       cleanup = () => {
         pages.unpersist(blocking = false)
         bodies.unpersist(blocking = false)
+        redirectBlocks.foreach(id =>
+          sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
       })
   }
 }

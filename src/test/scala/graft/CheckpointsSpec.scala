@@ -112,15 +112,19 @@ class CheckpointsSpec extends SparkTestBase {
 
   test("redirect resolution works under reliable checkpointing") {
     import spark.implicits._
-    val redirects = Seq(("A", "B"), ("B", "C"), ("L1", "L2"), ("L2", "L1"))
-      .toDF("src", "dst")
-    val content = Seq(("C", 7L)).toDF("title", "bid")
+    // a cycle, a dead end, and a chain P0 → … → P21 one hop past the
+    // default 20-hop budget: P0 drops, P1..P20 resolve. The chain keeps
+    // rows open through all five rounds, each a reliable checkpoint.
+    val chain = (0 until 21).map(i => (s"P$i", s"P${i + 1}"))
+    val redirects = (Seq(("A", "B"), ("B", "C"), ("L1", "L2"), ("L2", "L1"),
+      ("G", "Nowhere")) ++ chain).toDF("src", "dst")
+    val content = Seq(("C", 7L), ("P21", 8L)).toDF("title", "bid")
     val dir = Files.createTempDirectory("graft-ckpt2").toFile
     spark.conf.set(Checkpoints.ConfKey, dir.getAbsolutePath)
     try {
       val out = etl.Redirects.resolveTransitive(redirects, content)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-      assert(out == Set("A" -> 7L, "B" -> 7L))
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+      assert(out == (Seq("A" -> 7L, "B" -> 7L) ++ (1 to 20).map(i => s"P$i" -> 8L)).sorted)
     } finally {
       spark.conf.unset(Checkpoints.ConfKey)
     }

@@ -41,4 +41,16 @@ class EtlPipelineSpec extends SparkTestBase {
     assert(out.bodies.collect().head.getString(1).forall(c => c >= 0x20 && c <= 0x7e))
   }
 
+  test("cleanup releases every block the run persisted, redirect rounds included") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val out = WikiEtl.run(spark, xml)
+    assert(out.bodies.count() == 1 && out.articles.count() == 3)
+    out.cleanup()
+    // a subset, not equality: the context cleaner may drop an earlier
+    // suite's garbage-collected blocks while this test runs
+    val leaked = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.isEmpty, s"still persisted after cleanup: ${leaked.map(sc.getPersistentRDDs)}")
+  }
+
 }

@@ -4,7 +4,8 @@
 #   2. tri-scale graft.Verify dump (sf0.001 / sf0.01 / sf0.1)
 #   3. DuckDB differential oracle over each dump (tools/check_oracle.py)
 #   4. EtlBench throughput gate
-#   5. repo benchmark, one run per workload (perfbench/run.py)
+#   5. repo benchmark: its own tests (perfbench/test.py), then one run
+#      per workload (perfbench/run.py)
 # Exit nonzero on the first red step. Artifacts land under
 # /tmp/graft-closing-<ts>/ and a one-line PASS/FAIL summary per step is
 # printed at the end for the round status block.
@@ -73,6 +74,10 @@ r = json.loads(open(sys.argv[1]).read().strip().splitlines()[-1])
 sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)
 PY
 }
+# The benchmark's own tests, before its runs. Among them: the generator's
+# expected counts equal WikiEtl.run's output on a tiny dump, i.e. the
+# redirect semantics the runs' drop-per-cause checks rely on.
+step "perfbench-selftest" python3 perfbench/test.py
 for w in etl_redirects query_mix; do
   step "perfbench-$w" perfbench_check "$w"
 done
