@@ -1,12 +1,31 @@
 package graft
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage truncation for iterative operators (connected-components,
   * transitive redirect resolution, shared-scan decontamination).
   *
-  * Default is `localCheckpoint()`: eager, no HDFS round-trip — right for
-  * the single-JVM sandbox. But localCheckpoint stores blocks on executor
+  *   - [[ckpt]] truncates eagerly, [[ckptLazy]] during the first
+  *     consuming action; both return a frame whose plan is one
+  *     `LogicalRDD` over the persisted blocks.
+  *   - [[iterate]] runs a checkpointed loop: it frees each superseded
+  *     round and returns the last one, still persisted.
+  *   - [[release]] frees the checkpoint blocks a frame reads.
+  *     `Dataset.unpersist` does not: it is a cache-manager call, and a
+  *     checkpoint is not in the cache manager.
+  *
+  * Who frees what: whoever holds the last frame that reads a checkpoint
+  * releases it, once its consumers have run. [[iterate]] frees every
+  * round but the last; the caller of `iterate` (or of the operator that
+  * returns its result) frees that one, as `WikiEtl.run`'s cleanup does
+  * for `Redirects`; a function that checkpoints a frame, writes it and
+  * returns `Unit` releases it after the write.
+  *
+  * Default is `localCheckpoint()`: no HDFS round-trip — right for the
+  * single-JVM sandbox. But localCheckpoint stores blocks on executor
   * local store; on a real cluster one lost executor kills the job
   * NON-recoverably because lineage was truncated. At 100 TB, set
   * `spark.graft.checkpointDir` to a reliable (HDFS/S3) path and every
@@ -32,27 +51,70 @@ object Checkpoints {
     * §1.2/§2.4): the blocks are persisted DURING the first consuming
     * action instead of by a dedicated materialization job, saving one
     * full pass over the frame per checkpoint (measured 0.26 s per call
-    * on the BPE fixpoint corpus at sf0.1; at 100 TB the saved pass is a
-    * full corpus write+re-read). Correct ONLY where the first consuming
-    * job reads the frame through a SINGLE dependency branch (a loop hop
-    * whose convergence action follows immediately, e.g. hashMinLabels'
-    * lblSum, the BPE round's top-pair collect, Redirects' open-row
-    * count): with several concurrent consumer stages in one job —
-    * q_triangles' 3-way self-join, hashMinLabels' membership read by
-    * both sides of the hop — the racing map stages each recompute the
-    * un-materialized upstream (measured: q_dedup_cluster 2.1 s → 3.2 s
-    * when its membership checkpoint went lazy), so multi-consumer sites
-    * use [[ckpt]]. This helper is the ONLY way to reach the lazy mode,
-    * and `soleConsumer` names the single consuming action, so a
-    * refactor that adds a second concurrent consumer has to touch this
-    * call and its named contract. Semantics are unchanged either way:
-    * persist() registers the RDD at call time (getPersistentRDDs
-    * bookkeeping still sees it) and LocalRDDCheckpointData fills any
-    * partitions a partial first action skipped before truncating
-    * lineage. */
+    * on the BPE fixpoint corpus at sf0.1). Correct only under the
+    * sole-consumer contract stated on [[iterate]], which is how loop
+    * rounds reach this mode; the direct callers are the seeds and rounds
+    * that loop machinery outside `iterate` owns (hashMinLabels' seed and
+    * its lblSum, the BPE round's top-pair collect). `soleConsumer` names
+    * the single consuming action, so a refactor that adds a second
+    * concurrent consumer has to touch this call and its named contract.
+    * Semantics are unchanged either way: persist() registers the RDD at
+    * call time and LocalRDDCheckpointData fills any partitions a
+    * partial first action skipped before truncating lineage. */
   def ckptLazy(df: DataFrame, soleConsumer: String): DataFrame = {
     require(soleConsumer.nonEmpty, "ckptLazy requires the sole consumer's name")
     truncate(df, eager = false)
+  }
+
+  /** Frees the blocks of every checkpoint `df`'s plan reads: it
+    * unpersists the RDD of each `LogicalRDD` leaf (for a frame built
+    * from an RDD that was never persisted, a no-op). Call it once every
+    * consumer of those blocks has run; a later action on a frame that
+    * reads them fails (local checkpoint) or re-reads the files
+    * (reliable checkpoint). */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.logical.collectLeaves()
+      .collect { case r: LogicalRDD => r.rdd }.foreach(_.unpersist(blocking = false))
+
+  /** A checkpointed loop: round k is `ckptLazy(step(round k−1))`, round
+    * 0 being `seed`, and it stops at the first round for which
+    * `settled` holds. Returns that round, still persisted: the caller
+    * [[release]]s it once its consumers have run.
+    *
+    * Sole-consumer contract: `settled(next)` is the only consumer of a
+    * round before the next `step`, and must read it through a SINGLE
+    * dependency branch (a count, a sum, a collect). With several
+    * concurrent consumer stages in one job — a self-join of the round,
+    * say — the racing map stages each recompute the un-materialized
+    * upstream (measured: q_dedup_cluster 2.1 s → 3.2 s when its
+    * membership checkpoint went lazy); such a frame needs [[ckpt]]
+    * before the loop. `step` may join the previous round with itself:
+    * that round is materialized by then.
+    *
+    * Once a round is materialized (by `settled`), the round it
+    * supersedes is released. The seed is released too, but only when
+    * it is itself a checkpoint (its plan is one `LogicalRDD`); a seed
+    * that merely reads checkpoints leaves them to the caller.
+    *
+    * @param maxRounds the most rounds the loop may take; if round
+    *   `maxRounds` is not settled, its blocks are released and an
+    *   IllegalStateException naming `name` is thrown
+    */
+  def iterate(seed: DataFrame, maxRounds: Int, name: String)(
+      step: DataFrame => DataFrame)(settled: DataFrame => Boolean): DataFrame = {
+    require(maxRounds >= 1, s"$name: maxRounds must be at least 1, got $maxRounds")
+    val seedIsCheckpoint = seed.queryExecution.logical.isInstanceOf[LogicalRDD]
+    @tailrec def loop(prev: DataFrame, round: Int): DataFrame = {
+      val next = ckptLazy(step(prev), soleConsumer = s"$name's settled test")
+      val done = settled(next)
+      if (round > 1 || seedIsCheckpoint) release(prev)
+      if (done) next
+      else if (round == maxRounds) {
+        release(next)
+        throw new IllegalStateException(s"$name: not converged after $maxRounds hops")
+      } else loop(next, round + 1)
+    }
+    loop(seed, 1)
   }
 
   private def truncate(df: DataFrame, eager: Boolean): DataFrame = {

@@ -48,22 +48,22 @@ object Redirects {
     * grows) and is pruned, which is also what drains cycles. Hence at
     * most ⌈log₂ maxIters⌉ rounds (one when maxIters ≤ 2) and a final
     * join of the start rows against the terminals: ⌈log₂ maxIters⌉ + 1
-    * joins, whatever the chain lengths.
+    * joins, whatever the chain lengths. That round count is the cap
+    * given to Checkpoints.iterate, so the cap cannot trip.
     *
     * Scale: the state holds every title of the redirect graph in every
-    * round, terminals included. Each round is checkpointed
-    * (Checkpoints.ckptLazy), so lineage stays O(1) per round, and the
-    * open-row count that tests convergence is what materializes it. A
+    * round, terminals included. The rounds run under
+    * Checkpoints.iterate, so lineage stays O(1) per round, the open-row
+    * count that tests convergence is what materializes a round, and a
     * superseded round's blocks are freed as soon as the next one is
-    * materialized; the last round's stay persisted under the returned
-    * frame, for the caller to release (WikiEtl.run's cleanup).
+    * materialized. The last round's stay persisted under the returned
+    * frame: the caller frees them with `Checkpoints.release` once the
+    * result is consumed (WikiEtl.run's cleanup).
     */
   def resolveTransitive(
       redirects: DataFrame,
       content: DataFrame,
       maxIters: Int = 20): DataFrame = {
-    val sc = redirects.sparkSession.sparkContext
-    def persistentIds: Set[Int] = sc.getPersistentRDDs.keySet.toSet
     val budget = maxIters - 1 // hops left after a start row's own edge
     // the node table, one groupBy: content is terminal (b, d = 0), any
     // other title with a non-self edge forwards (p, d = 1); self-loops
@@ -73,35 +73,23 @@ object Redirects {
         .select(col("src").as("n"), col("dst").as("p")), allowMissingColumns = true)
       .groupBy(col("n")).agg(min(col("b")).as("b"), min(col("p")).as("p"))
       .filter(col("b").isNotNull || col("p").isNotNull)
-    var state = titles.select(col("n"), when(col("b").isNull, col("p")).as("p"), col("b"),
+    val seed = titles.select(col("n"), when(col("b").isNull, col("p")).as("p"), col("b"),
         when(col("b").isNull, lit(1)).otherwise(lit(0)).as("d"))
       .filter(col("d") <= budget)
-    var stateIds = Set.empty[Int]
-    var open = 1L
-    while (open > 0) {
+    // ⌈log₂ maxIters⌉, at least 1
+    val rounds = math.max(1, 32 - Integer.numberOfLeadingZeros(maxIters - 1))
+    val terminals = Checkpoints.iterate(seed, rounds, "Redirects.resolveTransitive") { state =>
       val target = state.select(col("n").as("t_n"), col("p").as("t_p"),
         col("b").as("t_b"), col("d").as("t_d"))
-      val pre = persistentIds
-      val next = Checkpoints.ckptLazy(state
-        .join(target, col("p") === col("t_n"), "left")
+      state.join(target, col("p") === col("t_n"), "left")
         .filter(col("p").isNull || col("t_n").isNotNull)
         .select(col("n"), col("t_p").as("p"), coalesce(col("b"), col("t_b")).as("b"),
           (col("d") + coalesce(col("t_d"), lit(0))).as("d"))
-        .filter(col("d") <= budget),
-        soleConsumer = "the open-row count — the round's convergence test")
-      val nextIds = persistentIds -- pre
-      open = next.filter(col("p").isNotNull).count()
-      // `next` is materialized and its lineage truncated: the superseded
-      // round's blocks are dead weight. Dataset.unpersist does not free
-      // checkpoint blocks, hence the RDD ids.
-      stateIds.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      stateIds = nextIds
-      state = next
-    }
+        .filter(col("d") <= budget)
+    }(_.filter(col("p").isNotNull).count() == 0)
     // no open row is left: every state row is a terminal within budget
     redirects.select(col("src"), col("dst"))
-      .join(state, col("dst") === col("n"))
+      .join(terminals, col("dst") === col("n"))
       .select(col("src"), col("b").as("bid"))
   }
 }

@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.Checkpoints
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -75,14 +76,11 @@ object WikiEtl {
     // title → body-id map; cycles/dead-ends drop (A7 semantics).
     val redirectPages = pages.filter(col("rdr") =!= "")
       .select(col("title").as("src"), col("rdr").as("dst"), col("aid").as("r_aid"))
-    val sc = spark.sparkContext
-    val preResolve = sc.getPersistentRDDs.keySet.toSet
     val resolvedRaw = Redirects.resolveTransitive(
         redirectPages.select(col("src"), col("dst")),
         contentArticles.select(col("title"), col("body_id").as("bid")))
     // the last redirect round stays persisted under `resolvedRaw` until
-    // `articles` is materialized; cleanup releases it by RDD id
-    val redirectBlocks = sc.getPersistentRDDs.keySet.toSet -- preResolve
+    // `articles` is materialized; cleanup releases it
     val resolved = resolvedRaw
       .join(redirectPages, "src")
       .select(col("r_aid").as("aid"), col("src").as("title"), col("bid").as("body_id"))
@@ -95,8 +93,7 @@ object WikiEtl {
       cleanup = () => {
         pages.unpersist(blocking = false)
         bodies.unpersist(blocking = false)
-        redirectBlocks.foreach(id =>
-          sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+        Checkpoints.release(resolvedRaw)
       })
   }
 }

@@ -148,6 +148,7 @@ object AnnIndexStore {
         appendAtomic(spark, Seq(actual).toDF("cells"), storePath, "meta")
       }
       appendAtomic(spark, cents, storePath, "codebook")
+      graft.Checkpoints.release(cents)
     }
 
   def readCodebook(spark: SparkSession, storePath: String): DataFrame =
@@ -447,9 +448,13 @@ object AnnIndexStore {
         .groupBy(col("sub"), col("code"))
         .agg(expr("transform(array_sort(collect_list(struct(pos, c)))," +
           " x -> x.c)").as("cw"))
-      cw = Checkpoints.ckpt(next)
+      val nextCw = Checkpoints.ckpt(next)
+      Checkpoints.release(cw)
+      cw = nextCw
     }
     appendAtomic(spark, cw, storePath, "pq_codebook")
+    Checkpoints.release(cw)
+    Checkpoints.release(rs)
   }
 
   def readPqCodebook(spark: SparkSession, storePath: String): DataFrame =

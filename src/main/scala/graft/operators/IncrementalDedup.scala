@@ -173,6 +173,7 @@ object IncrementalDedup {
     if (oldBatches.length <= 1) return
     val snap = Checkpoints.ckpt(readStore(spark, storePath))
     appendAtomic(spark, snap, storePath, freshBatchName(None))
+    Checkpoints.release(snap)
     oldBatches.foreach(st => fs.delete(st.getPath, true))
   }
 

@@ -240,6 +240,7 @@ private[graft] object ManifestStore {
       val k = kindByName(kn)
       val snap = Checkpoints.ckpt(k.layout(spark.read.parquet(dirs: _*)))
       appendAtomic(spark, snap, k.path, snapName)
+      Checkpoints.release(snap)
     }
     val prev = latestManifest(spark, storePath)
     val prevRows = prev.map(_._2).getOrElse(Map.empty)

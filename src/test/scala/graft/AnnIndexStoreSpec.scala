@@ -34,6 +34,31 @@ class AnnIndexStoreSpec extends SparkTestBase {
       store)
       .orderBy("a_id", "rn").collect().toSeq
 
+  test("ensureCodebook frees its centroid checkpoint once the codebook is written") {
+    val store = freshStore()
+    val q = quantizedVectors().select(col("vec_id"), col("qv"), col("nq"))
+    val leaked = persistedBy(AnnIndexStore.ensureCodebook(spark, q, store))
+    assert(AnnIndexStore.readCodebook(spark, store).count() > 0)
+    assert(leaked.isEmpty, s"still persisted: $leaked")
+  }
+
+  test("ensurePqCodebook frees its residual and every k-means round checkpoint") {
+    val store = freshStore()
+    val q = quantizedVectors().select(col("vec_id"), col("qv"), col("nq"))
+    AnnIndexStore.ensureCodebook(spark, q, store)
+    val leaked = persistedBy(AnnIndexStore.ensurePqCodebook(spark, q, store))
+    assert(AnnIndexStore.readPqCodebook(spark, store).count() > 0)
+    assert(leaked.isEmpty, s"still persisted: $leaked")
+  }
+
+  test("ManifestStore.compact frees each kind's snapshot once it is written") {
+    val store = freshStore()
+    buildTwoBatches(store)
+    val leaked = persistedBy(AnnIndexStore.compact(spark, store))
+    assert(topDirs(store, "assign").count(_.startsWith("compact-")) == 1)
+    assert(leaked.isEmpty, s"still persisted: $leaked")
+  }
+
   test("probe over a two-batch store equals recompute-from-scratch IVF") {
     val store = freshStore()
     buildTwoBatches(store)

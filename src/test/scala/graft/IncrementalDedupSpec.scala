@@ -143,6 +143,17 @@ class IncrementalDedupSpec extends SparkTestBase {
     assert(IncrementalDedup.dedupDelta(spark, docs, store, BatchId("c6")).count() === 0)
   }
 
+  test("compactStore frees its snapshot checkpoint once the compacted batch lands") {
+    val store = Files.createTempDirectory("graft-compact-release")
+      .resolve("store").toString
+    IncrementalDedup.dedupDelta(spark, docs.filter(col("doc_id") < 200), store, BatchId("r1"))
+    IncrementalDedup.dedupDelta(spark, docs.filter(col("doc_id") >= 200), store, BatchId("r2"))
+    val leaked = persistedBy(IncrementalDedup.compactStore(spark, store))
+    assert(new java.io.File(store).listFiles()
+      .count(f => f.isDirectory && f.getName.startsWith("batch-")) == 1)
+    assert(leaked.isEmpty, s"still persisted: $leaked")
+  }
+
   test("survivors stay valid after the store files are deleted (checkpointed)") {
     val tmp = Files.createTempDirectory("graft-dedup-store3")
     val store = tmp.resolve("store").toString

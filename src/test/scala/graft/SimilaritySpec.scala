@@ -204,6 +204,27 @@ class SimilaritySpec extends SparkTestBase {
     assert(Similarity.hashMinLabels(emptyMemb, emptyDocs).count() == 0)
   }
 
+  test("label propagation settles a 64-doc path in 64 hops and fails loudly on 65") {
+    // bucket i holds docs i and i+1: the path minimum moves one doc per
+    // hop, so n docs take n − 1 changing hops plus the one that settles
+    import spark.implicits._
+    def path(n: Int) = {
+      val docs = (100L until 100L + n).toDF("doc_id")
+      (docs, docs.select(col("doc_id"), (col("doc_id") - 100).as("bucket"))
+        .union(docs.filter(col("doc_id") > 100)
+          .select(col("doc_id"), (col("doc_id") - 101).as("bucket"))))
+    }
+    val (docs64, memb64) = path(64)
+    val labels = Similarity.hashMinLabels(memb64, docs64)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels == (100L until 164L).map(_ -> 100L).toMap)
+
+    val (docs65, memb65) = path(65)
+    val e = intercept[IllegalStateException](Similarity.hashMinLabels(memb65, docs65))
+    assert(e.getMessage.startsWith("hashMinLabels") &&
+      e.getMessage.endsWith("not converged after 64 hops"), e.getMessage)
+  }
+
   test("exact-Jaccard verify: hash-segment decomposition invariant in the segment count") {
     // seg = pmod(xxhash64(word), S) partitions each doc's token set, so
     // summing per-segment intersect sizes must equal the whole-set

@@ -5,7 +5,8 @@
 #   3. DuckDB differential oracle over each dump (tools/check_oracle.py)
 #   4. EtlBench throughput gate
 #   5. repo benchmark: its own tests (perfbench/test.py), then one run
-#      per workload (perfbench/run.py)
+#      per workload (perfbench/run.py), then one traced etl_redirects run
+#      whose per-layer job counts must all be non-zero
 # Exit nonzero on the first red step. Artifacts land under
 # /tmp/graft-closing-<ts>/ and a one-line PASS/FAIL summary per step is
 # printed at the end for the round status block.
@@ -81,6 +82,27 @@ step "perfbench-selftest" python3 perfbench/test.py
 for w in etl_redirects query_mix; do
   step "perfbench-$w" perfbench_check "$w"
 done
+
+# One traced run: the per-layer metrics attribute Spark jobs to the
+# layers by the program's call stack, and read a layer they cannot find
+# as 0. A refactor that moves a layer's jobs out of its frame would zero
+# that layer's numbers without failing anything else.
+etl_layers_check() {
+  python3 perfbench/run.py --workload etl_redirects --seed 1 --seconds 10 --trace 1 \
+    > "$OUT/perfbench-etl-layers.out" || return 1
+  tail -n 1 "$OUT/perfbench-etl-layers.out"
+  python3 - "$OUT/perfbench-etl-layers.out" <<'PY'
+import json, sys
+r = json.loads(open(sys.argv[1]).read().strip().splitlines()[-1])
+m = r.get("metrics", {})
+layers = ["Redirects.jobs", "WikiEtl.withDenseId.bodies.jobs",
+          "WikiEtl.withDenseId.articles.jobs"]
+zero = [k for k in layers if not m.get(k, {}).get("value", 0) > 0]
+print(json.dumps({k: m.get(k, {}).get("value") for k in layers}))
+sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 and not zero else 1)
+PY
+}
+step "perfbench-etl-layers" etl_layers_check
 
 echo
 echo "=== closing summary ($OUT) ==="
