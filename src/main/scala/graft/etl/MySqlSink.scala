@@ -234,7 +234,7 @@ object MySqlSink {
     * a staging table where retry duplicates are HARMLESS, then promotes
     * with [[promoteStage]]'s dedup + idempotence guard — the same
     * materialize-then-swap ordering discipline as
-    * `IncrementalDedup.appendAtomic`, expressed transactionally:
+    * `ManifestStore.appendAtomic`, expressed transactionally:
     *   1. drop any leftover staging table (a crashed prior writer's),
     *   2. create staging = target columns + identity `graft_seq`,
     *   3. Spark-append the frame into staging (retries may duplicate),

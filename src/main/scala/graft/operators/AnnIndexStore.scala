@@ -18,17 +18,18 @@ import org.apache.spark.sql.functions._
   * Store layout under `storePath`:
   *  - `codebook/`  — (c_id, qc, nc), written once, atomic rename
   *  - `assign/batch-<id>/` — (vec_id, cell, qv, nq) per ingest batch,
-  *    atomic rename per batch, replay-idempotent via `batchId`
-  *    (a replayed committed batch returns its recorded assignments
-  *    instead of double-appending — same discipline as
-  *    [[IncrementalDedup.dedupDelta]]).
+  *    landed by [[ManifestStore.appendAtomic]], replay-idempotent via
+  *    `batchId` (a replayed committed batch returns its recorded
+  *    assignments instead of double-appending —
+  *    [[ManifestStore.committedBatch]]).
   *  - `manifest/gen-<seq>-<uuid>/` — generations written by [[compact]]
   *    (r20, VERDICT r19 #1: without compaction the store accumulated
   *    one batch dir per ingest FOREVER and probes paid
   *    linearly-growing listing + row-group overhead). The machinery —
   *    atomic manifest swap, crash-anywhere analysis, absorbed-id
-  *    replay retention, `moveGraceMs` — is [[ManifestStore]], shared
-  *    verbatim with the inverted index. Assignments are keyed FACTS
+  *    replay retention, `moveGraceMs`, the stale-staging sweep — is
+  *    [[ManifestStore]], shared with the inverted index and the dedup
+  *    store. Assignments are keyed FACTS
   *    (identical duplicates collapse at probe time), but the manifest
   *    shape is used anyway so replay records stay authoritative and
   *    the proofs carry over.
@@ -59,7 +60,7 @@ import org.apache.spark.sql.functions._
   * and hash-oracled end-to-end via `q_ann_index_probe`.
   */
 object AnnIndexStore {
-  import IncrementalDedup.{appendAtomic, freshBatchName, storeExists}
+  import ManifestStore.{appendAtomic, batchName, storeExists}
 
   /** Default coarse cell count. A 100 TB corpus needs √n-ish cells, so
     * the count is conf-scalable via `spark.graft.ann.cells` AT STORE
@@ -181,10 +182,6 @@ object AnnIndexStore {
     * the store it was computed against). */
   def appendBatch(spark: SparkSession, vectors: DataFrame, storePath: String,
                   batchId: String): DataFrame = {
-    require(batchId.nonEmpty, "appendBatch needs a stable batch id")
-    require(!batchId.contains('@'),
-      "batch ids may not contain '@' — it delimits the manifest's " +
-      "replay-retention stamp (batch-<id>@<seq>)")
     ManifestStore.committedBatch(spark, storePath,
         assignKind(storePath), batchId) match {
       case Some(ManifestStore.Stored(p)) => return spark.read.parquet(p)
@@ -201,11 +198,11 @@ object AnnIndexStore {
     requireNoConflicts(spark, storePath,
       assigned.select(col("vec_id"),
         struct(col("cell"), col("nq"), col("qv")).as("fact")),
-      readAssignmentsOpt(spark, storePath).map(_.select(col("vec_id"),
-        struct(col("cell"), col("nq"), col("qv")).as("fact"))),
+      ManifestStore.readLive(spark, storePath, assignKind(storePath))
+        .map(_.select(col("vec_id"),
+          struct(col("cell"), col("nq"), col("qv")).as("fact"))),
       "assignments")
-    appendAtomic(spark, assigned, assignPath(storePath),
-      freshBatchName(Some(batchId)))
+    appendAtomic(spark, assigned, assignPath(storePath), batchName(batchId))
     assigned
   }
 
@@ -282,12 +279,6 @@ object AnnIndexStore {
         "CHANGED vector (legacy pre-gate or gate-off ingest); rebuild " +
         "the index")
     validatedStores.add(key): Unit
-  }
-
-  private def readAssignmentsOpt(spark: SparkSession,
-                                 storePath: String): Option[DataFrame] = {
-    val dirs = ManifestStore.liveDirs(spark, storePath, assignKind(storePath))
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
   }
 
   def readAssignments(spark: SparkSession, storePath: String): DataFrame =
@@ -465,10 +456,6 @@ object AnnIndexStore {
     * discipline as [[appendBatch]]. The raw vectors are NOT stored. */
   def appendBatchPq(spark: SparkSession, vectors: DataFrame, storePath: String,
                     batchId: String): DataFrame = {
-    require(batchId.nonEmpty, "appendBatchPq needs a stable batch id")
-    require(!batchId.contains('@'),
-      "batch ids may not contain '@' — it delimits the manifest's " +
-      "replay-retention stamp (batch-<id>@<seq>)")
     graft.functions.VectorExprs.register(spark)
     val (m, _) = pqParams(spark, storePath)
     def encodePlan(): DataFrame = {
@@ -490,18 +477,12 @@ object AnnIndexStore {
     requireNoConflicts(spark, storePath,
       encoded.select(col("vec_id"),
         struct(col("cell"), col("nq"), col("codes")).as("fact")),
-      readPqAssignmentsOpt(spark, storePath).map(_.select(col("vec_id"),
-        struct(col("cell"), col("nq"), col("codes")).as("fact"))),
+      ManifestStore.readLive(spark, storePath, pqAssignKind(storePath))
+        .map(_.select(col("vec_id"),
+          struct(col("cell"), col("nq"), col("codes")).as("fact"))),
       "PQ assignments")
-    appendAtomic(spark, encoded, pqAssignPath(storePath),
-      freshBatchName(Some(batchId)))
+    appendAtomic(spark, encoded, pqAssignPath(storePath), batchName(batchId))
     encoded
-  }
-
-  private def readPqAssignmentsOpt(spark: SparkSession,
-                                   storePath: String): Option[DataFrame] = {
-    val dirs = ManifestStore.liveDirs(spark, storePath, pqAssignKind(storePath))
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
   }
 
   def readPqAssignments(spark: SparkSession, storePath: String): DataFrame =

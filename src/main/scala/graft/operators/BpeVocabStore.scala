@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
   * `q_bpe_apply_probe` shares `q_bpe_apply`'s oracle).
   */
 object BpeVocabStore {
-  import IncrementalDedup.{appendAtomic, storeExists}
+  import ManifestStore.{appendAtomic, storeExists}
 
   private def vocabPath(p: String) = p + "/vocab"
 

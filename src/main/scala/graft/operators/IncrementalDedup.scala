@@ -25,13 +25,18 @@ import org.apache.spark.sql.functions._
   * itself is never re-read — cost per batch is O(|delta| + |store|),
   * not O(|corpus|).
   *
+  * Layout and crash safety are [[ManifestStore]]'s: the store is one
+  * kind rooted at `storePath` itself, each batch lands as
+  * `batch-<id>/` by one atomic rename, readers see only the live dirs,
+  * and [[compactStore]] folds them through a manifest generation.
+  *
   * REPLAY idempotence: the REQUIRED stable `batchId` (e.g. the
-  * streaming foreachBatch id). The batch's survivors ARE its store
-  * subdirectory,
-  * so a replayed batch whose append already committed returns the
-  * recorded survivors instead of anti-joining itself to zero — without
-  * this, a crash between the store append and the caller's downstream
-  * commit would false-drop the batch forever on retry.
+  * streaming foreachBatch id) is the replay key. A replayed batch whose
+  * append already committed returns its recorded survivors, or nothing
+  * once compaction has folded its dir away, instead of anti-joining
+  * itself to zero — without this, a crash between the store append and
+  * the caller's downstream commit would false-drop the batch forever
+  * on retry.
   */
 /** Stable replay key for a dedup-store append (r20, ADVICE r19 low).
   * A distinct type, not a raw String: when r19 made the batch id a
@@ -42,9 +47,7 @@ import org.apache.spark.sql.functions._
   * call site a compile error. (The other stores' `appendBatch(...,
   * batchId)` keep plain String — no same-typed defaulted parameter
   * ever sat in that position, so the trap never existed there.) */
-final case class BatchId(value: String) extends AnyVal {
-  def nonEmpty: Boolean = value.nonEmpty
-}
+final case class BatchId(value: String) extends AnyVal
 
 object IncrementalDedup {
 
@@ -58,52 +61,9 @@ object IncrementalDedup {
       coalesce(md5(col(textCol).cast("binary")), lit("<null-body>")).as("fp"),
       col(idCol).cast("long").as("doc_id"))
 
-  private[graft] def storeExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** The store is a directory of per-batch SUBDIRECTORIES, each landed
-    * by one atomic rename. A plain `mode("append")` writes task files
-    * straight into the store, so a crash mid-append leaves a PARTIAL
-    * fingerprint set — and a partial set is not conservative here: it
-    * drops later duplicates of rows whose survivors were never
-    * committed downstream (false drops). Writing to a sibling temp dir
-    * and renaming it in means a batch's fingerprints appear either
-    * fully or not at all. */
-  private[graft] def readStore(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(path)
-
-  private[graft] def batchDir(storePath: String, name: String) =
-    new org.apache.hadoop.fs.Path(storePath, name)
-
-  private[graft] def appendAtomic(spark: SparkSession, df: DataFrame,
-                           storePath: String, dirName: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(conf)
-    fs.mkdirs(store)
-    val tmp = new org.apache.hadoop.fs.Path(
-      store.getParent, s".${store.getName}-staging-$dirName")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    if (!fs.rename(tmp, batchDir(storePath, dirName)) &&
-        !fs.exists(batchDir(storePath, dirName)))
-      throw new java.io.IOException(
-        s"atomic store append failed: could not rename $tmp into $store")
-  }
-
-  private[graft] def freshBatchName(batchId: Option[String]): String =
-    "batch-" + batchId.getOrElse(java.util.UUID.randomUUID().toString)
-
-  /** The committed batch subdir for a replayed batchId, if any. */
-  private[graft] def committed(spark: SparkSession, storePath: String,
-                        batchId: Option[String]): Option[String] =
-    batchId.map(id => s"batch-$id").filter { name =>
-      storeExists(spark, storePath) && {
-        val p = batchDir(storePath, name)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-      }
-    }
+  /** The store's one [[ManifestStore]] kind, rooted at the store path. */
+  private[graft] def storeKind(storePath: String) =
+    ManifestStore.Kind("dedup", storePath)
 
   /** Dedups `delta` against the store at `storePath` (created on first
     * use), appends the survivors' fingerprints, and returns the
@@ -114,68 +74,39 @@ object IncrementalDedup {
     * generated id makes a crash between the store append and the
     * caller's downstream commit FALSE-DROP the whole batch forever on
     * retry (it anti-joins against its own fingerprints); with a
-    * stable id the replay returns the recorded survivors. */
+    * stable id the replay returns the recorded survivors, or nothing
+    * once compaction has folded them away. */
   def dedupDelta(spark: SparkSession, delta: DataFrame, storePath: String,
                  batchId: BatchId,
                  idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    require(batchId.nonEmpty, "dedupDelta needs a stable batch id")
-    committed(spark, storePath, Some(batchId.value)) match {
-      case Some(name) =>
-        return spark.read.parquet(batchDir(storePath, name).toString)
-      case None => ()
-    }
     val deltaKeep = fingerprints(delta, idCol, textCol)
       .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-    val survivors =
-      if (storeExists(spark, storePath)) {
-        val store = readStore(spark, storePath)
-        deltaKeep.join(store.select(col("fp")), Seq("fp"), "left_anti")
-      } else deltaKeep
+    ManifestStore.committedBatch(spark, storePath, storeKind(storePath),
+        batchId.value) match {
+      case Some(ManifestStore.Stored(p)) => return spark.read.parquet(p)
+      case Some(ManifestStore.Recorded)  => return deltaKeep.limit(0)
+      case None                          => ()
+    }
+    val survivors = ManifestStore.readLive(spark, storePath, storeKind(storePath)) match {
+      case Some(store) => deltaKeep.join(store.select(col("fp")), Seq("fp"), "left_anti")
+      case None        => deltaKeep
+    }
     // materialize BEFORE extending the store (see scaladoc)
     val materialized = Checkpoints.ckpt(survivors)
-    appendAtomic(spark, materialized, storePath,
-      freshBatchName(Some(batchId.value)))
+    ManifestStore.appendAtomic(spark, materialized, storePath,
+      ManifestStore.batchName(batchId.value))
     materialized
   }
 
-  /** Maintenance: collapse the store's accumulated per-batch
-    * subdirectories into one (a long-running crawl otherwise pays file
-    * listing over thousands of dirs) and sweep crashed staging dirs.
-    * Crash-safe by ORDERING, not locking: the compacted batch lands
-    * first (atomic rename), the old batch dirs are deleted after — so
-    * at every crash point the store holds a SUPERSET of the true
-    * fingerprint set, which is harmless here (the store is consumed as
-    * a set by anti/semi-joins; duplicate rows change nothing). The
-    * snapshot is checkpointed before any delete so the write never
-    * reads what it is removing. Staging dirs older than `staleMs`
-    * belong to crashed writers (a live writer's staging is younger) and
-    * are removed — without this they accumulate forever.
-    * NOTE: compaction collapses per-batch replay records, so run it
-    * only when no batch within the replay horizon can still retry. */
+  /** Maintenance: fold the store's accumulated batch dirs into one
+    * compacted generation (a long-running crawl otherwise pays file
+    * listing over thousands of dirs) and sweep what crashed writers
+    * left behind — [[ManifestStore.compact]], whose manifest keeps
+    * every absorbed batch id as a replay record. */
   def compactStore(spark: SparkSession, storePath: String,
-                   staleMs: Long = 24L * 3600 * 1000): Unit = {
-    if (!storeExists(spark, storePath)) return
-    val conf = spark.sparkContext.hadoopConfiguration
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(conf)
-    // sweep crashed staging siblings first
-    val now = System.currentTimeMillis()
-    val parent = store.getParent
-    if (parent != null && fs.exists(parent))
-      fs.listStatus(parent).foreach { st =>
-        if (st.isDirectory &&
-            st.getPath.getName.startsWith(s".${store.getName}-staging-") &&
-            now - st.getModificationTime > staleMs)
-          fs.delete(st.getPath, true)
-      }
-    val oldBatches = fs.listStatus(store)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch-"))
-    if (oldBatches.length <= 1) return
-    val snap = Checkpoints.ckpt(readStore(spark, storePath))
-    appendAtomic(spark, snap, storePath, freshBatchName(None))
-    Checkpoints.release(snap)
-    oldBatches.foreach(st => fs.delete(st.getPath, true))
-  }
+                   staleMs: Long = 24L * 3600 * 1000): Unit =
+    ManifestStore.compact(spark, storePath, Seq(storeKind(storePath)),
+      staleMs = staleMs)
 
   /** The near-dup survivor PLAN for a delta against the store — pure
     * (no writes), shared by [[dedupDeltaNear]] and the plan-shape spec
@@ -189,13 +120,12 @@ object IncrementalDedup {
     val bucketMin = memb.groupBy(col("bucket")).agg(min(col("doc_id")).as("mn"))
     val withinDrop = memb.join(bucketMin, "bucket")
       .filter(col("mn") < col("doc_id")).select(col("doc_id")).distinct()
-    val dropped =
-      if (storeExists(spark, storePath)) {
-        val store = readStore(spark, storePath)
-        withinDrop.union(
-          memb.join(store.select(col("bucket")), Seq("bucket"), "left_semi")
-            .select(col("doc_id")).distinct())
-      } else withinDrop
+    val dropped = ManifestStore.readLive(spark, storePath, storeKind(storePath)) match {
+      case Some(store) => withinDrop.union(
+        memb.join(store.select(col("bucket")), Seq("bucket"), "left_semi")
+          .select(col("doc_id")).distinct())
+      case None => withinDrop
+    }
     ids.join(dropped, Seq("doc_id"), "left_anti")
   }
 
@@ -218,11 +148,12 @@ object IncrementalDedup {
   def dedupDeltaNear(spark: SparkSession, delta: DataFrame, storePath: String,
                      batchId: BatchId,
                      idCol: String = "doc_id"): DataFrame = {
-    require(batchId.nonEmpty, "dedupDeltaNear needs a stable batch id")
-    committed(spark, storePath, Some(batchId.value)) match {
-      case Some(name) =>
-        return spark.read.parquet(batchDir(storePath, name).toString)
-          .select(col("doc_id")).distinct()
+    ManifestStore.committedBatch(spark, storePath, storeKind(storePath),
+        batchId.value) match {
+      case Some(ManifestStore.Stored(p)) =>
+        return spark.read.parquet(p).select(col("doc_id")).distinct()
+      case Some(ManifestStore.Recorded) =>
+        return delta.select(col(idCol).cast("long").as("doc_id")).limit(0)
       case None => ()
     }
     import graft.queries.Similarity
@@ -230,10 +161,10 @@ object IncrementalDedup {
     // materialize BEFORE extending the store (same rationale as above)
     val kept = Checkpoints.ckpt(
       nearDupSurvivorPlan(spark, delta, memb, storePath, idCol))
-    appendAtomic(spark,
+    ManifestStore.appendAtomic(spark,
       kept.join(memb, Seq("doc_id"), "left")
         .select(col("bucket"), col("doc_id")), storePath,
-      freshBatchName(Some(batchId.value)))
+      ManifestStore.batchName(batchId.value))
     kept
   }
 }

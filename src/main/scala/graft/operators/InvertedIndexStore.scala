@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    never the whole index). Postings are written LAST: their batch
   *    dir is the commit marker, so a crash between the two appends
   *    replays cleanly (the doclen re-append hits the already-committed
-  *    rename and is treated as success — [[IncrementalDedup]] rules).
+  *    rename and is treated as success — [[ManifestStore.appendAtomic]]).
   *  - `manifest/gen-<seq>-<uuid>/` — generations written by [[compact]]
   *    (r19, VERDICT r18 #2; machinery shared via [[ManifestStore]]
   *    since r20). The HIGHEST generation is authoritative; a store
@@ -44,11 +44,11 @@ import org.apache.spark.sql.functions._
   * replay returns an empty postings frame).
   *
   * COMPACTION: postings are COUNTED, not a set — df = rows per word,
-  * total_tf = a sum — so [[IncrementalDedup.compactStore]]'s
-  * write-snapshot-then-delete ordering (safe only for sets, where a
-  * crash-duplicated snapshot is absorbed) would silently double every
-  * statistic here. [[compact]] therefore swaps an atomically-renamed
-  * MANIFEST generation: see [[ManifestStore.compact]].
+  * total_tf = a sum — so a compactor that wrote its snapshot and then
+  * deleted the absorbed dirs would, crashing in between, silently
+  * double every statistic here. [[compact]] instead swaps an
+  * atomically-renamed MANIFEST generation that names the live dirs:
+  * see [[ManifestStore.compact]], which every store here shares.
   *
   * Determinism: tf/df/dl are exact counts; BM25 probe arithmetic is
   * the same all-integer form as `q_bm25` with identical tie-breaks, so
@@ -58,7 +58,7 @@ import org.apache.spark.sql.functions._
   * shares `q_bm25`'s oracle).
   */
 object InvertedIndexStore {
-  import IncrementalDedup.{appendAtomic, storeExists}
+  import ManifestStore.{appendAtomic, batchName, storeExists}
 
   /** Default term-shard count. 64 keeps row groups well-populated at
     * test SFs; a cluster deployment scales this with corpus size via
@@ -146,10 +146,6 @@ object InvertedIndexStore {
     * separable from the compacted generation). */
   def appendBatch(spark: SparkSession, docs: DataFrame, storePath: String,
                   batchId: String): DataFrame = {
-    require(batchId.nonEmpty, "appendBatch needs a stable batch id")
-    require(!batchId.contains('@'),
-      "batch ids may not contain '@' — it delimits the manifest's " +
-      "replay-retention stamp (batch-<id>@<seq>)")
     ManifestStore.committedBatch(spark, storePath,
         kindOf(storePath, "postings"), batchId) match {
       case Some(ManifestStore.Stored(p)) => return spark.read.parquet(p)
@@ -157,7 +153,7 @@ object InvertedIndexStore {
       case None                          => ()
     }
     val buckets = ensureMeta(spark, storePath)
-    val name = s"batch-$batchId"
+    val name = batchName(batchId)
     val dl = docs.select(col("doc_id"),
       expr(s"CAST(size($tokens) AS BIGINT)").as("dl"))
     appendAtomic(spark, dl, doclenPath(storePath), name)

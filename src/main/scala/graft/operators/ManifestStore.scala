@@ -3,13 +3,15 @@ package graft.operators
 import graft.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared MANIFEST-GENERATION machinery for multi-kind incremental
-  * parquet stores (r20 — extracted from [[InvertedIndexStore]]'s r19
-  * compaction so [[AnnIndexStore]] gets the identical crash-safety
-  * story instead of a re-derivation).
+/** The one commit, replay, compaction and crash-cleanup protocol of
+  * the incremental parquet stores: [[InvertedIndexStore]],
+  * [[AnnIndexStore]] and [[IncrementalDedup]] keep their batches here,
+  * and [[BpeVocabStore]] lands its write-once vocabulary through
+  * [[appendAtomic]].
   *
-  * A store is a set of KINDS (e.g. postings + doclen, or assign +
-  * pq_assign), each a directory of immutable subdirectories:
+  * A store is a set of KINDS (e.g. postings + doclen, assign +
+  * pq_assign, or the dedup store's one kind rooted at the store path
+  * itself), each a directory of immutable subdirectories:
   *  - `batch-<id>`   — one ingest batch, landed by one atomic rename,
   *    replay-keyed by `<id>`;
   *  - `compact-<uuid>` — a compactor's snapshot, INVISIBLE to readers
@@ -52,7 +54,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    before a swap.
   */
 private[graft] object ManifestStore {
-  import IncrementalDedup.{appendAtomic, storeExists}
 
   /** One store kind: its name (the manifest key), its data directory,
     * and the physical layout a compaction snapshot is rewritten into
@@ -64,6 +65,35 @@ private[graft] object ManifestStore {
     val p = new org.apache.hadoop.fs.Path(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
+
+  def storeExists(spark: SparkSession, path: String): Boolean = {
+    val (fs, p) = hfs(spark, path)
+    fs.exists(p)
+  }
+
+  /** Lands `df` as `<storePath>/<dirName>` by one atomic rename. A plain
+    * `mode("append")` writes task files straight into the store, so a
+    * crash mid-append would leave a PARTIAL batch that readers cannot
+    * tell from a whole one. The frame is written to the sibling
+    * `.<store>-staging-<dirName>` and renamed in, so a batch appears
+    * fully or not at all; a rename lost to a concurrent writer of the
+    * same name counts as success. A crashed writer's staging dir is
+    * swept by a later [[compact]]. */
+  def appendAtomic(spark: SparkSession, df: DataFrame,
+                   storePath: String, dirName: String): Unit = {
+    val (fs, store) = hfs(spark, storePath)
+    fs.mkdirs(store)
+    val tmp = new org.apache.hadoop.fs.Path(
+      store.getParent, s".${store.getName}-staging-$dirName")
+    val dst = new org.apache.hadoop.fs.Path(store, dirName)
+    df.write.mode("overwrite").parquet(tmp.toString)
+    if (!fs.rename(tmp, dst) && !fs.exists(dst))
+      throw new java.io.IOException(
+        s"atomic store append failed: could not rename $tmp into $store")
+  }
+
+  /** The dir an ingest batch lands in; its id is the replay key. */
+  def batchName(batchId: String): String = s"batch-$batchId"
 
   def manifestPath(storePath: String): String = storePath + "/manifest"
 
@@ -133,6 +163,13 @@ private[graft] object ManifestStore {
     names.sorted.map(n => s"${kind.path}/$n").toSeq
   }
 
+  /** The live rows of one kind, or None before its first batch lands. */
+  def readLive(spark: SparkSession, storePath: String,
+               kind: Kind): Option[DataFrame] = {
+    val dirs = liveDirs(spark, storePath, kind)
+    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
+  }
+
   /** How a replayed batch id is known committed. */
   sealed trait Committed
   /** Its dir is still readable (live, or legacy-parked under
@@ -167,10 +204,17 @@ private[graft] object ManifestStore {
     }
   }
 
-  /** The committed status of a batch id for one kind, if any. */
+  /** The committed status of a batch id for one kind, if any. Every
+    * append asks this first, so batch ids are checked here: an id must
+    * be non-empty (a stable replay key) and may not contain '@', which
+    * delimits the manifest's replay-retention stamp. */
   def committedBatch(spark: SparkSession, storePath: String,
                      kind: Kind, batchId: String): Option[Committed] = {
-    val name = s"batch-$batchId"
+    require(batchId.nonEmpty, "a store append needs a stable batch id")
+    require(!batchId.contains('@'),
+      "batch ids may not contain '@' — it delimits the manifest's " +
+      "replay-retention stamp (batch-<id>@<seq>)")
+    val name = batchName(batchId)
     Seq(s"${kind.path}/$name", s"${kind.path}/.absorbed/$name")
       .find(p => storeExists(spark, p))
       .map(p => Stored(p): Committed)
@@ -226,7 +270,7 @@ private[graft] object ManifestStore {
           manifestAgeMs(spark, storePath).exists(_ < moveGraceMs)) return
       finishMoves(spark, storePath, kinds)
     }
-    sweepStaleCompacts(spark, storePath, kinds, staleMs)
+    sweepStale(spark, storePath, kinds, staleMs)
     sweepOldGenerations(spark, storePath, math.max(staleMs, moveGraceMs))
     val live: Map[String, Seq[String]] =
       kinds.map(k => k.name -> liveDirs(spark, storePath, k)).toMap
@@ -272,9 +316,8 @@ private[graft] object ManifestStore {
     // manifest can RETIRE ids older than `replayHorizonGens` generations
     // instead of growing one row per batch ever ingested. Default keeps
     // them forever (metadata-only rows — safe, just unbounded); an
-    // operator bounds it once no writer can still retry a batch that old
-    // — the same replay-horizon contract IncrementalDedup.compactStore
-    // documents. A retired id's re-submission would RE-INGEST, so the
+    // operator bounds it once no writer can still retry a batch that
+    // old. A retired id's re-submission would RE-INGEST, so the
     // horizon must exceed the longest crash-retry window. Rows recorded
     // by pre-horizon generations (no stamp) are stamped `seq - 1` at
     // first carry, aging from their first post-upgrade compaction.
@@ -387,27 +430,38 @@ private[graft] object ManifestStore {
     }
   }
 
-  /** Delete `compact-*` dirs that no manifest generation names live —
-    * a crashed compactor's snapshots, invisible to readers but paying
-    * storage — once older than `staleMs` (a LIVE compactor's snapshot
-    * is younger than any sane staleness bound). */
-  private def sweepStaleCompacts(spark: SparkSession, storePath: String,
-                                 kinds: Seq[Kind], staleMs: Long): Unit = {
+  /** Delete what crashed writers left behind, once older than `staleMs`
+    * (a LIVE writer's leftovers are younger than any sane staleness
+    * bound):
+    *  - `compact-*` dirs no manifest generation names live — a crashed
+    *    compactor's snapshots, invisible to readers but paying storage;
+    *  - `.<dir>-staging-*` siblings of each kind dir and of the manifest
+    *    dir — an [[appendAtomic]] that died before its rename. */
+  private def sweepStale(spark: SparkSession, storePath: String,
+                         kinds: Seq[Kind], staleMs: Long): Unit = {
     val liveNow: Set[(String, String)] =
       latestManifest(spark, storePath) match {
         case Some((_, m)) => m.collect { case (k, true) => k }.toSet
         case None         => Set.empty
       }
     val now = System.currentTimeMillis()
-    kinds.foreach { k =>
-      val (fs, kp) = hfs(spark, k.path)
-      if (fs.exists(kp))
-        fs.listStatus(kp).foreach { st =>
-          val n = st.getPath.getName
-          if (st.isDirectory && n.startsWith("compact-") &&
-              !liveNow((k.name, n)) && now - st.getModificationTime > staleMs)
+    def sweep(dir: org.apache.hadoop.fs.Path)(leftover: String => Boolean): Unit = {
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(dir))
+        fs.listStatus(dir).foreach { st =>
+          if (st.isDirectory && leftover(st.getPath.getName) &&
+              now - st.getModificationTime > staleMs)
             fs.delete(st.getPath, true)
         }
+    }
+    kinds.foreach { k =>
+      sweep(new org.apache.hadoop.fs.Path(k.path))(n =>
+        n.startsWith("compact-") && !liveNow((k.name, n)))
+    }
+    (kinds.map(_.path) :+ manifestPath(storePath)).foreach { path =>
+      val p = new org.apache.hadoop.fs.Path(path)
+      if (p.getParent != null)
+        sweep(p.getParent)(_.startsWith(s".${p.getName}-staging-"))
     }
   }
 

@@ -283,8 +283,10 @@ object Similarity {
     // diameter bound: a 64-hop chain of DISTINCT band collisions is
     // pathological for near-dup graphs; hitting it unconverged FAILS
     // LOUDLY — a silently truncated clustering would diverge from the
-    // oracle's unbounded closure while looking exact
-    Checkpoints.iterate(labels0, maxRounds = 64, name = "hashMinLabels") { labels =>
+    // oracle's unbounded closure while looking exact. The returned round
+    // is materialized and reads only its own blocks, so membC is freed
+    // either way the loop ends.
+    try Checkpoints.iterate(labels0, maxRounds = 64, name = "hashMinLabels") { labels =>
       val bucketMin = membC.join(labels, "doc_id")
         .groupBy(col("bucket")).agg(min(col("lbl")).as("bl"))
       val docMin = membC.join(bucketMin, "bucket")
@@ -296,7 +298,7 @@ object Similarity {
       val prev = prevSum
       prevSum = lblSum(next)
       prevSum.compareTo(prev) == 0
-    }
+    } finally Checkpoints.release(membC)
   }
 
   /** Exact Jaccard in basis points for candidate (a_id, b_id) pairs,

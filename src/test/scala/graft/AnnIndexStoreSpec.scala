@@ -132,7 +132,7 @@ class AnnIndexStoreSpec extends SparkTestBase {
     val conflicted = AnnIndexStore.readAssignments(spark, store)
       .select(col("vec_id"), col("cell"), col("qv"),
         (col("nq") + 1).as("nq"))
-    graft.operators.IncrementalDedup.appendAtomic(
+    graft.operators.ManifestStore.appendAtomic(
       spark, conflicted, s"$store/assign", "batch-legacy-conflict")
     val e = intercept[Exception] { probeAll(store) }
     def messages(t: Throwable): Seq[String] =
@@ -159,7 +159,7 @@ class AnnIndexStoreSpec extends SparkTestBase {
       ((col("cell") + 1) % ncells).cast(asg0.schema("cell").dataType)
         .as("cell"),
       col("qv"), col("nq"))
-    graft.operators.IncrementalDedup.appendAtomic(
+    graft.operators.ManifestStore.appendAtomic(
       spark, conflicted, s"$store/assign", "batch-legacy-xcell")
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x =>

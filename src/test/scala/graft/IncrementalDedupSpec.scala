@@ -1,7 +1,10 @@
 package graft
 
-import java.nio.file.Files
-import graft.operators.IncrementalDedup
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import graft.operators.{IncrementalDedup, ManifestStore}
 import org.apache.spark.sql.functions._
 import graft.operators.BatchId
 
@@ -11,6 +14,9 @@ import graft.operators.BatchId
 class IncrementalDedupSpec extends SparkTestBase {
 
   private def docs = spark.read.parquet(s"$sfDir/documents.parquet")
+
+  private def liveDirs(store: String): Seq[String] =
+    ManifestStore.liveDirs(spark, store, IncrementalDedup.storeKind(store))
 
   test("batch N+1 drops exact dupes of batches 1..N via the store only") {
     val store = Files.createTempDirectory("graft-dedup-store")
@@ -47,13 +53,14 @@ class IncrementalDedupSpec extends SparkTestBase {
     val store = Files.createTempDirectory("graft-dedup-store2")
       .resolve("store").toString
     val delta = docs.filter(col("doc_id") >= 100 && col("doc_id") < 110)
-    // plant ONE victim fingerprint in the store by hand — if dedup
-    // consulted anything but the store, this row could not be dropped
+    // plant ONE victim fingerprint in the store by hand, as a batch dir
+    // — if dedup consulted anything but the store, this row could not
+    // be dropped
     val victimFp = delta.filter(col("doc_id") === 105)
       .select(md5(col("text").cast("binary"))).head().getString(0)
     import spark.implicits._
     Seq((victimFp, 9999L)).toDF("fp", "doc_id")
-      .write.parquet(store)
+      .write.parquet(s"$store/batch-planted")
     val kept = IncrementalDedup.dedupDelta(spark, delta, store, BatchId("d1"))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(!kept.contains(105L))
@@ -119,14 +126,12 @@ class IncrementalDedupSpec extends SparkTestBase {
     IncrementalDedup.dedupDelta(
       spark, docs.filter(col("doc_id") >= 150 && col("doc_id") < 300), store, BatchId("c2"))
     IncrementalDedup.dedupDelta(spark, docs.filter(col("doc_id") >= 300), store, BatchId("c3"))
-    def storeDirs() = new java.io.File(store).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("batch-"))
-    def storeFps() = spark.read.option("recursiveFileLookup", "true")
-      .parquet(store).select("fp").distinct().count()
-    assert(storeDirs().length === 3)
+    def storeFps() = spark.read.parquet(liveDirs(store): _*)
+      .select("fp").distinct().count()
+    assert(liveDirs(store).length === 3)
     val fpsBefore = storeFps()
     IncrementalDedup.compactStore(spark, store)
-    assert(storeDirs().length === 1, storeDirs().mkString(","))
+    assert(liveDirs(store).length === 1, liveDirs(store).mkString(","))
     assert(storeFps() === fpsBefore)
     // dedup against the compacted store still drops everything ingested
     assert(IncrementalDedup.dedupDelta(spark, docs, store, BatchId("c4")).count() === 0)
@@ -135,7 +140,7 @@ class IncrementalDedupSpec extends SparkTestBase {
     // duplicate rows in the store must not change dedup decisions
     IncrementalDedup.dedupDelta(spark, docs, store, BatchId("c5")) // no-op, fps all known
     val extra = Files.createTempDirectory("graft-compact-extra")
-    spark.read.option("recursiveFileLookup", "true").parquet(store)
+    spark.read.parquet(liveDirs(store): _*)
       .write.parquet(extra.resolve("dup").toString)
     org.apache.commons.io.FileUtils.copyDirectory(
       extra.resolve("dup").toFile,
@@ -149,9 +154,59 @@ class IncrementalDedupSpec extends SparkTestBase {
     IncrementalDedup.dedupDelta(spark, docs.filter(col("doc_id") < 200), store, BatchId("r1"))
     IncrementalDedup.dedupDelta(spark, docs.filter(col("doc_id") >= 200), store, BatchId("r2"))
     val leaked = persistedBy(IncrementalDedup.compactStore(spark, store))
-    assert(new java.io.File(store).listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("batch-")) == 1)
+    assert(liveDirs(store).length == 1)
     assert(leaked.isEmpty, s"still persisted: $leaked")
+  }
+
+  test("a batch replayed after compaction returns nothing and writes nothing") {
+    val store = Files.createTempDirectory("graft-compact-replay")
+      .resolve("store").toString
+    IncrementalDedup.dedupDelta(spark, docs.filter(col("doc_id") < 150), store, BatchId("c1"))
+    IncrementalDedup.dedupDelta(
+      spark, docs.filter(col("doc_id") >= 150 && col("doc_id") < 300), store, BatchId("c2"))
+    IncrementalDedup.dedupDelta(spark, docs.filter(col("doc_id") >= 300), store, BatchId("c3"))
+    IncrementalDedup.compactStore(spark, store)
+    def listing() = Files.walk(Paths.get(store)).iterator.asScala.map(_.toString).toSet
+    val before = listing()
+    // c1's dir was folded into the compacted generation; the manifest
+    // still records the id, so the replay is a committed no-op
+    val replay = IncrementalDedup.dedupDelta(
+      spark, docs.filter(col("doc_id") < 150), store, BatchId("c1"))
+    assert(replay.count() === 0)
+    assert(replay.columns.toSeq === Seq("fp", "doc_id"))
+    assert(listing() === before)
+  }
+
+  test("batch ids are checked by the shared replay lookup: '@' is rejected") {
+    val store = Files.createTempDirectory("graft-dedup-at")
+      .resolve("store").toString
+    intercept[IllegalArgumentException](
+      IncrementalDedup.dedupDelta(spark, docs, store, BatchId("a@1")))
+    intercept[IllegalArgumentException](
+      IncrementalDedup.dedupDeltaNear(spark, docs, store, BatchId("a@1")))
+    intercept[IllegalArgumentException](
+      IncrementalDedup.dedupDelta(spark, docs, store, BatchId("")))
+    assert(!new java.io.File(store).exists())
+  }
+
+  test("the store protocol lives in ManifestStore alone") {
+    // one commit primitive, one existence check and one crash sweep: a
+    // second copy would be a second crash-safety story to prove. A
+    // recursive read of a store would also pick up its manifest and
+    // dirs no manifest generation names live.
+    val files = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.getFileName.toString == "ManifestStore.scala"),
+      s"the walk from ${Paths.get("src/main/scala").toAbsolutePath} found no engine source")
+    def text(f: java.nio.file.Path) = new String(Files.readAllBytes(f), "UTF-8")
+    for (literal <- Seq("def appendAtomic", "def storeExists", "-staging-")) {
+      val users = files.filter(text(_).contains(literal)).map(_.getFileName.toString)
+      assert(users == Seq("ManifestStore.scala"), s"'$literal' in $users")
+    }
+    val recursive = files
+      .filter(f => f.getParent.getFileName.toString == "operators")
+      .filter(text(_).contains("recursiveFileLookup"))
+    assert(recursive.isEmpty, recursive.mkString(", "))
   }
 
   test("survivors stay valid after the store files are deleted (checkpointed)") {

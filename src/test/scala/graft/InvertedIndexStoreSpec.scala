@@ -188,7 +188,7 @@ class InvertedIndexStoreSpec extends SparkTestBase {
     // renamed under .absorbed/
     val legacy = docs.filter(col("doc_id") % 3 === 2)
     val legacyPost = InvertedIndexStore.tokenize(legacy)
-    graft.operators.IncrementalDedup.appendAtomic(
+    graft.operators.ManifestStore.appendAtomic(
       spark, legacyPost, s"$store/postings/.absorbed", "batch-parked")
     // a replay of the parked id is committed (read from the parked dir)
     assert(InvertedIndexStore.appendBatch(spark, legacy, store, "parked")
@@ -224,6 +224,25 @@ class InvertedIndexStoreSpec extends SparkTestBase {
     def statsOf(s: String) = InvertedIndexStore.termStats(spark, s)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(statsOf(store) == statsOf(oneShot))
+  }
+
+  test("compaction sweeps a crashed append's staging dirs once stale, not before") {
+    val store = freshStore("staging")
+    (0 to 1).foreach { i =>
+      InvertedIndexStore.appendBatch(spark,
+        docs.filter(col("doc_id") % 2 === i), store, s"b$i")
+    }
+    // appends that died before their rename: staging dirs next to each
+    // kind dir and next to the manifest dir
+    val crashed = Seq(".postings-staging-batch-x", ".doclen-staging-batch-x",
+      ".manifest-staging-gen-000000009-x")
+    crashed.foreach(n => assert(new java.io.File(store, n).mkdirs()))
+    InvertedIndexStore.compact(spark, store) // default staleMs: too young
+    assert(crashed.forall(topDirs(store, "").contains), topDirs(store, ""))
+    Thread.sleep(20)
+    InvertedIndexStore.compact(spark, store, staleMs = 1L)
+    assert(crashed.forall(n => !topDirs(store, "").contains(n)), topDirs(store, ""))
+    assert(Set("postings", "doclen", "manifest", "meta").subsetOf(topDirs(store, "").toSet))
   }
 
   test("crash between snapshot-write and manifest-swap leaves the old " +
@@ -275,7 +294,7 @@ class InvertedIndexStoreSpec extends SparkTestBase {
     // commit marker did not
     val dl = orphanDocs.select(col("doc_id"), expr(
       "CAST(size(filter(split(text, ' '), x -> x <> '')) AS BIGINT)").as("dl"))
-    graft.operators.IncrementalDedup.appendAtomic(
+    graft.operators.ManifestStore.appendAtomic(
       spark, dl, s"$store/doclen", "batch-orphan")
     InvertedIndexStore.compact(spark, store)
     // the orphan stayed at the top level, unabsorbed

@@ -164,7 +164,7 @@ class PqIndexSpec extends SparkTestBase {
     val conflicted = AnnIndexStore.readPqAssignments(spark, store)
       .select(col("vec_id"), col("cell"), (col("nq") + 1).as("nq"),
         col("codes"))
-    graft.operators.IncrementalDedup.appendAtomic(
+    graft.operators.ManifestStore.appendAtomic(
       spark, conflicted, s"$store/pq_assign", "batch-legacy-conflict")
     val e2 = intercept[Exception] { probePq(store) }
     def messages(t: Throwable): Seq[String] =
@@ -185,7 +185,7 @@ class PqIndexSpec extends SparkTestBase {
       ((col("cell") + 1) % ncells).cast(asg0.schema("cell").dataType)
         .as("cell"),
       col("nq"), col("codes"))
-    graft.operators.IncrementalDedup.appendAtomic(
+    graft.operators.ManifestStore.appendAtomic(
       spark, conflicted, s"$store/pq_assign", "batch-legacy-xcell")
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x =>

@@ -204,16 +204,18 @@ class SimilaritySpec extends SparkTestBase {
     assert(Similarity.hashMinLabels(emptyMemb, emptyDocs).count() == 0)
   }
 
-  test("label propagation settles a 64-doc path in 64 hops and fails loudly on 65") {
-    // bucket i holds docs i and i+1: the path minimum moves one doc per
-    // hop, so n docs take n − 1 changing hops plus the one that settles
+  /** (docs, membership) of an n-doc path: bucket i holds docs i and
+    * i+1, so the path minimum moves one doc per hop and n docs take
+    * n − 1 changing hops plus the one that settles. */
+  private def path(n: Int) = {
     import spark.implicits._
-    def path(n: Int) = {
-      val docs = (100L until 100L + n).toDF("doc_id")
-      (docs, docs.select(col("doc_id"), (col("doc_id") - 100).as("bucket"))
-        .union(docs.filter(col("doc_id") > 100)
-          .select(col("doc_id"), (col("doc_id") - 101).as("bucket"))))
-    }
+    val docs = (100L until 100L + n).toDF("doc_id")
+    (docs, docs.select(col("doc_id"), (col("doc_id") - 100).as("bucket"))
+      .union(docs.filter(col("doc_id") > 100)
+        .select(col("doc_id"), (col("doc_id") - 101).as("bucket"))))
+  }
+
+  test("label propagation settles a 64-doc path in 64 hops and fails loudly on 65") {
     val (docs64, memb64) = path(64)
     val labels = Similarity.hashMinLabels(memb64, docs64)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -223,6 +225,21 @@ class SimilaritySpec extends SparkTestBase {
     val e = intercept[IllegalStateException](Similarity.hashMinLabels(memb65, docs65))
     assert(e.getMessage.startsWith("hashMinLabels") &&
       e.getMessage.endsWith("not converged after 64 hops"), e.getMessage)
+  }
+
+  test("label propagation frees its membership checkpoint, converged or not") {
+    val (docs64, memb64) = path(64)
+    val converged = persistedBy {
+      val labels = Similarity.hashMinLabels(memb64, docs64)
+      assert(labels.count() == 64)
+      Checkpoints.release(labels)
+    }
+    assert(converged.isEmpty, s"still persisted: $converged")
+    val (docs65, memb65) = path(65)
+    val failed = persistedBy {
+      intercept[IllegalStateException](Similarity.hashMinLabels(memb65, docs65))
+    }
+    assert(failed.isEmpty, s"still persisted: $failed")
   }
 
   test("exact-Jaccard verify: hash-segment decomposition invariant in the segment count") {
