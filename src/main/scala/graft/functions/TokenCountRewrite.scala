@@ -47,6 +47,12 @@ case class TokenCount(child: Expression) extends UnaryExpression {
   */
 object TokenCountRewrite extends Rule[LogicalPlan] {
 
+  /** The engine's canonical whitespace tokenizer, as SQL over a `text`
+    * column — the one definition every query and store references. This
+    * rule matches exactly the tree it parses to, so a hand-typed copy
+    * that drifts would silently lose the one-pass rewrite. */
+  val tokens = "filter(split(text, ' '), x -> x <> '')"
+
   /** Number of maximal runs of non-0x20 bytes. Static so generated
     * code can call it. */
   def count(s: UTF8String): Int = {
@@ -83,12 +89,11 @@ object TokenCountRewrite extends Rule[LogicalPlan] {
       TokenCount(str)
     // r22: the same tree WITHOUT the size — the engine's canonical
     // tokenizer itself — becomes the one-pass codegen'd TextExprs.Toks.
-    // Every `filter(split(text, ' '), x -> x <> '')` call site (about
-    // 35 across the query surface) stops paying the interpreted
-    // ArrayFilter-over-regex-split path. dataType is identical
-    // (ArrayType(StringType, containsNull = false)), so the plan
-    // schema is unchanged. Matched top-down, so the Size form above
-    // wins where it applies.
+    // Every [[tokens]] call site (about 35 across the query surface)
+    // stops paying the interpreted ArrayFilter-over-regex-split path.
+    // dataType is identical (ArrayType(StringType, containsNull =
+    // false)), so the plan schema is unchanged. Matched top-down, so
+    // the Size form above wins where it applies.
     case ArrayFilter(
           StringSplit(str, Literal(sp: UTF8String, StringType), Literal(-1, IntegerType)),
           LambdaFunction(cond, Seq(v: NamedLambdaVariable), _))

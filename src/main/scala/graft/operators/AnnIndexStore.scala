@@ -52,10 +52,10 @@ import org.apache.spark.sql.functions._
   * brute-force scan. Periodic codebook refresh (`q_kmeans_step`) plus
   * re-assignment is a full-batch rebuild: write a new store and swap.
   *
-  * Determinism: all ranking uses the engine's quantized-integer dot
-  * products ([[Similarity.dotQ]]) and the shared 4-decimal cosine
-  * convention ([[Similarity.cosine]]) with (score desc, id asc)
-  * tie-breaks, so probe-over-store output is bit-identical to the
+  * Determinism: cells and neighbors are ranked by Similarity's own
+  * stages ([[Similarity.rankCells]], [[Similarity.rankPairs]]) — the
+  * quantized-integer dot, the 4-decimal cosine and (score desc, id asc)
+  * tie-breaks — so probe-over-store output is bit-identical to the
   * recompute-from-scratch pipeline — asserted by AnnIndexStoreSpec
   * and hash-oracled end-to-end via `q_ann_index_probe`.
   */
@@ -109,8 +109,6 @@ object AnnIndexStore {
       replayHorizonGens = replayHorizonGens)
   }
 
-  private def ldot(a: String, b: String): Column = Similarity.dotQ(a, b)
-
   /** The store's cell count: from `meta/` when present; for a legacy
     * store without meta, the committed codebook's own row count (the
     * codebook IS the cells); for a store about to be created, the
@@ -156,18 +154,13 @@ object AnnIndexStore {
     spark.read.parquet(codebookPath(storePath))
 
   /** Nearest-centroid assignment of (vec_id, qv, nq) vectors against a
-    * broadcast codebook: (vec_id, cell, qv, nq). Mirrors `q_ann_ivf`'s
-    * assignment stage exactly (cosine desc, c_id asc tie-break). */
-  def assign(vectors: DataFrame, codebook: DataFrame): DataFrame = {
-    val ranked = vectors.crossJoin(broadcast(
-        codebook.select(col("c_id"), col("qc"), col("nc"))))
-      .select(col("vec_id"), col("c_id"), col("qv"), col("nq"),
-        Similarity.cosine(ldot("qv", "qc"), col("nq"), col("nc")).as("ccos"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("c_id").asc)
-    ranked.withColumn("crn", row_number().over(w)).filter(col("crn") === 1)
+    * broadcast codebook: (vec_id, cell, qv, nq) — `q_ann_ivf`'s
+    * assignment stage ([[Similarity.rankCells]]). */
+  def assign(vectors: DataFrame, codebook: DataFrame): DataFrame =
+    Similarity.rankCells(vectors, codebook.select(col("c_id"), col("qc"), col("nc")),
+        "vec_id", "qv", "nq", col("vec_id"), col("c_id"), col("qv"), col("nq"))
+      .filter(col("crn") === 1)
       .select(col("vec_id"), col("c_id").as("cell"), col("qv"), col("nq"))
-  }
 
   /** Assign a delta batch against the stored codebook and append the
     * assignments atomically. `batchId` is REQUIRED and must be stable
@@ -507,13 +500,8 @@ object AnnIndexStore {
     graft.functions.VectorExprs.register(spark)
     val (m, _) = pqParams(spark, storePath)
     val cb = readCodebook(spark, storePath)
-    val rankedCells = queries.crossJoin(broadcast(
-        cb.select(col("c_id"), col("qc"), col("nc"))))
-      .select(col("a_id"), col("c_id"), col("qa"), col("na"), col("qc"),
-        Similarity.cosine(ldot("qa", "qc"), col("na"), col("nc")).as("ccos"))
-    val wc = Window.partitionBy(col("a_id"))
-      .orderBy(col("ccos").desc, col("c_id").asc)
-    val probes = rankedCells.withColumn("crn", row_number().over(wc))
+    val probes = Similarity.rankCells(queries, cb.select(col("c_id"), col("qc"), col("nc")),
+        "a_id", "qa", "na", col("a_id"), col("c_id"), col("qa"), col("na"), col("qc"))
       .filter(col("crn") <= nprobe)
       .withColumn("qcdot", expr("graft_ldot(qa, qc)"))
     // asymmetric table: query SUBVECTORS (not residuals) vs codewords,
@@ -579,15 +567,10 @@ object AnnIndexStore {
       .filter(col("srn") <= shortlist)
       .select(col("a_id"), col("b_id"))
     // exact re-rank: fetch ONLY the shortlist's raw vectors
-    val wTop = Window.partitionBy(col("a_id"))
-      .orderBy(col("cosine").desc, col("b_id").asc)
-    short
-      .join(source.select(col("vec_id").as("b_id"), col("qv").as("qb"),
-        col("nq").as("nb")), "b_id")
-      .join(queries.select(col("a_id"), col("qa"), col("na")), "a_id")
-      .select(col("a_id"), col("b_id"),
-        Similarity.cosine(ldot("qa", "qb"), col("na"), col("nb")).as("cosine"))
-      .withColumn("rn", row_number().over(wTop))
+    Similarity.rankPairs(short
+        .join(Similarity.pairSide(source, "b"), "b_id")
+        .join(queries.select(col("a_id"), col("qa"), col("na")), "a_id")
+        .select(col("a_id"), col("b_id"), Similarity.pairCosine), col("a_id"))
       .filter(col("rn") <= k)
       .select(col("a_id"), col("b_id"), col("cosine"),
         col("rn").cast("long").as("rn"))
@@ -614,13 +597,8 @@ object AnnIndexStore {
     requireStoreConsistent(spark, storePath, assignKind(storePath),
       Seq("cell", "nq", "qv"), "assignments")
     val cb = readCodebook(spark, storePath)
-    val rankedCells = queries.crossJoin(broadcast(
-        cb.select(col("c_id"), col("qc"), col("nc"))))
-      .select(col("a_id"), col("c_id"), col("qa"), col("na"),
-        Similarity.cosine(ldot("qa", "qc"), col("na"), col("nc")).as("ccos"))
-    val wc = Window.partitionBy(col("a_id"))
-      .orderBy(col("ccos").desc, col("c_id").asc)
-    val probes = rankedCells.withColumn("crn", row_number().over(wc))
+    val probes = Similarity.rankCells(queries, cb.select(col("c_id"), col("qc"), col("nc")),
+        "a_id", "qa", "na", col("a_id"), col("c_id"), col("qa"), col("na"))
       .filter(col("crn") <= nprobe)
       .select(col("a_id"), col("c_id").as("pcell"), col("qa"), col("na"))
     val probedCells = probes.select(col("pcell").as("probed_cell")).distinct()
@@ -639,12 +617,9 @@ object AnnIndexStore {
           .otherwise(col("hi")).as("a"))
       .select(col("vec_id").as("b_id"), col("a.cell").as("cell"),
         col("a.qv").as("qb"), col("a.nq").as("nb"))
-    val wTop = Window.partitionBy(col("a_id"))
-      .orderBy(col("cosine").desc, col("b_id").asc)
-    probes.join(asg, col("pcell") === col("cell") && col("a_id") =!= col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        Similarity.cosine(ldot("qa", "qb"), col("na"), col("nb")).as("cosine"))
-      .withColumn("rn", row_number().over(wTop))
+    Similarity.rankPairs(probes
+        .join(asg, col("pcell") === col("cell") && col("a_id") =!= col("b_id"))
+        .select(col("a_id"), col("b_id"), Similarity.pairCosine), col("a_id"))
       .filter(col("rn") <= k)
       .select(col("a_id"), col("b_id"), col("cosine"),
         col("rn").cast("long").as("rn"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Checkpoints
+import graft.queries.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,27 +40,23 @@ import org.apache.spark.sql.functions._
   * on retry.
   */
 /** Stable replay key for a dedup-store append (r20, ADVICE r19 low).
-  * A distinct type, not a raw String: when r19 made the batch id a
-  * REQUIRED positional parameter it landed in the slot the defaulted
-  * `idCol: String` used to occupy, so an un-migrated caller passing a
-  * custom id column positionally compiled silently with the column
-  * name used as the batch id. Wrapping the id makes any such stale
-  * call site a compile error. (The other stores' `appendBatch(...,
-  * batchId)` keep plain String — no same-typed defaulted parameter
-  * ever sat in that position, so the trap never existed there.) */
+  * A distinct type, not a raw String: the batch id follows the store
+  * path, another String, in `dedupDelta` / `dedupDeltaNear`, and a
+  * swapped or stale positional argument would otherwise compile and
+  * use a path or column name as the replay key. */
 final case class BatchId(value: String) extends AnyVal
 
 object IncrementalDedup {
 
-  /** Row-local body fingerprints of a batch: (fp, doc_id). NULL text
-    * maps to a distinct sentinel (not SQL NULL): md5(NULL) is NULL and
-    * NULL never equi-joins, so NULL-text rows would silently escape
-    * dedup in every batch while piling NULL rows into the store. */
-  def fingerprints(batch: DataFrame, idCol: String = "doc_id",
-                   textCol: String = "text"): DataFrame =
+  /** Row-local body fingerprints of a (doc_id, text) batch: (fp,
+    * doc_id). NULL text maps to a distinct sentinel (not SQL NULL):
+    * md5(NULL) is NULL and NULL never equi-joins, so NULL-text rows would
+    * silently escape dedup in every batch while piling NULL rows into
+    * the store. */
+  def fingerprints(batch: DataFrame): DataFrame =
     batch.select(
-      coalesce(md5(col(textCol).cast("binary")), lit("<null-body>")).as("fp"),
-      col(idCol).cast("long").as("doc_id"))
+      coalesce(md5(col("text").cast("binary")), lit("<null-body>")).as("fp"),
+      col("doc_id").cast("long").as("doc_id"))
 
   /** The store's one [[ManifestStore]] kind, rooted at the store path. */
   private[graft] def storeKind(storePath: String) =
@@ -77,9 +74,8 @@ object IncrementalDedup {
     * stable id the replay returns the recorded survivors, or nothing
     * once compaction has folded them away. */
   def dedupDelta(spark: SparkSession, delta: DataFrame, storePath: String,
-                 batchId: BatchId,
-                 idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val deltaKeep = fingerprints(delta, idCol, textCol)
+                 batchId: BatchId): DataFrame = {
+    val deltaKeep = fingerprints(delta)
       .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
     ManifestStore.committedBatch(spark, storePath, storeKind(storePath),
         batchId.value) match {
@@ -114,9 +110,8 @@ object IncrementalDedup {
     * (doc_id) of kept docs; `memb` is the delta's (doc_id, bucket)
     * membership. */
   private[graft] def nearDupSurvivorPlan(spark: SparkSession, delta: DataFrame,
-                                         memb: DataFrame, storePath: String,
-                                         idCol: String): DataFrame = {
-    val ids = delta.select(col(idCol).cast("long").as("doc_id")).distinct()
+                                         memb: DataFrame, storePath: String): DataFrame = {
+    val ids = delta.select(col("doc_id").cast("long").as("doc_id")).distinct()
     val bucketMin = memb.groupBy(col("bucket")).agg(min(col("doc_id")).as("mn"))
     val withinDrop = memb.join(bucketMin, "bucket")
       .filter(col("mn") < col("doc_id")).select(col("doc_id")).distinct()
@@ -144,27 +139,27 @@ object IncrementalDedup {
     * Survivors with NO buckets (sub-shingle-length docs) are recorded
     * in the batch dir with a NULL bucket — NULL never equi-joins, so
     * they cannot cause drops, but they make the batch dir a complete
-    * replay record. */
+    * replay record. `delta` is a (doc_id, text) frame, as for
+    * [[Similarity.lshBuckets]]. */
   def dedupDeltaNear(spark: SparkSession, delta: DataFrame, storePath: String,
-                     batchId: BatchId,
-                     idCol: String = "doc_id"): DataFrame = {
+                     batchId: BatchId): DataFrame = {
     ManifestStore.committedBatch(spark, storePath, storeKind(storePath),
         batchId.value) match {
       case Some(ManifestStore.Stored(p)) =>
         return spark.read.parquet(p).select(col("doc_id")).distinct()
       case Some(ManifestStore.Recorded) =>
-        return delta.select(col(idCol).cast("long").as("doc_id")).limit(0)
+        return delta.select(col("doc_id").cast("long").as("doc_id")).limit(0)
       case None => ()
     }
-    import graft.queries.Similarity
     val memb = Checkpoints.ckpt(Similarity.lshBuckets(delta))
     // materialize BEFORE extending the store (same rationale as above)
-    val kept = Checkpoints.ckpt(
-      nearDupSurvivorPlan(spark, delta, memb, storePath, idCol))
+    val kept = Checkpoints.ckpt(nearDupSurvivorPlan(spark, delta, memb, storePath))
     ManifestStore.appendAtomic(spark,
       kept.join(memb, Seq("doc_id"), "left")
         .select(col("bucket"), col("doc_id")), storePath,
       ManifestStore.batchName(batchId.value))
+    // the append was memb's last reader; kept is the caller's to release
+    Checkpoints.release(memb)
     kept
   }
 }

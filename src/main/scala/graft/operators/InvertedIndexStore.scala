@@ -3,6 +3,7 @@ package graft.operators
 import graft.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.TokenCountRewrite.tokens
 
 /** Persisted incremental INVERTED INDEX (VERDICT r17 #6): per-term
   * postings and per-doc lengths live in a term-bucketed parquet store,
@@ -72,8 +73,6 @@ object InvertedIndexStore {
     * the wrong shards and silently drop postings. */
   val DefaultBuckets = 64
   val BucketsConf = "spark.graft.invindex.buckets"
-
-  private val tokens = "filter(split(text, ' '), x -> x <> '')"
 
   private def postingsPath(p: String) = p + "/postings"
   private def doclenPath(p: String) = p + "/doclen"

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
+import graft.functions.TokenCountRewrite.tokens
 
 /** Aggregations and window functions (SURVEY.md §2.B).
   *
@@ -240,7 +241,7 @@ object Aggregates {
       graft.functions.CountMinSketch.register(s)
       graft.functions.TextExprs.register(s) // graft_grams in fourGramSql (r21)
       val grams = load(s, d, "documents")
-        .withColumn("toks", expr("filter(split(text, ' '), x -> x <> '')"))
+        .withColumn("toks", expr(tokens))
         .select(explode(expr(Shingles.fourGramSql(distinct = false))).as("word"))
       val sk = grams.agg(expr("graft_cms(word, CAST(1 AS BIGINT), 3, 1024)").as("cms"))
       val top = grams.groupBy(col("word")).agg(count(lit(1)).as("exact_cnt"))

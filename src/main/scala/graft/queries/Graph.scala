@@ -26,32 +26,16 @@ import org.apache.spark.sql.functions._
 object Graph {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Oriented (a < b) minhash band-bucket candidate edges over the
-    * doc_id < 100 block — ONE definition shared by q_triangles and
-    * q_kcore so the structural-analytics queries run on the same
-    * near-dup graph (the shared-definition discipline of
-    * Similarity.lshBandRows32). 8 min-of-md5 hashes, 4 bands of 2;
-    * an edge is a shared band signature. */
-  private[graft] def minhashBlockEdges(s: SparkSession, d: String): DataFrame = {
-    val docs = load(s, d, "documents").filter(col("doc_id") < 100)
-      .select(col("doc_id"), col("text"))
-    val words = docs
-      .select(col("doc_id"),
-        explode(expr("filter(split(text, ' '), x -> x <> '')")).as("word"))
-      .distinct()
-    val sigs = words
-      .select(col("doc_id"), explode(expr("sequence(0, 7)")).as("i"), col("word"))
-      .groupBy(col("doc_id"), col("i"))
-      .agg(min(md5(concat(col("i").cast("string"), lit("|"), col("word"))
-        .cast("binary"))).as("mh"))
-    val bands = sigs.groupBy(col("doc_id"), expr("i div 2").as("band"))
-      .agg(md5(concat(min(col("mh")), max(col("mh"))).cast("binary")).as("sig"))
-    bands.select(col("doc_id").as("a"), col("band"), col("sig"))
-      .join(bands.select(col("doc_id").as("b"), col("band"), col("sig")),
-        Seq("band", "sig"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-  }
+  /** Oriented (a < b) minhash near-dup edges over the doc_id < 100
+    * block, shared by q_triangles and q_kcore: two docs are adjacent iff
+    * they share a band bucket. The edges are q_minhash_pairs' candidate
+    * pairs, deduped — Similarity's band-pair stage
+    * ([[Similarity.bandCollisions]] over [[Similarity.minhashBlockSigs]]),
+    * so signatures are the row-local `graft_minhash8` fold (8 md5(i|word)
+    * hashes, 4 bands of 2) and the first shuffle is the band join. */
+  private[graft] def minhashBlockEdges(s: SparkSession, d: String): DataFrame =
+    Similarity.bandCollisions(Similarity.minhashBlockSigs(s, d))
+      .select(col("a_id").as("a"), col("b_id").as("b")).distinct()
 
   /** Undirected degrees of an (a, b) edge list — the k-core state. */
   private[graft] def kcoreDegrees(e: DataFrame): DataFrame =
@@ -206,8 +190,14 @@ object Graph {
     // Each round's edge set is checkpointed (CC-kernel lineage
     // discipline), so the loop extends to any k / round count.
     "q_kcore" -> ((s, d) => {
+      // each round is eagerly materialized before the round it peels is
+      // released; the result reads the last round's blocks
       var e = graft.Checkpoints.ckpt(minhashBlockEdges(s, d))
-      for (_ <- 1 to 3) e = graft.Checkpoints.ckpt(kcorePeelRound(e))
+      for (_ <- 1 to 3) {
+        val next = graft.Checkpoints.ckpt(kcorePeelRound(e))
+        graft.Checkpoints.release(e)
+        e = next
+      }
       kcoreDegrees(e)
         .select(col("id").as("doc_id"), col("deg").as("core_deg"))
         .orderBy("doc_id")

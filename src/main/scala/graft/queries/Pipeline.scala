@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.operators.BatchId
+import graft.functions.TokenCountRewrite.tokens
 
 /** Training-data pipeline operators over `documents` (round-2 extension
   * surface): deterministic sampling and dataset splits, gopher-style
@@ -25,8 +26,6 @@ import graft.operators.BatchId
   */
 object Pipeline {
   type Q = (SparkSession, String) => DataFrame
-
-  private val tokens = "filter(split(text, ' '), x -> x <> '')"
 
   /** Cross-document repeated runs of >= `minShingles` consecutive
     * shared 4-gram shingles — the exact-substring-dedup kernel behind
@@ -123,12 +122,19 @@ object Pipeline {
     }.getOrElse(1L << 20)
 
   /** Deterministic 1/16 eval-sample membership by doc_id — ONE
-    * definition shared by both decontamination variants and DSIR, so
-    * the sample can never drift between queries that declare related
-    * oracles. */
+    * definition shared by both decontamination variants, DSIR and
+    * q_pipeline_e2e, so the sample can never drift between queries that
+    * declare related oracles. */
   private def isEvalDoc =
     substring(md5(concat(col("doc_id").cast("string"),
       lit("|eval")).cast("binary")), 1, 1) < "1"
+
+  /** Gopher-style keep rule over per-doc (n_toks, n_distinct, top_c):
+    * duplicate-token share <= 45% and top-token share <= 10%, in integer
+    * basis points — shared by q_gopher_quality's `keep` flag and
+    * q_pipeline_e2e's quality gate. */
+  private val gopherKeep = "(n_toks - n_distinct) * 10000 DIV n_toks <= 4500 AND " +
+    "top_c * 10000 DIV n_toks <= 1000"
 
   /** One tokenize+shingle+md5 pass over the corpus, checkpointed:
     * compact (doc_id, gh) rows shared by both decontamination
@@ -307,8 +313,7 @@ object Pipeline {
           expr("(n_toks - n_distinct) * 10000 DIV n_toks").as("dup_bp"),
           expr("top_c * 10000 DIV n_toks").as("top_tok_bp"),
           expr("len_sum * 100 DIV n_toks").as("mean_len_cc"),
-          expr("(n_toks - n_distinct) * 10000 DIV n_toks <= 4500 AND " +
-            "top_c * 10000 DIV n_toks <= 1000").as("keep"))
+          expr(gopherKeep).as("keep"))
         .orderBy("doc_id")
     }),
 
@@ -839,8 +844,9 @@ object Pipeline {
       val docs = load(s, d, "documents")
       val tmp = java.nio.file.Files.createTempDirectory("graft_incr_dedup")
       val store = tmp.resolve("store").toString
-      graft.operators.IncrementalDedup.dedupDelta(
-        s, docs.filter(col("doc_id") < 250), store, BatchId("b1"))
+      // batch 1's survivors are only a store write here: free them
+      Checkpoints.release(graft.operators.IncrementalDedup.dedupDelta(
+        s, docs.filter(col("doc_id") < 250), store, BatchId("b1")))
       val kept2 = graft.operators.IncrementalDedup.dedupDelta(
         s, docs.filter(col("doc_id") >= 250), store, BatchId("b2"))
       // survivors are checkpointed — the store files can go away now
@@ -857,8 +863,8 @@ object Pipeline {
       val docs = load(s, d, "documents")
       val tmp = java.nio.file.Files.createTempDirectory("graft_incr_near")
       val store = tmp.resolve("store").toString
-      graft.operators.IncrementalDedup.dedupDeltaNear(
-        s, docs.filter(col("doc_id") < 250), store, BatchId("b1"))
+      Checkpoints.release(graft.operators.IncrementalDedup.dedupDeltaNear(
+        s, docs.filter(col("doc_id") < 250), store, BatchId("b1")))
       val kept2 = graft.operators.IncrementalDedup.dedupDeltaNear(
         s, docs.filter(col("doc_id") >= 250), store, BatchId("b2"))
       org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
@@ -1316,22 +1322,19 @@ object Pipeline {
         .groupBy(col("doc_id"))
         .agg(sum(col("c")).as("n_toks"), count(lit(1)).as("n_distinct"),
           max(col("c")).as("top_c"))
-        .filter(expr("(n_toks - n_distinct) * 10000 DIV n_toks <= 4500 AND " +
-          "top_c * 10000 DIV n_toks <= 1000"))
+        .filter(expr(gopherKeep))
         .select(col("doc_id"))
       // 2. decontamination: same eval split + 4-gram hashes as
       // q_decontaminate; eval docs AND any train doc sharing a gram drop
-      val isEval = substring(md5(concat(col("doc_id").cast("string"),
-        lit("|eval")).cast("binary")), 1, 1) < "1"
       // r21: one-pass gram hashing (see substringRuns)
       graft.functions.TextExprs.register(s)
       val grams = Checkpoints.ckpt(toksDf
         .select(col("doc_id"),
           explode(expr("graft_gram_md5s(toks, 4)")).as("gh")))
-      val evalGrams = grams.filter(isEval).select(col("gh")).distinct()
-      val contaminated = grams.filter(!isEval).join(evalGrams, "gh")
+      val evalGrams = grams.filter(isEvalDoc).select(col("gh")).distinct()
+      val contaminated = grams.filter(!isEvalDoc).join(evalGrams, "gh")
         .select(col("doc_id")).distinct()
-      val survivors = quality.filter(!isEval)
+      val survivors = quality.filter(!isEvalDoc)
         .join(contaminated, Seq("doc_id"), "left_anti")
       // 3. near-dup canon among survivors: same LSH + hash-min CC as
       // q_dedup_cluster, restricted to the filtered doc set. r22: the
@@ -1342,6 +1345,7 @@ object Pipeline {
         Similarity.lshBucketsFromToks(
           toksDf.join(survivors, "doc_id").select(col("doc_id"), col("toks"))),
         survivors)
+      Checkpoints.release(grams) // the labels are materialized
       val canon = labels.filter(col("doc_id") === col("lbl"))
         .select(col("doc_id"))
       // 4. pack the canon set per-lang: same shard rule as q_pack_greedy

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables.load
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.TokenCountRewrite.tokens
 
 /** Scalar-function batteries (SURVEY.md §2.B): string, regex, date, math,
   * array, JSON, map. All row-wise, narrow, and whole-stage-codegen'd —
@@ -208,7 +209,7 @@ object Scalars {
       // query's declared surface and stay untouched
       graft.functions.TextExprs.register(s)
       load(s, d, "documents")
-        .withColumn("toks", expr("filter(split(text, ' '), x -> x <> '')"))
+        .withColumn("toks", expr(tokens))
         .withColumn("wc", expr("graft_word_counts(toks)"))
         .select(col("doc_id"),
           expr("CAST(size(map_filter(wc, (k, v) -> v >= 3)) AS BIGINT)").as("n_frequent"),

@@ -6,6 +6,7 @@ import graft.operators.AnnIndexStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.TokenCountRewrite.tokens
 
 /** Similarity search and near-duplicate detection (driver-mandated
   * extension surface): brute-force cosine top-k, LSH-bucketed ANN (scale
@@ -24,6 +25,36 @@ import org.apache.spark.sql.expressions.Window
   * baseline shape. The LSH variants (`q_ann_lsh`) bucket-join instead of
   * cross-joining, which is the 100 TB path: candidates share a band
   * bucket, so the shuffle is on short signature keys, never all-pairs.
+  *
+  * Shared stages — each written once here, so a change to how candidates
+  * are built, scored, ranked or clustered lands in one place. Each takes
+  * frames that are already built and never loads or checkpoints itself,
+  * so every caller keeps its own checkpoint choices:
+  *  - [[pairSide]] / [[withVectors]] / [[pairCosine]]: the (a_id, qa, na)
+  *    and (b_id, qb, nb) sides of a scored pair, candidates re-attached
+  *    to their vectors by key, and the pair's rounded cosine — every
+  *    cosine-scored query, AnnIndexStore.probe / probePq included.
+  *  - [[rankPairs]]: `rn` by (cosine desc, b_id asc) — q_cosine_topk,
+  *    q_ann_lsh, q_ann_lsh_det, q_ann_lsh_probes, q_ann_recall, ivfTop3,
+  *    q_contrastive_pairs, q_label_prop(_multi), q_hard_negatives,
+  *    q_knn_graph, AnnIndexStore.probe / probePq. [[bruteTopK]] is the
+  *    exact broadcast × corpus top-k of q_cosine_topk, q_ann_recall and
+  *    q_ann_lsh_probes; [[probeQueries]] the probe vectors 50–59.
+  *  - [[rankCells]] (rounded cosine: ivfTop3, AnnIndexStore.assign /
+  *    probe / probePq) and [[nearestCellRaw]] (raw cosine: q_kmeans_step,
+  *    q_kmeans_multi, q_centroid_outlier, q_cluster_sample): cells ranked
+  *    by (ccos desc, c_id asc) against a broadcast codebook; the
+  *    [[seedCentroids]] are vec_id < 16.
+  *  - Candidates: [[bandPairs32]] (32-plane band self-join: q_knn_graph,
+  *    q_label_prop_multi, q_hard_negatives), [[nibbleBands]] (16-bit
+  *    nibble bands: q_ann_lsh, q_ann_lsh_det, q_ann_lsh_probes),
+  *    [[minhashBands]] / [[bandCollisions]] over [[minhashBlockSigs]]
+  *    (q_minhash_dedup, q_minhash_pairs, q_minhash_est, q_dedup_audit,
+  *    [[lshBuckets]], Graph.minhashBlockEdges), [[labelBlockedNear]]
+  *    (q_embed_neardup, q_semdedup_cluster), [[simhashCandidates]].
+  *  - Clustering: [[hashMinLabels]] → [[clusterOf]] (q_dedup_cluster),
+  *    with [[pairClusters]] turning verified pairs into 2-member buckets
+  *    (q_simhash_cluster, q_semdedup_cluster).
   */
 object Similarity {
   type Q = (SparkSession, String) => DataFrame
@@ -55,24 +86,125 @@ object Similarity {
   private[graft] def cosine(dq: Column, na: Column, nb: Column): Column =
     round(dq.cast("double") / (sqrt(na.cast("double")) * sqrt(nb.cast("double"))), 4) + lit(0d)
 
+  /** One side of a scored pair: (a_id, qa, na, a_<c>…) for `side` "a",
+    * (b_id, qb, nb, b_<c>…) for "b", the `carry` columns renamed alike. */
+  private[graft] def pairSide(q: DataFrame, side: String, carry: String*): DataFrame =
+    q.select((Seq(col("vec_id").as(s"${side}_id"), col("qv").as(s"q$side"),
+      col("nq").as(s"n$side")) ++ carry.map(c => col(c).as(s"${side}_$c"))): _*)
+
+  /** The rounded cosine of a pair whose sides are [[pairSide]]s. */
+  private[graft] def pairCosine: Column =
+    cosine(dotQ("qa", "qb"), col("na"), col("nb")).as("cosine")
+
+  /** Payload-free (a_id, b_id, …) candidates with both sides' vectors
+    * re-attached by keyed equi-join AFTER the candidate dedup: candidate
+    * shuffles move 16-byte id pairs, not 0.5 KB quantized vectors. */
+  private def withVectors(cands: DataFrame, q: DataFrame, carry: String*): DataFrame =
+    cands.join(pairSide(q, "a", carry: _*), "a_id")
+      .join(pairSide(q, "b", carry: _*), "b_id")
+
+  /** Pair ranking: `rn` numbers each `by` partition's pairs by (cosine
+    * desc, b_id asc) — the engine's one top-k tie-break, which the
+    * oracles' `ORDER BY cosine DESC, b_id ASC` windows mirror. */
+  private[graft] def rankPairs(pairs: DataFrame, by: Column*): DataFrame =
+    pairs.withColumn("rn", row_number().over(
+      Window.partitionBy(by: _*).orderBy(col("cosine").desc, col("b_id").asc)))
+
+  /** Exact top-`k` (a_id, b_id, cosine, rn) of a bounded query set (a
+    * [[pairSide]] "a") over the whole corpus: the query side broadcasts,
+    * so the cross join is linear in the corpus; self-pairs are excluded. */
+  private def bruteTopK(queries: DataFrame, q: DataFrame, k: Int): DataFrame =
+    rankPairs(pairSide(q, "b").crossJoin(broadcast(queries))
+        .filter(col("a_id") =!= col("b_id"))
+        .select(col("a_id"), col("b_id"), pairCosine), col("a_id"))
+      .filter(col("rn") <= k)
+
+  /** The ANN audit's probe vectors, vec_id 50–59, as a [[pairSide]] "a". */
+  private def probeQueries(q: DataFrame): DataFrame =
+    pairSide(q.filter(col("vec_id") >= 50 && col("vec_id") < 60), "a")
+
+  /** The seed codebook (c_id, qc, nc): vectors with vec_id < 16. */
+  private def seedCentroids(q: DataFrame): DataFrame =
+    q.filter(col("vec_id") < 16)
+      .select(col("vec_id").as("c_id"), col("qv").as("qc"), col("nq").as("nc"))
+
+  /** Cell ranking by ROUNDED cosine — the IVF convention shared by
+    * ivfTop3 and AnnIndexStore's assign / probe / probePq, so the stored
+    * index answers bit-identically to the recompute: every row of `vecs`
+    * meets the broadcast codebook `cents` (c_id, qc, nc), is projected to
+    * `cols` plus `ccos` = cosine of vector column `v` (norm `n`) against
+    * `qc`, and `crn` numbers the cells per `key` by (ccos desc, c_id asc). */
+  private[graft] def rankCells(vecs: DataFrame, cents: DataFrame, key: String,
+                               v: String, n: String, cols: Column*): DataFrame =
+    vecs.crossJoin(broadcast(cents))
+      .select(cols :+ cosine(dotQ(v, "qc"), col(n), col("nc")).as("ccos"): _*)
+      .withColumn("crn", row_number().over(Window.partitionBy(col(key))
+        .orderBy(col("ccos").desc, col("c_id").asc)))
+
+  /** Nearest cell by RAW cosine — the k-means family's assignment
+    * (q_kmeans_step, q_kmeans_multi, q_centroid_outlier,
+    * q_cluster_sample): one (v_id, c_id, carry…, ccos) row per vector of
+    * `q` against the broadcast codebook `cents`, ties to the lower c_id.
+    * The key is unrounded on purpose: it only orders, and the quotient of
+    * identical integer dot/norms is bit-identical IEEE math in both
+    * engines — round() would reintroduce the Spark-vs-DuckDB
+    * boundary-rounding risk for zero benefit. */
+  private def nearestCellRaw(q: DataFrame, cents: DataFrame, carry: Column*): DataFrame =
+    q.crossJoin(broadcast(cents))
+      .select((Seq(col("vec_id").as("v_id"), col("c_id")) ++ carry :+
+        (dotQ("qv", "qc").cast("double") /
+          (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
+          .as("ccos")): _*)
+      .withColumn("crn", row_number().over(Window.partitionBy(col("v_id"))
+        .orderBy(col("ccos").desc, col("c_id").asc)))
+      .filter(col("crn") === 1)
+
   /** (vec_id, band, bv) rows of the 32-plane md5-parity LSH signature
-    * split into 4×8-bit bands (256 buckets per band) — ONE definition
-    * shared by q_knn_graph and q_label_prop so the corpus-wide candidate
-    * rule cannot drift between the oracled queries (the same
-    * shared-definition discipline as simhashCandidates). The signature is
+    * split into 4×8-bit bands (256 buckets per band). The signature is
     * the codegen'd row-local fold `graft_lshsig_md5`
     * (functions.LshSigMd5) — the interpreted zip_with/aggregate fold it
     * replaced was evaluated on BOTH sides of the candidate self-join and
     * dominated q_knn_graph (3.7 s → 0.8 s at sf0.1). Band rows carry
-    * ONLY the id — candidate-pair shuffles move 16-byte pairs, not
-    * 0.5 KB quantized vectors; the vectors re-attach per side afterwards
-    * by keyed equi-join. */
+    * ONLY the id; vectors re-attach through [[withVectors]]. */
   private def lshBandRows32(q: DataFrame): DataFrame =
     q.select(col("vec_id"), expr("graft_lshsig_md5(qv, 32)").as("sig"))
       .select(col("vec_id"),
         explode(expr("transform(sequence(0, 3), b -> named_struct(" +
           "'band', b, 'bv', shiftright(sig, b * 8) % 256))")).as("bn"))
       .select(col("vec_id"), col("bn.band").as("band"), col("bn.bv").as("bv"))
+
+  /** Corpus-wide 32-plane band-collision pairs (a_id ≠ b_id), deduped
+    * payload-free: every vector a source, never all-pairs. */
+  private def bandPairs32(q: DataFrame): DataFrame = {
+    val bl = lshBandRows32(q)
+    bl.as("a").join(bl.as("b"),
+        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
+          col("a.vec_id") =!= col("b.vec_id"))
+      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
+      .distinct()
+  }
+
+  /** The 16-bit signature `sig` of each (vec_id, carry…, sig) row split
+    * into four 4-bit bands: (vec_id, carry…, band, nibble). */
+  private def nibbleBands(sigs: DataFrame, carry: String*): DataFrame = {
+    val keep = col("vec_id") +: carry.map(col)
+    sigs.select(keep :+ explode(expr("transform(sequence(0, 3), b -> named_struct(" +
+        "'band', b, 'nibble', shiftright(sig, b * 4) % 16))")).as("bn"): _*)
+      .select(keep ++ Seq(col("bn.band").as("band"), col("bn.nibble").as("nibble")): _*)
+  }
+
+  /** Label-blocked embedding near-dup pairs: same label, a_id < b_id,
+    * cosine >= 0.35 (block-local pairs instead of all-pairs). Projects
+    * `out` plus the pair's cosine. */
+  private def labelBlockedNear(q: DataFrame, out: Column*): DataFrame = {
+    val a = q.select(col("label").as("la"), col("vec_id").as("a_id"),
+      col("qv").as("qa"), col("nq").as("na"))
+    val b = q.select(col("label").as("lb"), col("vec_id").as("b_id"),
+      col("qv").as("qb"), col("nq").as("nb"))
+    a.join(b, col("la") === col("lb") && col("a_id") < col("b_id"))
+      .select(out :+ pairCosine: _*)
+      .filter(col("cosine") >= 0.35)
+  }
 
   /** (a_id, b_id, est_bp, jac_bp) over the doc_id < 100 banded
     * candidate set — the 8-hash minhash ESTIMATE next to the exact
@@ -81,15 +213,8 @@ object Similarity {
     * estimate query reports). */
   private def minhashEstFrame(s: SparkSession, d: String): DataFrame = {
     val dw = docWords(s, d).filter(col("doc_id") < 100)
-    val sigs = minhashSigsLocal(
-      docToks(load(s, d, "documents").filter(col("doc_id") < 100)), 1)
-    val bands = sigs.select(col("doc_id"), explode(array(bandSig: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
-    val cand = bands.select(col("doc_id").as("a_id"), col("band"), col("sig"))
-      .join(bands.select(col("doc_id").as("b_id"), col("band"), col("sig")),
-        Seq("band", "sig"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id")).distinct()
+    val sigs = minhashBlockSigs(s, d)
+    val cand = bandCollisions(sigs).select(col("a_id"), col("b_id")).distinct()
     val sa = sigs.select((col("doc_id").as("a_id") +:
       (0 until 8).map(i => col(s"m$i").as(s"a$i"))): _*)
     val sb = sigs.select((col("doc_id").as("b_id") +:
@@ -106,8 +231,7 @@ object Similarity {
     * (`array_distinct` before the explode) — no corpus-wide shuffle. */
   private def docWords(s: SparkSession, d: String): DataFrame =
     load(s, d, "documents")
-      .select(col("doc_id"),
-        explode(expr("array_distinct(filter(split(text, ' '), x -> x <> ''))")).as("word"))
+      .select(col("doc_id"), explode(expr(s"array_distinct($tokens)")).as("word"))
 
   /** Per-document 8-hash MinHash signature over space-joined `gramN`-
     * grams of the whitespace tokens. The md5(i|gram) family is a pure
@@ -134,7 +258,7 @@ object Similarity {
 
   /** (doc_id, toks): the whitespace tokens of each document's text. */
   private def docToks(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), expr("filter(split(text, ' '), x -> x <> '')").as("toks"))
+    docs.select(col("doc_id"), expr(tokens).as("toks"))
 
   /** 4 bands of 2 minhashes → per-band order-insensitive md5 signature. */
   private val bandSig: Seq[Column] = (0 until 4).map(b =>
@@ -142,22 +266,42 @@ object Similarity {
       md5(concat(least(col(s"m${2 * b}"), col(s"m${2 * b + 1}")),
         greatest(col(s"m${2 * b}"), col(s"m${2 * b + 1}"))).cast("binary")).as("sig")))
 
+  /** (doc_id, band, sig) rows of a [[minhashSigsLocal]] frame. */
+  private def minhashBands(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), explode(array(bandSig: _*)).as("bs"))
+      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+
+  /** Unigram minhash signatures of the doc_id < 100 block — the bounded
+    * block whose band pairs the oracled minhash and graph queries share. */
+  private[graft] def minhashBlockSigs(s: SparkSession, d: String): DataFrame =
+    minhashSigsLocal(docToks(load(s, d, "documents").filter(col("doc_id") < 100)), 1)
+
+  /** Band-bucket collisions of a signature frame: one (band, sig, a_id,
+    * b_id) row per band two docs share, a_id < b_id. */
+  private[graft] def bandCollisions(sigs: DataFrame): DataFrame = {
+    val bands = minhashBands(sigs)
+    bands.select(col("doc_id").as("a_id"), col("band"), col("sig"))
+      .join(bands.select(col("doc_id").as("b_id"), col("band"), col("sig")),
+        Seq("band", "sig"))
+      .filter(col("a_id") < col("b_id"))
+  }
+
   /** distinct 4-token shingles per document — the near-dup unit
     * (unigram sets merge the whole corpus into one component). */
   def fourGramShingles(docs: DataFrame): DataFrame = {
     graft.functions.TextExprs.register(docs.sparkSession)
     docs
-      .withColumn("toks", expr("filter(split(text, ' '), x -> x <> '')"))
+      .withColumn("toks", expr(tokens))
       .select(col("doc_id"),
         explode(expr(Shingles.fourGramSql(distinct = true))).as("word"))
   }
 
-  /** Verified SimHash band candidates `(a_id, b_id, hamming)` — ONE
-    * definition shared by q_simhash_pairs and q_simhash_cluster so the
-    * oracled queries can never drift on the signature/banding rules.
-    * Signature is the codegen'd row-local `graft_simhash` fold
-    * (functions.SimHash64); NULL (shingle-less) docs are excluded
-    * exactly like the SQL formulation's absence of rows.
+  /** Verified SimHash band candidates `(a_id, b_id, hamming)` of
+    * q_simhash_pairs and q_simhash_cluster (a shared stage, see the
+    * object scaladoc). Signature is the codegen'd row-local
+    * `graft_simhash` fold (functions.SimHash64); NULL (shingle-less)
+    * docs are excluded exactly like the SQL formulation's absence of
+    * rows.
     *
     * Banding is MULTI-PROBE over FOUR 16-bit bands (VERDICT r16 #2:
     * the r16 8×8-bit banding guaranteed recall to Hamming 7 but at
@@ -233,10 +377,9 @@ object Similarity {
     * the tokenized corpus for its quality/decontamination stages, so
     * the near-dup stage must not re-read and re-tokenize raw text. */
   private[graft] def lshBucketsFromToks(toks: DataFrame): DataFrame =
-    minhashSigsLocal(toks, 4)
-      .select(col("doc_id"), explode(array(bandSig: _*)).as("bs"))
+    minhashBands(minhashSigsLocal(toks, 4))
       .select(col("doc_id"),
-        concat(col("bs.band").cast("string"), lit("|"), col("bs.sig")).as("bucket"))
+        concat(col("band").cast("string"), lit("|"), col("sig")).as("bucket"))
 
   /** The minhash-LSH dedup-cluster label frame (doc_id, lbl) — shared
     * kernel of q_dedup_cluster and q_dedup_survivor. */
@@ -299,6 +442,26 @@ object Similarity {
       prevSum = lblSum(next)
       prevSum.compareTo(prev) == 0
     } finally Checkpoints.release(membC)
+  }
+
+  /** (doc_id, cluster, is_canon) of hash-min labels: the cluster is the
+    * component-minimum doc_id, which is also its canonical member. */
+  private def clusterOf(labels: DataFrame): DataFrame =
+    labels.select(col("doc_id"), col("lbl").as("cluster"),
+      (col("doc_id") === col("lbl")).as("is_canon"))
+
+  /** [[clusterOf]] the connected components of verified (a_id, b_id)
+    * pairs over the `ids` doc set: each pair is a 2-member bucket of the
+    * bipartite [[hashMinLabels]] graph, so a hop costs |pairs| rows.
+    * Both memberships of a pair-bucket come out of ONE pass (r21, guide
+    * §2.4) — a union of two selects of `pairs` re-ran the candidate-pair
+    * subtree per branch. */
+  private def pairClusters(pairs: DataFrame, ids: DataFrame): DataFrame = {
+    val memb = pairs
+      .select(concat(col("a_id").cast("string"), lit("|"), col("b_id").cast("string"))
+        .as("bucket"), explode(array(col("a_id"), col("b_id"))).as("doc_id"))
+      .select(col("doc_id"), col("bucket"))
+    clusterOf(hashMinLabels(memb, ids))
   }
 
   /** Exact Jaccard in basis points for candidate (a_id, b_id) pairs,
@@ -372,14 +535,8 @@ object Similarity {
     * audit. */
   private def ivfTop3(s: SparkSession, d: String): DataFrame = {
     val q = quantized(s, d)
-    val cents = q.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("c_id"), col("qv").as("qc"), col("nq").as("nc"))
-    val centCos = q.crossJoin(broadcast(cents))
-      .select(col("vec_id").as("v_id"), col("c_id"), col("qv"), col("nq"),
-        cosine(dotQ("qv", "qc"), col("nq"), col("nc")).as("ccos"))
-    val wCell = Window.partitionBy(col("v_id"))
-      .orderBy(col("ccos").desc, col("c_id").asc)
-    val ranked = centCos.withColumn("crn", row_number().over(wCell))
+    val ranked = rankCells(q, seedCentroids(q), "v_id", "qv", "nq",
+      col("vec_id").as("v_id"), col("c_id"), col("qv"), col("nq"))
     val assign = ranked.filter(col("crn") === 1)
       .select(col("v_id").as("b_id"), col("c_id").as("cell"),
         col("qv").as("qb"), col("nq").as("nb"))
@@ -387,13 +544,9 @@ object Similarity {
         col("v_id") >= 50 && col("v_id") < 60)
       .select(col("v_id").as("a_id"), col("c_id").as("pcell"),
         col("qv").as("qa"), col("nq").as("na"))
-    val wTop = Window.partitionBy(col("a_id"))
-      .orderBy(col("cosine").desc, col("b_id").asc)
-    probes.join(assign, col("pcell") === col("cell") && col("a_id") =!= col("b_id"))
-      .dropDuplicates("a_id", "b_id")
-      .select(col("a_id"), col("b_id"),
-        cosine(dotQ("qa", "qb"), col("na"), col("nb")).as("cosine"))
-      .withColumn("rn", row_number().over(wTop))
+    rankPairs(probes.join(assign, col("pcell") === col("cell") && col("a_id") =!= col("b_id"))
+        .dropDuplicates("a_id", "b_id")
+        .select(col("a_id"), col("b_id"), pairCosine), col("a_id"))
       .filter(col("rn") <= 3)
       .select(col("a_id"), col("b_id"), col("cosine"), col("rn").cast("long").as("rn"))
   }
@@ -404,17 +557,7 @@ object Similarity {
     // fold over 64 elements.
     "q_cosine_topk" -> ((s, d) => {
       val q = quantized(s, d)
-      val left = q.filter(col("vec_id") < 50)
-        .select(col("vec_id").as("a_id"), col("qv").as("qa"), col("nq").as("na"))
-      val right = q.select(col("vec_id").as("b_id"), col("qv").as("qb"), col("nq").as("nb"))
-      val w = Window.partitionBy(col("a_id"))
-        .orderBy(col("cosine").desc, col("b_id").asc)
-      right.crossJoin(broadcast(left))
-        .filter(col("a_id") =!= col("b_id"))
-        .select(col("a_id"), col("b_id"),
-          cosine(dotQ("qa", "qb"), col("na"), col("nb")).as("cosine"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
+      bruteTopK(pairSide(q.filter(col("vec_id") < 50), "a"), q, 3)
         .select(col("a_id"), col("b_id"), col("cosine"), col("rn").cast("long").as("rn"))
         .orderBy("a_id", "rn")
     }),
@@ -450,18 +593,10 @@ object Similarity {
 
     // Embedding-cosine near-dup, blocked by label (block-local pairs
     // instead of all-pairs — the blocked-dedup shape that scales).
-    "q_embed_neardup" -> ((s, d) => {
-      val q = quantized(s, d)
-      val a = q.select(col("label").as("la"), col("vec_id").as("a_id"),
-        col("qv").as("qa"), col("nq").as("na"))
-      val b = q.select(col("label").as("lb"), col("vec_id").as("b_id"),
-        col("qv").as("qb"), col("nq").as("nb"))
-      a.join(b, col("la") === col("lb") && col("a_id") < col("b_id"))
-        .select(col("la").cast("long").as("label"), col("a_id"), col("b_id"),
-          cosine(dotQ("qa", "qb"), col("na"), col("nb")).as("cosine"))
-        .filter(col("cosine") >= 0.35)
-        .orderBy("a_id", "b_id")
-    }),
+    "q_embed_neardup" -> ((s, d) =>
+      labelBlockedNear(quantized(s, d),
+        col("la").cast("long").as("label"), col("a_id"), col("b_id"))
+        .orderBy("a_id", "b_id")),
 
     // ANN via sign-random-projection LSH: 16 pseudo-random hyperplanes
     // (splitmix64-derived weights, precomputed driver-side and closed
@@ -488,11 +623,7 @@ object Similarity {
       // multi-probe fan-out would otherwise shuffle ~3.4× the vector
       // payload through the pair dedup; payloads join back AFTER the
       // distinct, on the (much smaller) deduped pair set
-      val bands = q.select(col("vec_id"),
-        explode(expr("transform(sequence(0, 3), b -> named_struct(" +
-          "'band', b, 'nibble', shiftright(sig, b * 4) % 16))")).as("bn"))
-        .select(col("vec_id"),
-          col("bn.band").as("band"), col("bn.nibble").as("nibble"))
+      val bands = nibbleBands(q)
       val left = bands.filter(col("vec_id") < 50)
         .select(col("band").as("xband"), col("vec_id").as("a_id"),
           explode(expr("transform(sequence(0, 4), i -> CASE WHEN i = 0" +
@@ -503,14 +634,8 @@ object Similarity {
             col("a_id") =!= col("vec_id"))
         .select(col("a_id"), col("vec_id").as("b_id"))
         .distinct()
-      val va = q.select(col("vec_id").as("a_id"), col("qv").as("qa"), col("nq").as("na"))
-      val vb = q.select(col("vec_id").as("b_id"), col("qv").as("qb"), col("nq").as("nb"))
-      val w = Window.partitionBy(col("a_id"))
-        .orderBy(col("cosine").desc, col("b_id").asc)
-      cands.join(va, "a_id").join(vb, "b_id")
-        .select(col("a_id"), col("b_id"),
-          cosine(dotQ("qa", "qb"), col("na"), col("nb")).as("cosine"))
-        .withColumn("rn", row_number().over(w))
+      rankPairs(withVectors(cands, q).select(col("a_id"), col("b_id"), pairCosine),
+          col("a_id"))
         .filter(col("rn") <= 3)
         .orderBy("a_id", "rn")
     }),
@@ -547,11 +672,7 @@ object Similarity {
           .select(col("vec_id"), col("qv"), col("nq")), store)
       AnnIndexStore.appendBatch(s,
         q.select(col("vec_id"), col("qv"), col("nq")), store, "full")
-      AnnIndexStore.probe(s,
-        q.filter(col("vec_id") >= 50 && col("vec_id") < 60)
-          .select(col("vec_id").as("a_id"), col("qv").as("qa"),
-            col("nq").as("na")), store)
-        .orderBy("a_id", "rn")
+      AnnIndexStore.probe(s, probeQueries(q), store).orderBy("a_id", "rn")
     }),
 
     // ANN probe over the COMPACTED index store (r20 — puts VERDICT
@@ -579,11 +700,7 @@ object Similarity {
             .select(col("vec_id"), col("qv"), col("nq")), store, s"third-$i")
       }
       AnnIndexStore.compact(s, store)
-      AnnIndexStore.probe(s,
-        q.filter(col("vec_id") >= 50 && col("vec_id") < 60)
-          .select(col("vec_id").as("a_id"), col("qv").as("qa"),
-            col("nq").as("na")), store)
-        .orderBy("a_id", "rn")
+      AnnIndexStore.probe(s, probeQueries(q), store).orderBy("a_id", "rn")
     }),
 
     // ANN RECALL audit (third leg of the "measure, don't guess" trio
@@ -594,18 +711,8 @@ object Similarity {
     // hash-oracled — the number a production ANN config decision needs.
     "q_ann_recall" -> ((s, d) => {
       val q = quantized(s, d)
-      val probesQ = q.filter(col("vec_id") >= 50 && col("vec_id") < 60)
-        .select(col("vec_id").as("a_id"), col("qv").as("qa"), col("nq").as("na"))
-      val corpus = q.select(col("vec_id").as("b_id"), col("qv").as("qb"), col("nq").as("nb"))
-      val wTop = Window.partitionBy(col("a_id"))
-        .orderBy(col("cosine").desc, col("b_id").asc)
-      val brute = corpus.crossJoin(broadcast(probesQ))
-        .filter(col("a_id") =!= col("b_id"))
-        .select(col("a_id"), col("b_id"),
-          cosine(dotQ("qa", "qb"), col("na"), col("nb")).as("cosine"))
-        .withColumn("rn", row_number().over(wTop))
-        .filter(col("rn") <= 3)
-        .select(col("a_id"), col("b_id"))
+      val probesQ = probeQueries(q)
+      val brute = bruteTopK(probesQ, q, 3).select(col("a_id"), col("b_id"))
       val hits = ivfTop3(s, d).select(col("a_id"), col("b_id"))
         .join(brute, Seq("a_id", "b_id"), "left_semi")
         .groupBy(col("a_id")).agg(count(lit(1)).as("n_hits"))
@@ -627,22 +734,7 @@ object Similarity {
     // DIV truncates, DuckDB // floors, and dimension sums go negative.
     "q_kmeans_step" -> ((s, d) => {
       val q = quantized(s, d)
-      val cents = q.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("qv").as("qc"), col("nq").as("nc"))
-      val wCell = Window.partitionBy(col("v_id"))
-        .orderBy(col("ccos").desc, col("c_id").asc)
-      // assignment key is the RAW cosine (no round): it's only an
-      // ordering key, and the unrounded quotient of identical integer
-      // dot/norms is bit-identical IEEE math in both engines — round()
-      // would reintroduce the Spark-vs-DuckDB boundary-rounding risk
-      // for zero benefit
-      val assign = q.crossJoin(broadcast(cents))
-        .select(col("vec_id").as("v_id"), col("c_id"), col("qv"),
-          (dotQ("qv", "qc").cast("double") /
-            (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
-            .as("ccos"))
-        .withColumn("crn", row_number().over(wCell))
-        .filter(col("crn") === 1)
+      val assign = nearestCellRaw(q, seedCentroids(q), col("qv"))
         .select(col("c_id").as("cell"), col("qv"))
       assign.select(col("cell"), posexplode(col("qv")))
         .groupBy(col("cell"), col("pos"))
@@ -673,19 +765,10 @@ object Similarity {
     // arrays (k·dims rows — driver never collects them).
     "q_kmeans_multi" -> ((s, d) => {
       val q = quantized(s, d)
-      val wCell = Window.partitionBy(col("v_id"))
-        .orderBy(col("ccos").desc, col("c_id").asc)
-      // raw-cosine assignment key + integer mean: same conventions as
-      // q_kmeans_step (see the comments there)
+      // raw-cosine assignment (nearestCellRaw) + integer mean: same
+      // conventions as q_kmeans_step
       def assign(cents: DataFrame): DataFrame =
-        q.crossJoin(broadcast(cents))
-          .select(col("vec_id").as("v_id"), col("c_id"), col("qv"),
-            (dotQ("qv", "qc").cast("double") /
-              (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
-              .as("ccos"))
-          .withColumn("crn", row_number().over(wCell))
-          .filter(col("crn") === 1)
-          .select(col("c_id").as("cell"), col("qv"))
+        nearestCellRaw(q, cents, col("qv")).select(col("c_id").as("cell"), col("qv"))
       def means(assigned: DataFrame): DataFrame =
         assigned.select(col("cell"), posexplode(col("qv")))
           .groupBy(col("cell"), col("pos"))
@@ -693,9 +776,7 @@ object Similarity {
           .withColumn("mean_q",
             expr("CASE WHEN dim_sum >= 0 THEN dim_sum DIV n_members" +
               " ELSE -((-dim_sum) DIV n_members) END"))
-      val cents0 = q.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("qv").as("qc"), col("nq").as("nc"))
-      val m1 = Checkpoints.ckpt(means(assign(cents0)))
+      val m1 = Checkpoints.ckpt(means(assign(seedCentroids(q))))
       val cents1 = m1
         .groupBy(col("cell"))
         .agg(expr("transform(array_sort(collect_list(struct(pos, mean_q)))," +
@@ -756,17 +837,7 @@ object Similarity {
     // per-vector window over the 16 broadcast candidates.
     "q_centroid_outlier" -> ((s, d) => {
       val q = quantized(s, d)
-      val cents = q.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("qv").as("qc"), col("nq").as("nc"))
-      val wCell = Window.partitionBy(col("v_id"))
-        .orderBy(col("ccos").desc, col("c_id").asc)
-      q.crossJoin(broadcast(cents))
-        .select(col("vec_id").as("v_id"), col("c_id"),
-          (dotQ("qv", "qc").cast("double") /
-            (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
-            .as("ccos"))
-        .withColumn("crn", row_number().over(wCell))
-        .filter(col("crn") === 1)
+      nearestCellRaw(q, seedCentroids(q))
         .select(col("v_id").as("vec_id"), col("c_id").as("cell"),
           (round(col("ccos"), 4) + lit(0d)).as("cos_r"))
         .orderBy(col("cos_r").asc, col("vec_id").asc)
@@ -779,9 +850,7 @@ object Similarity {
     // minhashSigs) — no vocabulary table, no broadcast, no join; the
     // plan is explode → codegen'd md5 columns → one hash aggregate.
     "q_minhash_dedup" -> ((s, d) => {
-      val sigs = minhashSigsLocal(docToks(load(s, d, "documents")), 1)
-      sigs.select(col("doc_id"), explode(array(bandSig: _*)).as("bs"))
-        .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+      minhashBands(minhashSigsLocal(docToks(load(s, d, "documents")), 1))
         .groupBy(col("band"), col("sig"))
         .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc"),
           max(col("doc_id")).as("max_doc"))
@@ -792,18 +861,10 @@ object Similarity {
     // The bucket-JOIN stage of minhash LSH: candidate pairs from shared
     // band signatures (bounded block so the oracle output stays small);
     // n_bands = how many of the 4 bands collide.
-    "q_minhash_pairs" -> ((s, d) => {
-      val sigs = minhashSigsLocal(
-        docToks(load(s, d, "documents").filter(col("doc_id") < 100)), 1)
-      val bands = sigs.select(col("doc_id"), explode(array(bandSig: _*)).as("bs"))
-        .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
-      bands.select(col("doc_id").as("a_id"), col("band"), col("sig"))
-        .join(bands.select(col("doc_id").as("b_id"), col("band"), col("sig")),
-          Seq("band", "sig"))
-        .filter(col("a_id") < col("b_id"))
+    "q_minhash_pairs" -> ((s, d) =>
+      bandCollisions(minhashBlockSigs(s, d))
         .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("n_bands"))
-        .orderBy("a_id", "b_id")
-    }),
+        .orderBy("a_id", "b_id")),
 
     // Sketch-accuracy measurement ("measure, don't guess" applied to the
     // sketches themselves): for every band-collision candidate pair, the
@@ -902,21 +963,11 @@ object Similarity {
     // cluster diameter — identical scale posture to its two siblings.
     "q_simhash_cluster" -> ((s, d) => {
       val pairs = simhashCandidates(s, d)
-        .filter(col("hamming") <= 6)
-        .select(col("a_id"), col("b_id"))
-      val bucket = concat(col("a_id").cast("string"), lit("|"), col("b_id").cast("string"))
-      // r21 (guide §2.4): both memberships of a pair-bucket come out of
-      // ONE pass — the former union of two selects of `pairs` re-ran
-      // the candidate-pair subtree per branch
-      val memb = pairs
-        .select(bucket.as("bucket"),
-          explode(array(col("a_id"), col("b_id"))).as("doc_id"))
-        .select(col("doc_id"), col("bucket"))
-      val ids = load(s, d, "documents").select(col("doc_id"))
-      hashMinLabels(memb, ids)
-        .select(col("doc_id"), col("lbl").as("cluster"),
-          (col("doc_id") === col("lbl")).as("is_canon"))
-        .orderBy("doc_id")
+        .filter(col("hamming") <= 6).select(col("a_id"), col("b_id"))
+      val clusters = pairClusters(pairs, load(s, d, "documents").select(col("doc_id")))
+      // the labels are materialized: the signature checkpoint has no reader left
+      Checkpoints.release(pairs)
+      clusters.orderBy("doc_id")
     }),
 
     // EDIT-DISTANCE near-dup — the character-level member of the
@@ -992,14 +1043,11 @@ object Similarity {
           col("qv").as("qa"), col("nq").as("na"))
       val right = q.select(col("vec_id").as("b_id"), col("label").as("b_label"),
         col("qv").as("qb"), col("nq").as("nb"))
-      val w = Window.partitionBy(col("a_id"), col("is_pos"))
-        .orderBy(col("cosine").desc, col("b_id").asc)
-      right.crossJoin(broadcast(left))
-        .filter(col("a_id") =!= col("b_id"))
-        .select(col("a_id"),
-          (col("a_label") === col("b_label")).as("is_pos"), col("b_id"),
-          cosine(dotQ("qa", "qb"), col("na"), col("nb")).as("cosine"))
-        .withColumn("rn", row_number().over(w))
+      rankPairs(right.crossJoin(broadcast(left))
+          .filter(col("a_id") =!= col("b_id"))
+          .select(col("a_id"),
+            (col("a_label") === col("b_label")).as("is_pos"), col("b_id"), pairCosine),
+          col("a_id"), col("is_pos"))
         .filter(col("rn") === 1)
         .groupBy(col("a_id"))
         .agg(max(when(col("is_pos"), col("b_id"))).as("pos_id"),
@@ -1015,9 +1063,9 @@ object Similarity {
     // for the whole corpus — classifier-based quality filtering at
     // pretraining scale bootstraps exactly this way): vectors with
     // vec_id % 5 = 0 play the unlabeled 20%, everyone else is seed.
-    // Candidates come from the SAME 32-plane/4×8-bit band rows as
-    // q_knn_graph (lshBandRows32 — shared definition, so the two
-    // oracled queries cannot drift); each unlabeled node takes its
+    // Candidates come from the 32-plane/4×8-bit band rows of
+    // q_knn_graph (lshBandRows32, a shared stage), restricted to
+    // unlabeled × seed pairs; each unlabeled node takes its
     // top-5 labeled candidates by exact integer-dot cosine and adopts
     // the majority label (votes DESC, label ASC tie-break). `correct`
     // compares the adopted label against the held-out truth, making
@@ -1034,18 +1082,11 @@ object Similarity {
           col("a.band") === col("b.band") && col("a.bv") === col("b.bv"))
         .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
         .distinct()
-      val va = q.select(col("vec_id").as("a_id"), col("qv").as("qa"),
-        col("nq").as("na"), col("label").as("a_label"))
-      val vb = q.select(col("vec_id").as("b_id"), col("qv").as("qb"),
-        col("nq").as("nb"), col("label").as("b_label"))
-      val w = Window.partitionBy(col("a_id"))
-        .orderBy(col("cosine").desc, col("b_id").asc)
       val wv = Window.partitionBy(col("a_id"))
         .orderBy(col("votes").desc, col("b_label").asc)
-      cands.join(va, "a_id").join(vb, "b_id")
-        .select(col("a_id"), col("a_label"), col("b_id"), col("b_label"),
-          cosine(dotQ("qa", "qb"), col("na"), col("nb")).as("cosine"))
-        .withColumn("rn", row_number().over(w))
+      rankPairs(withVectors(cands, q, "label")
+          .select(col("a_id"), col("a_label"), col("b_id"), col("b_label"), pairCosine),
+          col("a_id"))
         .filter(col("rn") <= 5)
         .groupBy(col("a_id"), col("a_label"), col("b_label"))
         .agg(count(lit(1)).as("votes"))
@@ -1085,43 +1126,41 @@ object Similarity {
       // vector re-attach sides, the seed set, the truth join) —
       // checkpoint the scan+quantize once
       val q = Checkpoints.ckpt(quantized(s, d))
-      val bl = lshBandRows32(q)
-      val adj = bl.as("a").join(bl.as("b"),
-          col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-            col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-        .distinct()
-      val va = q.select(col("vec_id").as("a_id"), col("qv").as("qa"),
-        col("nq").as("na"))
-      val vb = q.select(col("vec_id").as("b_id"), col("qv").as("qb"),
-        col("nq").as("nb"))
-      val adjc = Checkpoints.ckpt(adj.join(va, "a_id").join(vb, "b_id")
-        .select(col("a_id"), col("b_id"),
-          cosine(dotQ("qa", "qb"), col("na"), col("nb")).as("cosine")))
-      val w = Window.partitionBy(col("a_id"))
-        .orderBy(col("cosine").desc, col("b_id").asc)
+      val adjc = Checkpoints.ckpt(withVectors(bandPairs32(q), q)
+        .select(col("a_id"), col("b_id"), pairCosine))
       val wv = Window.partitionBy(col("a_id"))
         .orderBy(col("votes").desc, col("lbl").asc)
       var labeled = Checkpoints.ckpt(q.filter(col("vec_id") % 20 === 1)
         .select(col("vec_id"), col("label").as("lbl")))
       var out: Option[DataFrame] = None
       var done = false
+      // each superseded label table, an empty hop's adoptions and, after
+      // the last hop, adjc and the final labels are released once
+      // nothing left to run reads them; the result reads only the
+      // adopted rounds and q
       for (hop <- 1 to 3 if !done) {
-        val adopted = Checkpoints.ckpt(adjc
-          .join(labeled.withColumnRenamed("vec_id", "b_id"), "b_id")
-          .join(labeled.select(col("vec_id").as("a_id")), Seq("a_id"), "left_anti")
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
+        val adopted = Checkpoints.ckpt(rankPairs(adjc
+            .join(labeled.withColumnRenamed("vec_id", "b_id"), "b_id")
+            .join(labeled.select(col("vec_id").as("a_id")), Seq("a_id"), "left_anti"),
+            col("a_id"))
+          .filter(col("rn") <= 5)
           .groupBy(col("a_id"), col("lbl")).agg(count(lit(1)).as("votes"))
           .withColumn("pr", row_number().over(wv)).filter(col("pr") === 1)
           .select(col("a_id"), col("lbl"), col("votes"),
             lit(hop).cast("long").as("hop")))
-        if (adopted.isEmpty) done = true
-        else {
-          labeled = Checkpoints.ckpt(labeled.unionByName(
+        if (adopted.isEmpty) {
+          Checkpoints.release(adopted)
+          done = true
+        } else {
+          val next = Checkpoints.ckpt(labeled.unionByName(
             adopted.select(col("a_id").as("vec_id"), col("lbl"))))
+          Checkpoints.release(labeled)
+          labeled = next
           out = Some(out.map(_.unionByName(adopted)).getOrElse(adopted))
         }
       }
+      Checkpoints.release(labeled)
+      Checkpoints.release(adjc)
       val truth = q.select(col("vec_id").as("t_id"), col("label"))
       out.getOrElse(s.range(0).select(col("id").as("a_id"),
           col("id").cast("int").as("lbl"), col("id").as("votes"),
@@ -1135,11 +1174,9 @@ object Similarity {
 
     // Corpus-wide HARD-NEGATIVE mining (VERDICT r16 next-round #8;
     // q_contrastive_pairs stays the bounded-anchor oracled base):
-    // EVERY vector is an anchor, candidates come from the SAME
-    // lshBandRows32 banding as q_knn_graph/q_label_prop (shared
-    // definition — the three oracled queries cannot drift on the
-    // candidate rule), the hardest positive is the highest-cosine
-    // SAME-label candidate and the hardest negative the
+    // EVERY vector is an anchor, candidates are q_knn_graph's band
+    // pairs (bandPairs32, a shared stage), the hardest positive is the
+    // highest-cosine SAME-label candidate and the hardest negative the
     // highest-cosine DIFFERENT-label candidate. Anchors whose
     // buckets lack either side emit no row — identically in both
     // engines. Scale posture is q_knn_graph's: band bucket-join
@@ -1155,23 +1192,10 @@ object Similarity {
       // candidate chain pays the materialization job without a second
       // heavy consumer to amortize it, so the plain frame stays
       val q = quantized(s, d)
-      val bl = lshBandRows32(q)
-      val cands = bl.as("a").join(bl.as("b"),
-          col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-            col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-        .distinct()
-      val va = q.select(col("vec_id").as("a_id"), col("qv").as("qa"),
-        col("nq").as("na"), col("label").as("a_label"))
-      val vb = q.select(col("vec_id").as("b_id"), col("qv").as("qb"),
-        col("nq").as("nb"), col("label").as("b_label"))
-      val w = Window.partitionBy(col("a_id"), col("is_pos"))
-        .orderBy(col("cosine").desc, col("b_id").asc)
-      cands.join(va, "a_id").join(vb, "b_id")
-        .select(col("a_id"),
-          (col("a_label") === col("b_label")).as("is_pos"), col("b_id"),
-          cosine(dotQ("qa", "qb"), col("na"), col("nb")).as("cosine"))
-        .withColumn("rn", row_number().over(w))
+      rankPairs(withVectors(bandPairs32(q), q, "label")
+          .select(col("a_id"),
+            (col("a_label") === col("b_label")).as("is_pos"), col("b_id"), pairCosine),
+          col("a_id"), col("is_pos"))
         .filter(col("rn") === 1)
         .groupBy(col("a_id"))
         .agg(max(when(col("is_pos"), col("b_id"))).as("pos_id"),
@@ -1194,11 +1218,7 @@ object Similarity {
     // by the cluster diameter (tiny for near-dup graphs); each hop
     // checkpoints (Checkpoints.ckpt — reliable when
     // spark.graft.checkpointDir is set) so lineage stays flat.
-    "q_dedup_cluster" -> ((s, d) =>
-      dedupLabels(s, d)
-        .select(col("doc_id"), col("lbl").as("cluster"),
-          (col("doc_id") === col("lbl")).as("is_canon"))
-        .orderBy("doc_id")),
+    "q_dedup_cluster" -> ((s, d) => clusterOf(dedupLabels(s, d)).orderBy("doc_id")),
 
     // DEDUP SURVIVORSHIP + SOFT-DEDUP WEIGHTS — the policy step AFTER
     // clustering (q_dedup_cluster stops at labels): per near-dup
@@ -1249,28 +1269,11 @@ object Similarity {
       // the scan+quantize per side (at 100 TB: one embedding-corpus
       // pass, not two)
       val q = Checkpoints.ckpt(quantized(s, d))
-      val a = q.select(col("label").as("la"), col("vec_id").as("a_id"),
-        col("qv").as("qa"), col("nq").as("na"))
-      val b = q.select(col("label").as("lb"), col("vec_id").as("b_id"),
-        col("qv").as("qb"), col("nq").as("nb"))
-      val pairs = a.join(b, col("la") === col("lb") && col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id"),
-          cosine(dotQ("qa", "qb"), col("na"), col("nb")).as("cosine"))
-        .filter(col("cosine") >= 0.35)
-        .select(col("a_id"), col("b_id"))
-      val bucket = concat(col("a_id").cast("string"), lit("|"), col("b_id").cast("string"))
-      // r21 (guide §2.4): both memberships of a pair-bucket come out of
-      // ONE pass — the former union of two selects of `pairs` re-ran
-      // the candidate-pair subtree per branch
-      val memb = pairs
-        .select(bucket.as("bucket"),
-          explode(array(col("a_id"), col("b_id"))).as("doc_id"))
-        .select(col("doc_id"), col("bucket"))
-      val ids = load(s, d, "embeddings").select(col("vec_id").as("doc_id"))
-      hashMinLabels(memb, ids)
-        .select(col("doc_id").as("vec_id"), col("lbl").as("cluster"),
-          (col("doc_id") === col("lbl")).as("is_canon"))
-        .orderBy("vec_id")
+      val clusters = pairClusters(
+        labelBlockedNear(q, col("a_id"), col("b_id")).select(col("a_id"), col("b_id")),
+        load(s, d, "embeddings").select(col("vec_id").as("doc_id")))
+      Checkpoints.release(q) // the labels are materialized
+      clusters.withColumnRenamed("doc_id", "vec_id").orderBy("vec_id")
     }),
 
     // Deterministic-hyperplane LSH ANN: q_ann_lsh's shape with the
@@ -1289,14 +1292,8 @@ object Similarity {
       // 16×64 literal matrix into an interpreted zip_with fold, the
       // r15 expression is the same math one JIT'd loop). The ORACLE
       // still derives identical weights from MD5 in SQL.
-      val sigExpr = "graft_lshsig_md5(qv, 16)"
-      val bands = q
-        .select(col("vec_id"), col("qv"), col("nq"), expr(sigExpr).as("sig"))
-        .select(col("vec_id"), col("qv"), col("nq"),
-          explode(expr("transform(sequence(0, 3), b -> named_struct(" +
-            "'band', b, 'nibble', shiftright(sig, b * 4) % 16))")).as("bn"))
-        .select(col("vec_id"), col("qv"), col("nq"),
-          col("bn.band").as("band"), col("bn.nibble").as("nibble"))
+      val bands = nibbleBands(q.select(col("vec_id"), col("qv"), col("nq"),
+        expr("graft_lshsig_md5(qv, 16)").as("sig")), "qv", "nq")
       val left = bands.filter(col("vec_id") < 50)
         .select(col("band").as("xband"), col("nibble").as("xnibble"),
           col("vec_id").as("a_id"), col("qv").as("qa"), col("nq").as("na"))
@@ -1306,12 +1303,7 @@ object Similarity {
         .select(col("a_id"), col("vec_id").as("b_id"), col("qa"), col("na"),
           col("qv").as("qb"), col("nq").as("nb"))
         .dropDuplicates("a_id", "b_id")
-      val w = Window.partitionBy(col("a_id"))
-        .orderBy(col("cosine").desc, col("b_id").asc)
-      cands
-        .select(col("a_id"), col("b_id"),
-          cosine(dotQ("qa", "qb"), col("na"), col("nb")).as("cosine"))
-        .withColumn("rn", row_number().over(w))
+      rankPairs(cands.select(col("a_id"), col("b_id"), pairCosine), col("a_id"))
         .filter(col("rn") <= 3)
         .select(col("a_id"), col("b_id"), col("cosine"), col("rn").cast("long").as("rn"))
         .orderBy("a_id", "rn")
@@ -1331,12 +1323,8 @@ object Similarity {
     // the price (≤ 5× bucket occupancy, corpus index unchanged).
     "q_ann_lsh_probes" -> ((s, d) => {
       val q = quantized(s, d)
-      val bands = q
-        .select(col("vec_id"), expr("graft_lshsig_md5(qv, 16)").as("sig"))
-        .select(col("vec_id"),
-          explode(expr("transform(sequence(0, 3), b -> named_struct(" +
-            "'band', b, 'nibble', shiftright(sig, b * 4) % 16))")).as("bn"))
-        .select(col("vec_id"), col("bn.band").as("band"), col("bn.nibble").as("nibble"))
+      val bands = nibbleBands(
+        q.select(col("vec_id"), expr("graft_lshsig_md5(qv, 16)").as("sig")))
       val probes = bands.filter(col("vec_id") >= 50 && col("vec_id") < 60)
         .select(col("vec_id").as("a_id"), col("band").as("pband"),
           col("nibble").as("pnib0"))
@@ -1352,28 +1340,13 @@ object Similarity {
           col("vec_id") =!= col("a_id"))
         .select(col("mode"), col("a_id"), col("vec_id").as("b_id"))
         .distinct()
-      val va = q.select(col("vec_id").as("a_id"), col("qv").as("qa"), col("nq").as("na"))
-      val vb = q.select(col("vec_id").as("b_id"), col("qv").as("qb"), col("nq").as("nb"))
-      val wm = Window.partitionBy(col("mode"), col("a_id"))
-        .orderBy(col("cosine").desc, col("b_id").asc)
-      val top3 = cands.join(va, "a_id").join(vb, "b_id")
-        .select(col("mode"), col("a_id"), col("b_id"),
-          cosine(dotQ("qa", "qb"), col("na"), col("nb")).as("cosine"))
-        .withColumn("rn", row_number().over(wm))
+      val top3 = rankPairs(withVectors(cands, q)
+          .select(col("mode"), col("a_id"), col("b_id"), pairCosine),
+          col("mode"), col("a_id"))
         .filter(col("rn") <= 3)
         .select(col("mode"), col("a_id"), col("b_id"))
-      val probesQ = q.filter(col("vec_id") >= 50 && col("vec_id") < 60)
-        .select(col("vec_id").as("a_id"), col("qv").as("qa"), col("nq").as("na"))
-      val wb = Window.partitionBy(col("a_id"))
-        .orderBy(col("cosine").desc, col("b_id").asc)
-      val brute = q.select(col("vec_id").as("b_id"), col("qv").as("qb"), col("nq").as("nb"))
-        .crossJoin(broadcast(probesQ))
-        .filter(col("a_id") =!= col("b_id"))
-        .select(col("a_id"), col("b_id"),
-          cosine(dotQ("qa", "qb"), col("na"), col("nb")).as("cosine"))
-        .withColumn("rn", row_number().over(wb))
-        .filter(col("rn") <= 3)
-        .select(col("a_id"), col("b_id"))
+      val probesQ = probeQueries(q)
+      val brute = bruteTopK(probesQ, q, 3).select(col("a_id"), col("b_id"))
       val hits = top3.join(brute, Seq("a_id", "b_id"), "left_semi")
         .groupBy(col("mode"), col("a_id")).agg(count(lit(1)).as("n_hits"))
       val nc = cands.groupBy(col("mode"), col("a_id")).agg(count(lit(1)).as("n_cands"))
@@ -1405,25 +1378,14 @@ object Similarity {
       // r21 (guide §5): q feeds four subtrees (both band sides, both
       // vector re-attach sides) — checkpoint the scan+quantize once
       val q = Checkpoints.ckpt(quantized(s, d))
-      val bl = lshBandRows32(q)
-      val cands = bl.as("a").join(bl.as("b"),
-          col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-            col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-        .distinct()
-      val va = q.select(col("vec_id").as("a_id"), col("qv").as("qa"), col("nq").as("na"))
-      val vb = q.select(col("vec_id").as("b_id"), col("qv").as("qb"), col("nq").as("nb"))
-      val w = Window.partitionBy(col("a_id"))
-        .orderBy(col("cosine").desc, col("b_id").asc)
       // r21 (guide §5): the top-3 edge list is read TWICE (its own rows
       // + the reversed copy probing mutuality) — without the checkpoint
       // the whole candidate-join + window subtree evaluated once per
       // branch
-      val knn = Checkpoints.ckpt(cands.join(va, "a_id").join(vb, "b_id")
-        .select(col("a_id"), col("b_id"),
-          cosine(dotQ("qa", "qb"), col("na"), col("nb")).as("cosine"))
-        .withColumn("rn", row_number().over(w))
+      val knn = Checkpoints.ckpt(rankPairs(withVectors(bandPairs32(q), q)
+          .select(col("a_id"), col("b_id"), pairCosine), col("a_id"))
         .filter(col("rn") <= 3))
+      Checkpoints.release(q) // knn is materialized
       val rev = knn.select(col("a_id").as("r_a"), col("b_id").as("r_b"))
       knn.join(rev, col("a_id") === col("r_b") && col("b_id") === col("r_a"), "left")
         .select(col("a_id"), col("rn").cast("long").as("rn"), col("b_id"),
@@ -1445,17 +1407,7 @@ object Similarity {
     // (q_histogram_eqd), the selection rule is unchanged.
     "q_cluster_sample" -> ((s, d) => {
       val q = quantized(s, d)
-      val cents = q.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("qv").as("qc"), col("nq").as("nc"))
-      val wCell = Window.partitionBy(col("v_id"))
-        .orderBy(col("ccos").desc, col("c_id").asc)
-      val assign = q.crossJoin(broadcast(cents))
-        .select(col("vec_id").as("v_id"), col("c_id"),
-          (dotQ("qv", "qc").cast("double") /
-            (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
-            .as("ccos"))
-        .withColumn("crn", row_number().over(wCell))
-        .filter(col("crn") === 1)
+      val assign = nearestCellRaw(q, seedCentroids(q))
         .select(col("v_id"), col("c_id").as("cell"))
       val sz = assign.groupBy(col("cell")).agg(count(lit(1)).as("cell_n"))
       val wRank = Window.partitionBy(col("cell"))
@@ -1521,7 +1473,7 @@ object Similarity {
       graft.functions.TextExprs.register(s) // graft_grams (r21)
       val bigrams = load(s, d, "documents")
         .filter(col("doc_id") < 40)
-        .withColumn("toks", expr("filter(split(text, ' '), x -> x <> '')"))
+        .withColumn("toks", expr(tokens))
         .select(col("doc_id"),
           explode(expr("array_distinct(graft_grams(toks, 2))")).as("bg"))
       val sizes = bigrams.groupBy("doc_id").agg(count(lit(1)).as("n"))
@@ -1544,9 +1496,9 @@ object Similarity {
   /** Shared oracle CTE block: quantized vectors, md5-parity 32-plane
     * signature, 4×8-bit bands, the corpus-wide banded adjacency (both
     * directions, a ≠ b), and per-edge exact cosine — the SQL twin of
-    * lshBandRows32 + the keyed cosine re-attach, shared by the
-    * q_label_prop_multi and q_hard_negatives oracles exactly like the
-    * Scala side shares lshBandRows32. */
+    * bandPairs32 + withVectors, shared by the q_label_prop_multi and
+    * q_hard_negatives oracles exactly like the Scala side shares those
+    * stages. */
   private val lshAdjCtes: String =
     """WITH q AS (SELECT vec_id, label,
       |  LIST_TRANSFORM(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 100000000) AS BIGINT)) AS qv

@@ -4,6 +4,7 @@ import graft.Tables.load
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.TokenCountRewrite.tokens
 
 /** Text-analysis operators over `documents` (driver-mandated extension
   * surface: tokenization/word count, per-doc stats, n-gram-heuristic
@@ -21,8 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Text {
   type Q = (SparkSession, String) => DataFrame
-
-  private val tokens = "filter(split(text, ' '), x -> x <> '')"
 
   /** Integer-bp quality components + combined score — the ONE scoring
     * definition shared by q_quality_score and q_ppl_bucket (so the

@@ -148,6 +148,29 @@ class IncrementalDedupSpec extends SparkTestBase {
     assert(IncrementalDedup.dedupDelta(spark, docs, store, BatchId("c6")).count() === 0)
   }
 
+  test("dedupDeltaNear frees its membership checkpoint once the batch lands") {
+    val store = Files.createTempDirectory("graft-neardup-release")
+      .resolve("store").toString
+    val leaked = persistedBy {
+      val kept = IncrementalDedup.dedupDeltaNear(spark,
+        docs.filter(col("doc_id") < 100), store, BatchId("m1"))
+      assert(kept.count() > 0)
+      Checkpoints.release(kept)
+    }
+    assert(leaked.isEmpty, s"still persisted: $leaked")
+  }
+
+  test("q_incr_dedup and q_incr_neardup leave only what their result reads persisted") {
+    for (name <- Seq("q_incr_dedup", "q_incr_neardup")) {
+      val leaked = persistedBy {
+        val r = graft.queries.Pipeline.queries(name)(spark, sfDir)
+        assert(r.collect().nonEmpty)
+        Checkpoints.release(r)
+      }
+      assert(leaked.isEmpty, s"$name: still persisted: $leaked")
+    }
+  }
+
   test("compactStore frees its snapshot checkpoint once the compacted batch lands") {
     val store = Files.createTempDirectory("graft-compact-release")
       .resolve("store").toString

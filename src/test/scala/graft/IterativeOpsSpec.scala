@@ -148,4 +148,13 @@ class IterativeOpsSpec extends SparkTestBase {
     // non-vacuous: the peel genuinely removed nodes but not everything
     assert(expected.nonEmpty && expected.size < docs.length)
   }
+
+  test("q_kcore frees its seed edges and superseded peel rounds") {
+    val leaked = persistedBy {
+      val r = graft.queries.Graph.queries("q_kcore")(spark, sfDir)
+      assert(r.collect().nonEmpty)
+      Checkpoints.release(r)
+    }
+    assert(leaked.isEmpty, s"still persisted: $leaked")
+  }
 }

@@ -362,7 +362,7 @@ class PlanSpec extends SparkTestBase {
     val delta = docs.filter("doc_id >= 50")
     val memb = Similarity.lshBuckets(delta)
     val p = plan(graft.operators.IncrementalDedup
-      .nearDupSurvivorPlan(spark, delta, memb, store, "doc_id"))
+      .nearDupSurvivorPlan(spark, delta, memb, store))
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     assert(p.contains("LeftSemi") && p.contains("LeftAnti"), p)

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import graft.queries.{Aggregates, Similarity}
 import org.apache.spark.sql.functions._
 
@@ -240,6 +244,55 @@ class SimilaritySpec extends SparkTestBase {
       intercept[IllegalStateException](Similarity.hashMinLabels(memb65, docs65))
     }
     assert(failed.isEmpty, s"still persisted: $failed")
+  }
+
+  test("q_label_prop_multi frees every superseded label table and the edge table") {
+    val leaked = persistedBy {
+      val r = Similarity.queries("q_label_prop_multi")(spark, sfDir)
+      assert(r.collect().nonEmpty)
+      Checkpoints.release(r)
+    }
+    assert(leaked.isEmpty, s"still persisted: $leaked")
+  }
+
+  test("near-dup cluster and k-NN queries free the checkpoints their result does not read") {
+    for (name <- Seq("q_simhash_cluster", "q_semdedup_cluster", "q_knn_graph",
+        "q_pipeline_e2e")) {
+      val leaked = persistedBy {
+        val r = SparkEntry.queries(name)(spark, sfDir)
+        assert(r.collect().nonEmpty)
+        Checkpoints.release(r)
+      }
+      assert(leaked.isEmpty, s"$name: still persisted: $leaked")
+    }
+  }
+
+  test("each shared similarity stage is written once in main source") {
+    // a pasted copy of a stage drifts from the original silently (and a
+    // drifted tokenizer loses TokenCountRewrite); comment lines and
+    // oracle SQL lines do not count
+    val files = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.getFileName.toString == "Similarity.scala"),
+      s"the walk from ${Paths.get("src/main/scala").toAbsolutePath} found no engine source")
+    val code = files.flatMap(f => Files.readAllLines(f).asScala).filterNot { l =>
+      val t = l.trim
+      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*") || t.startsWith("|")
+    }
+    def copies(frag: String): Int =
+      code.map(l => l.sliding(frag.length).count(_ == frag)).sum
+    val atMost = Seq(
+      "filter(split(text, ' '), x -> x <> '')" -> 1,
+      """orderBy(col("cosine").desc, col("b_id").asc)""" -> 1,
+      // one per cell-ranking key: rounded and raw cosine
+      """orderBy(col("ccos").desc, col("c_id").asc)""" -> 2,
+      "explode(array(bandSig: _*))" -> 1,
+      """bl.as("a").join(bl.as("b")""" -> 1,
+      """concat(col("a_id").cast("string"), lit("|")""" -> 1)
+    atMost.foreach { case (frag, n) =>
+      val c = copies(frag)
+      assert(c >= 1 && c <= n, s"$frag: $c copies, at most $n")
+    }
   }
 
   test("exact-Jaccard verify: hash-segment decomposition invariant in the segment count") {
