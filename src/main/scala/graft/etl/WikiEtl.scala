@@ -27,6 +27,9 @@ object WikiEtl {
   /** Dense 1-based deterministic id by total order on `sortCols` —
     * the scalable replacement for AUTO_INCREMENT: a range-partitioned
     * sort + `zipWithIndex`, no single-partition window (SURVEY.md §7.4).
+    * Every job that builds the ids runs inside this call: the range
+    * sort's sampling job, its shuffle-map stage (both read `df`, so a
+    * costly `df` should be persisted) and `zipWithIndex`'s count.
     */
   def withDenseId(df: DataFrame, idCol: String, sortCols: String*): DataFrame = {
     val sorted = df.orderBy(sortCols.map(col): _*)
@@ -40,12 +43,11 @@ object WikiEtl {
   /** @param xmlPath    pages-articles export XML (or a directory of them)
     * @param removeHtml mirror of `--remove_html` (`/root/reference/dbfy.py:55`)
     * @param valid/invalid unicode ranges (`--valid_unichrs`, A5d)
-    */
-  /** @param limit stop after the first N namespace-0 pages in dump
+    * @param limit stop after the first N namespace-0 pages in dump
     *   order — the reference's serial-path exact semantics (A12,
     *   `/root/reference/dbfy.py:205-208`; the overshooting mp-path
-    *   variant is deliberately not reproduced). Applied before the
-    *   repartition so "first N" means dump order. */
+    *   variant is deliberately not reproduced).
+    */
   def run(
       spark: SparkSession,
       xmlPath: String,
@@ -54,19 +56,31 @@ object WikiEtl {
       invalid: Seq[(Int, Int)] = Nil,
       limit: Option[Int] = None): EtlOutput = {
     val clean = udf((t: String) => WikiText.cleanWikiBody(t, removeHtml, valid, invalid))
-    // A dump arrives as one file (bz2: one stream) → the text source
-    // yields few input splits. Redistribute BEFORE the expensive
-    // parse/clean so all cores work (SURVEY.md §7.3 bz2 note), and
-    // persist: both output branches and the redirect join consume this.
+      .withName("cleanWikiBody")
+    // The scan already yields one partition per dump byte range, at
+    // least one per core (WikiXml.allPages), so parse, redirect split
+    // and clean all run where the bytes were read. A global limit
+    // leaves one partition; only that path redistributes. Its "first
+    // N" orders by the scan position (partition, row), which is dump
+    // order.
     val sourced = WikiXml.pages(spark, xmlPath)
-    val pages = limit.fold(sourced)(sourced.limit)
-      .repartition(spark.sparkContext.defaultParallelism)
+    val scanned = limit.fold(sourced) { n =>
+      sourced.withColumn("pos", monotonically_increasing_id())
+        .orderBy("pos").limit(n).drop("pos")
+        .repartition(spark.sparkContext.defaultParallelism)
+    }
+    // Persisted with each content body cleaned once and the raw text
+    // dropped: the dense-id sort's sampling job and its shuffle both
+    // read this cache, and so does the redirect side.
+    val pages = scanned
       .withColumn("rdr", regexp_extract(col("text"), WikiText.RedirectRegexSql, 1))
+      .select(col("title"), col("aid"), col("rdr"),
+        when(col("rdr") === "", clean(col("text"))).as("body"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Phase 1: content pages → cleaned bodies with deterministic ids.
     val content = pages.filter(col("rdr") === "")
-      .select(col("title"), col("aid"), clean(col("text")).as("body"))
+      .select(col("title"), col("aid"), col("body"))
     val bodies = withDenseId(content, "id", "aid")
       .select(col("id"), col("body"), col("title"), col("aid"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -1,5 +1,8 @@
 package graft.etl
 
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.mapred.{FileInputFormat, JobConf, TextInputFormat}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -8,16 +11,19 @@ import org.apache.spark.sql.functions._
   * (called at `/root/reference/dbfy.py:189,229`; behavior pinned in
   * SURVEY.md §2.3.1).
   *
-  * Strategy (SURVEY.md §7.5): split the dump into one record per
-  * `<page>` via `lineSep = "</page>"` — a streaming, splittable-input
-  * text scan. This is splittable for bz2 dumps too: bz2 is
-  * block-compressed (~100-900 KB per block) and Hadoop's `BZip2Codec`
-  * is a `SplittableCompressionCodec`, so Spark starts an input task at
-  * any block boundary and a multi-GB dump decompresses and parses in
-  * parallel — no pre-decompression step (multi-block splitting proven
-  * in WikiXmlBz2Spec; at 100 TB, size the tasks with
-  * `spark.sql.files.maxPartitionBytes` as for any scan). Fields come
-  * out with anchored regex extraction; the XML-layer entity unescape
+  * Strategy (SURVEY.md §7.5): read the dump as one record per
+  * `<page>` with Hadoop's old-API `TextInputFormat` and the record
+  * delimiter `</page>`, asking for at least `defaultParallelism`
+  * splits. A dump smaller than `cores × block size` then still parses
+  * on every core, and a large one keeps block-sized splits (Spark's
+  * file source cuts no split below `spark.sql.files.openCostInBytes`,
+  * 4 MB, so it reads a dump under ≈16 MB as one task on 4 cores). bz2
+  * dumps split too: bz2 is block-compressed (~100-900 KB per block)
+  * and Hadoop's `BZip2Codec` is a `SplittableCompressionCodec`, which
+  * `TextInputFormat` honours, so a task can start at any block
+  * boundary and a multi-GB dump decompresses and parses in parallel
+  * with no pre-decompression step (pinned in WikiXmlBz2Spec). Fields
+  * come out with anchored regex extraction; the XML-layer entity unescape
   * happens here, BEFORE any HTML-entity pass, exactly as iterparse did
   * for the reference.
   */
@@ -51,16 +57,28 @@ object WikiXml {
   private val unescapeXmlUdf = udf(unescapeXml _)
 
   /** All pages of the export, any namespace: (title, ns, aid, text).
+    * Each partition is one byte range of one input file, and a file's
+    * ranges come in offset order, so partition order is dump order.
     *
     * A5a lossy decode: the reference decodes with `errors="ignore"`,
     * DELETING invalid byte sequences (`/root/reference/filters.py:53`);
-    * the JVM text reader replaces them with U+FFFD. Deleting every
+    * Hadoop's `Text.toString` replaces them with U+FFFD. Deleting every
     * U+FFFD right after the scan restores the reference's semantics
     * (caveat, deliberate: a literal U+FFFD that was validly encoded in
     * the dump is deleted too — gensim would keep it; real exports don't
     * contain one). Codegen'd `translate`, no extra pass over the data. */
-  def allPages(spark: SparkSession, path: String): DataFrame =
-    fromRaw(spark.read.option("lineSep", "</page>").text(path))
+  def allPages(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val conf = new JobConf(sc.hadoopConfiguration)
+    conf.set("textinputformat.record.delimiter", "</page>")
+    FileInputFormat.setInputPaths(conf, new Path(path))
+    // the reader reuses one Text per record: copy it out before the next
+    val records = sc.hadoopRDD(conf, classOf[TextInputFormat], classOf[LongWritable],
+        classOf[Text], sc.defaultParallelism)
+      .map(_._2.toString)
+    fromRaw(records.toDF("value"))
+  }
 
   /** The page extraction over an already-scanned `value` column —
     * shared verbatim by the batch reader above and the streaming one

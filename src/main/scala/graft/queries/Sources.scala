@@ -237,7 +237,7 @@ object Sources {
     // A1–A3 through the DataSource V2 connector
     // (graft.sources.WikiDumpSource): same dump and fields, but planned
     // as one partition per file with column pruning pushed into the
-    // reader. Row-for-row equality with the lineSep route is pinned in
+    // reader. Row-for-row equality with WikiXml's scan is pinned in
     // WikiDumpSourceSpec; the rows-only driver check sees the same
     // output shape as q_source_text.
     "q_source_wikidump" -> ((s, _) =>

@@ -398,9 +398,11 @@ object Text {
     // pass, which keeps the oracle exactly unrollable (setting the
     // conf is an explicit opt-in to the snapshot-count approximation
     // and diverges from the strict-greedy oracle).
-    "q_bpe_train" -> ((s, d) =>
-      s.createDataFrame(bpeDispatch(s, d, 8)._1)
-        .toDF("step", "l_tok", "r_tok", "merged", "cnt")),
+    "q_bpe_train" -> ((s, d) => {
+      val (merges, enc) = bpeDispatch(s, d, 8)
+      graft.Checkpoints.release(enc)
+      s.createDataFrame(merges).toDF("step", "l_tok", "r_tok", "merged", "cnt")
+    }),
 
     // The APPLY side of BPE: the corpus re-tokenized under the learned
     // merge table — per doc, the post-merge token count and a content
@@ -465,7 +467,8 @@ object Text {
         graft.Tables.dataFingerprint(s, d, Seq("documents")) +
           s"-m$budget-k$batchK-p${pretokMode(s)}").toString
       if (!graft.operators.BpeVocabStore.exists(s, store)) {
-        val (m, _, _) = bpeLoopBatched(s, d, budget, batchK)
+        val (m, enc, _) = bpeLoopBatched(s, d, budget, batchK)
+        graft.Checkpoints.release(enc)
         graft.operators.BpeVocabStore.ensureVocab(s, m, store)
       }
       graft.operators.BpeVocabStore.applyMerges(s, bpeEncode(s, d), store)
@@ -627,17 +630,6 @@ object Text {
       .filter(length(col("enc")) > 0)
   }
 
-  /** Shared BPE fixpoint: N merge rounds over the paren-encoded corpus
-    * (doc_id retained so the apply side can join nothing — the final
-    * frame IS the tokenization). Returns (merge table, final corpus).
-    * Strict one-merge-per-round greedy — the exactly-oracle-unrollable
-    * form; `batchK = 1` of the batched trainer below. */
-  private def bpeLoop(s: SparkSession, d: String, nMerges: Int)
-  : (Seq[(Int, String, String, String, Long)], DataFrame) = {
-    val (m, e, _) = bpeLoopBatched(s, d, nMerges, 1)
-    (m, e)
-  }
-
   /** BATCHED BPE training — the production path a 100 TB trainer needs:
     * per round, the top pairs by (cnt DESC, pair ASC) are scanned in
     * order and a pairwise-DISJOINT subset (no shared token among any
@@ -664,6 +656,10 @@ object Text {
     // consumer and materializes the blocks in its own pass
     var enc = graft.Checkpoints.ckptLazy(bpeEncode(s, d),
       soleConsumer = "the first round's top-pair collect")
+    // `ckpt` is the checkpoint `enc` reads; `superseded` is the one
+    // before it, freed once the next collect has materialized `ckpt`
+    var ckpt = enc
+    var superseded: Option[DataFrame] = None
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
     val roundSizes = Seq.newBuilder[Int]
     var step = 1
@@ -683,6 +679,8 @@ object Text {
         .agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("l_tok"), col("r_tok"))
         .limit(math.max(1, batchK * 4)).collect()
+      superseded.foreach(graft.Checkpoints.release)
+      superseded = None
       if (top.isEmpty) exhausted = true
       else {
         val used = scala.collection.mutable.Set.empty[String]
@@ -704,13 +702,18 @@ object Text {
         }
         val next = enc.select(col("doc_id"), applied.as("enc"))
         rounds += 1
-        // checkpoint every SECOND round: localCheckpoint is eager (one
-        // job each), and the un-checkpointed hop is a single narrow
-        // replace chain over the previous checkpoint — recompute is one
-        // cheap pass, materialization cost halves
-        enc = if (rounds % 2 == 0) graft.Checkpoints.ckptLazy(next,
-          soleConsumer = "the next round's top-pair collect")
-        else next
+        // checkpoint every SECOND round that another round follows: the
+        // un-checkpointed hop is a single narrow replace chain over the
+        // previous checkpoint — recompute is one cheap pass,
+        // materialization cost halves. The last round stays a replace
+        // chain over the kept checkpoint, so the caller's release of
+        // the returned frame frees everything this loop still holds.
+        enc = if (rounds % 2 == 0 && step <= nMerges) {
+          superseded = Some(ckpt)
+          ckpt = graft.Checkpoints.ckptLazy(next,
+            soleConsumer = "the next round's top-pair collect")
+          ckpt
+        } else next
       }
     }
     (merges.result(), enc, roundSizes.result())
@@ -747,10 +750,10 @@ object Text {
          |m$i AS MATERIALIZED (SELECT l_tok, r_tok, l_tok || r_tok AS merged, cnt FROM p$i
          |  ORDER BY cnt DESC, l_tok, r_tok LIMIT 1)""".stripMargin +
         (if (!needE) "" else
-          // the empty-m(i) guard mirrors bpeLoop's `exhausted` break: if
-          // pair counts run dry before round n, the scalar subqueries go
-          // NULL and REPLACE(enc, NULL, ..) would NULL-poison every
-          // later e(i) — carry e(i-1) unchanged instead
+          // the empty-m(i) guard mirrors bpeLoopBatched's `exhausted`
+          // break: if pair counts run dry before round n, the scalar
+          // subqueries go NULL and REPLACE(enc, NULL, ..) would
+          // NULL-poison every later e(i) — carry e(i-1) unchanged instead
           s""",
              |e$i AS MATERIALIZED (SELECT doc_id,
              |  CASE WHEN (SELECT COUNT(*) FROM m$i) = 0 THEN enc

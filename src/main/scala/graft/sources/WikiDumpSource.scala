@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 connector for MediaWiki `pages-articles` export XML —
   * the full-connector form of the engine's dump ingestion (the third
-  * ingestion mode next to the batch `lineSep` scan and the streaming
+  * ingestion mode next to the batch `</page>`-delimited scan and the streaming
   * reader, both in `graft.etl.WikiXml` / `graft.streaming.WikiStream`).
   *
   * {{{ spark.read.format(classOf[WikiDumpSource].getName).load(dir) }}}

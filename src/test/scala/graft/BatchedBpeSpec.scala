@@ -256,4 +256,15 @@ class BatchedBpeSpec extends SparkTestBase {
     assert(rows.length <= 8 && rows.nonEmpty)
     assert(rows.map(_.getAs[Int]("step")).toSeq == (1 to rows.length))
   }
+
+  test("q_bpe_train and q_tok_fertility free every superseded corpus checkpoint") {
+    for (name <- Seq("q_bpe_train", "q_tok_fertility")) {
+      val leaked = persistedBy {
+        val r = SparkEntry.queries(name)(spark, sfDir)
+        assert(r.collect().nonEmpty)
+        Checkpoints.release(r)
+      }
+      assert(leaked.isEmpty, s"$name: still persisted: $leaked")
+    }
+  }
 }

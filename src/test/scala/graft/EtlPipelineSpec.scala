@@ -1,6 +1,15 @@
 package graft
 
 import graft.etl.{WikiEtl, WikiXml}
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** End-to-end ETL over the mini dump fixture (FIXTURES.md §2): XML →
   * ns-0 filter → redirect split → clean → deterministic ids → resolved
@@ -18,6 +27,55 @@ class EtlPipelineSpec extends SparkTestBase {
     assert(alpha.contains("<ref>cite</ref>")) // XML layer unescaped &lt; → <
     assert(alpha.contains("&amp;co."))        // but &amp;amp; → &amp; only
     assert(pages("Alpha").getLong(1) == 1L)   // page id, not revision id
+  }
+
+  test("the dump scan yields at least one input partition per core") {
+    // the mini dump is far below Spark's 4 MB minimum file split
+    val parts = WikiXml.pages(spark, xml).rdd.getNumPartitions
+    assert(parts >= spark.sparkContext.defaultParallelism, s"$parts partitions")
+  }
+
+  test("bodies: one clean per content page, inside the cached pages, no round-robin shuffle") {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val out = WikiEtl.run(spark, xml)
+    try {
+      assert(out.bodies.count() == 1)
+      org.apache.spark.SparkTestHooks.drainListenerBus(spark.sparkContext)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      out.cleanup()
+    }
+    // every node of every executed plan, flagged when it computes a
+    // persisted frame's blocks
+    def nodes(p: SparkPlan, cached: Boolean): Seq[(SparkPlan, Boolean)] = {
+      val inner = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan -> cached)
+        case q: QueryStageExec => Seq(q.plan -> cached)
+        case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan -> true)
+        case _ => Nil
+      }
+      (p -> cached) +: (p.children.map(_ -> cached) ++ inner)
+        .flatMap { case (c, k) => nodes(c, k) }
+    }
+    def cleans(n: SparkPlan): Int = n.expressions
+      .map(_.collect { case u: ScalaUDF if u.udfName.contains("cleanWikiBody") => u }.size).sum
+    val all = plans.asScala.toSeq.flatMap(nodes(_, cached = false))
+    assert(all.exists(_._2) && all.forall { case (n, c) => c || cleans(n) == 0 },
+      "a body is cleaned above the persisted pages")
+    val perCache = all.collect { case (m: InMemoryTableScanExec, _) =>
+      nodes(m.relation.cachedPlan, cached = true).map(n => cleans(n._1)).sum
+    }
+    assert(perCache.contains(1) && perCache.forall(_ <= 1), perCache)
+    assert(!all.exists { case (n, _) => n match {
+      case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+      case _ => false
+    } }, "the pages are redistributed")
   }
 
   test("full pipeline: shared bodies, resolved chains, dropped cycles/dead-ends") {

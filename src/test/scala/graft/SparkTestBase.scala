@@ -11,15 +11,11 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   val sfDir = "/root/testdata/sf0.001"
 
-  /** Ids of the RDDs `body` persisted that are still persisted after it.
-    * New ids only, not a set equality: the context cleaner may drop an
-    * earlier suite's blocks meanwhile. */
-  def persistedBy(body: => Unit): Set[Int] = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    body
-    sc.getPersistentRDDs.keySet.toSet -- before
-  }
+  /** Ids of the RDDs `body` persisted that are still persisted after
+    * it. Every RDD the body registers is held strongly until the check,
+    * so a GC cannot let the context cleaner hide a leak. */
+  def persistedBy(body: => Unit): Set[Int] =
+    org.apache.spark.SparkTestHooks.persistedBy(spark.sparkContext)(body)
 }
 
 object SparkTestBase {

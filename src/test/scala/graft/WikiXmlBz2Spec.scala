@@ -4,10 +4,11 @@ import graft.etl.WikiXml
 import java.nio.file.{Files, Paths}
 
 /** A2: the reference streams the dump through bz2
-  * (`/root/reference/dbfy.py:188`) — Spark's text source decodes .bz2
-  * transparently via the Hadoop codec, so the same WikiXml parse works
-  * on a compressed dump (single-split read feeding the pipeline's
-  * repartition, SURVEY.md §7.5). */
+  * (`/root/reference/dbfy.py:188`). WikiXml's scan decodes .bz2
+  * transparently via Hadoop's splittable `BZip2Codec`, so the same
+  * parse works on a compressed dump, and a multi-block dump is read by
+  * one task per byte range — on every core — with rows identical to the
+  * plain parse (SURVEY.md §7.5). */
 class WikiXmlBz2Spec extends SparkTestBase {
 
   test("pages parse identically from a bz2-compressed dump") {
@@ -27,8 +28,8 @@ class WikiXmlBz2Spec extends SparkTestBase {
   test("a multi-block bz2 dump splits across input tasks with identical rows") {
     // SURVEY §7.3 watch item: a real 20 GB enwiki dump must not parse on
     // one core. bz2 is BLOCK-compressed and Hadoop's BZip2Codec is a
-    // SplittableCompressionCodec — Spark's text source can start a task
-    // at any block boundary. Fixture: ~3 MB of low-compressibility pages
+    // SplittableCompressionCodec — the scan can start a task at any
+    // block boundary. Fixture: ~3 MB of low-compressibility pages
     // at bzip2 blockSize=1 (100 KB blocks) → dozens of blocks.
     def word(i: Long): String = java.lang.Long.toHexString(i * 0x9e3779b97f4a7c15L)
     val nPages = 2000
@@ -49,24 +50,20 @@ class WikiXmlBz2Spec extends SparkTestBase {
     bos.write(sb.toString.getBytes("UTF-8"))
     bos.close()
 
-    val prev = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "131072") // 128 KB
     try {
-      val raw = spark.read.option("lineSep", "</page>").text(bz2Path)
-      val nSplits = raw.rdd.getNumPartitions
-      assert(nSplits > 1,
-        s"bz2 read must split into multiple input tasks, got $nSplits")
+      // no split-size setting: the scan alone must spread a 3 MB dump
+      // over the cores, and more than one task must decode pages
       val rows = WikiXml.pages(spark, bz2Path)
-      assert(rows.rdd.getNumPartitions > 1)
+      val nSplits = rows.rdd.getNumPartitions
+      assert(nSplits >= spark.sparkContext.defaultParallelism,
+        s"bz2 read must split into one input task per core, got $nSplits")
+      val perTask = rows.rdd.mapPartitions(it => Iterator(it.size)).collect()
+      assert(perTask.count(_ > 0) > 1, s"pages per task: ${perTask.mkString(",")}")
       val got = rows.collect().map(_.toSeq).toSet
       val plain = WikiXml.pages(spark, xmlPath).collect().map(_.toSeq).toSet
       assert(got.size == nPages, s"expected $nPages pages, got ${got.size}")
       assert(got == plain, "split bz2 parse must equal the plain parse")
     } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.files.maxPartitionBytes", v)
-        case None    => spark.conf.unset("spark.sql.files.maxPartitionBytes")
-      }
       Files.deleteIfExists(Paths.get(bz2Path))
       Files.deleteIfExists(Paths.get(xmlPath))
       Files.deleteIfExists(base)
