@@ -54,16 +54,38 @@ object MySqlSink {
     * DROP (FK-safe order) then CREATE both tables with the exact
     * charset/type/index/FK shapes above. */
   def bootstrap(url: String, user: String, password: String,
-                ddls: Seq[String] = dropDdl ++ Seq(bodiesDdl, articlesDdl)): Unit = {
-    val props = new java.util.Properties()
-    props.setProperty("user", user)
-    props.setProperty("password", password)
-    val conn = java.sql.DriverManager.getConnection(url, props)
-    try {
+                ddls: Seq[String] = dropDdl ++ Seq(bodiesDdl, articlesDdl)): Unit =
+    withConnection(url, user, password) { conn =>
       val st = conn.createStatement()
       try ddls.foreach(st.execute) finally st.close()
-    } finally conn.close()
+    }
+
+  /** `f` over a plain JDBC connection, closed afterwards. */
+  private def withConnection[A](url: String, user: String, password: String)
+                               (f: java.sql.Connection => A): A = {
+    val conn = java.sql.DriverManager.getConnection(url, user, password)
+    try f(conn) finally conn.close()
   }
+
+  /** `f` in one transaction: committed when it returns, rolled back
+    * when it throws. A failed rollback must not mask the transaction's
+    * own failure: it is attached as suppressed and the original
+    * rethrown (ADVICE r18). */
+  private def inTransaction[A](url: String, user: String, password: String)
+                              (f: java.sql.Connection => A): A =
+    withConnection(url, user, password) { conn =>
+      try {
+        conn.setAutoCommit(false)
+        val a = f(conn)
+        conn.commit()
+        a
+      } catch {
+        case e: Throwable =>
+          try conn.rollback()
+          catch { case scala.util.control.NonFatal(re) => e.addSuppressed(re) }
+          throw e
+      }
+    }
 
   /** The same two-table schema in Derby dialect (no backticks/charset/
     * engine, MEDIUMTEXT→CLOB, inline FK, separate CREATE INDEX) — used
@@ -147,25 +169,14 @@ object MySqlSink {
     * can re-run promotion alone and observe its idempotence. */
   def promoteStage(url: String, user: String, password: String,
                    target: String, stage: String,
-                   cols: Seq[String], pk: Seq[String]): Long = {
-    val props = new java.util.Properties()
-    props.setProperty("user", user)
-    props.setProperty("password", password)
-    val conn = java.sql.DriverManager.getConnection(url, props)
-    try {
-      conn.setAutoCommit(false)
-      val st = conn.createStatement()
-      val n = try st.executeUpdate(promoteSql(target, stage, cols, pk)) finally st.close()
-      conn.commit()
-      n.toLong
-    } catch {
-      // a failed rollback must not mask the transaction's own failure:
-      // attach it as suppressed and rethrow the original (ADVICE r18)
-      case e: Throwable =>
-        try conn.rollback()
-        catch { case scala.util.control.NonFatal(re) => e.addSuppressed(re) }
-        throw e
-    } finally conn.close()
+                   cols: Seq[String], pk: Seq[String]): Long =
+    inTransaction(url, user, password)(promote(_, target, stage, cols, pk))
+
+  /** The promote statement on `conn`; returns the insert count. */
+  private def promote(conn: java.sql.Connection, target: String, stage: String,
+                      cols: Seq[String], pk: Seq[String]): Long = {
+    val st = conn.createStatement()
+    try st.executeUpdate(promoteSql(target, stage, cols, pk)).toLong finally st.close()
   }
 
   private def promoteSql(target: String, stage: String,
@@ -190,41 +201,36 @@ object MySqlSink {
   def promoteStageLedgered(url: String, user: String, password: String,
                            target: String, stage: String,
                            cols: Seq[String], pk: Seq[String],
-                           ledger: String, batchId: Long): Option[Long] = {
-    val props = new java.util.Properties()
-    props.setProperty("user", user)
-    props.setProperty("password", password)
-    val conn = java.sql.DriverManager.getConnection(url, props)
-    try {
-      conn.setAutoCommit(false)
-      val check = conn.prepareStatement(
-        s"SELECT 1 FROM $ledger WHERE target = ? AND batch_id = ?")
-      val already = try {
-        check.setString(1, target); check.setLong(2, batchId)
-        val rs = check.executeQuery()
-        try rs.next() finally rs.close()
-      } finally check.close()
-      if (already) { conn.rollback(); None }
+                           ledger: String, batchId: Long): Option[Long] =
+    inTransaction(url, user, password) { conn =>
+      if (ledgerHas(conn, ledger, target, batchId)) None
       else {
-        val st = conn.createStatement()
-        val n = try st.executeUpdate(promoteSql(target, stage, cols, pk)) finally st.close()
+        val n = promote(conn, target, stage, cols, pk)
         val ins = conn.prepareStatement(
           s"INSERT INTO $ledger (target, batch_id, n_rows) VALUES (?, ?, ?)")
         try {
-          ins.setString(1, target); ins.setLong(2, batchId); ins.setLong(3, n.toLong)
+          ins.setString(1, target); ins.setLong(2, batchId); ins.setLong(3, n)
           ins.executeUpdate()
         } finally ins.close()
-        conn.commit()
-        Some(n.toLong)
+        Some(n)
       }
-    } catch {
-      // a failed rollback must not mask the transaction's own failure:
-      // attach it as suppressed and rethrow the original (ADVICE r18)
-      case e: Throwable =>
-        try conn.rollback()
-        catch { case scala.util.control.NonFatal(re) => e.addSuppressed(re) }
-        throw e
-    } finally conn.close()
+    }
+
+  /** Whether `ledger` records `(target, batchId)` as committed, read in
+    * a connection of its own. */
+  private[graft] def ledgerHas(url: String, user: String, password: String,
+                               ledger: String, target: String, batchId: Long): Boolean =
+    withConnection(url, user, password)(ledgerHas(_, ledger, target, batchId))
+
+  private def ledgerHas(conn: java.sql.Connection, ledger: String,
+                        target: String, batchId: Long): Boolean = {
+    val st = conn.prepareStatement(
+      s"SELECT 1 FROM $ledger WHERE target = ? AND batch_id = ?")
+    try {
+      st.setString(1, target); st.setLong(2, batchId)
+      val rs = st.executeQuery()
+      try rs.next() finally rs.close()
+    } finally st.close()
   }
 
   /** EXACTLY-ONCE JDBC append under Spark task retry. A plain `append`

@@ -40,6 +40,22 @@ object WikiEtl {
     df.sparkSession.createDataFrame(rdd, schema)
   }
 
+  /** The redirect split and the body clean (A4/A5) over pages with
+    * `aid`, `title` and `text`: `(aid, title, rdr, body)`, where `rdr`
+    * is the `#REDIRECT [[…]]` target ("" for a content page) and `body`
+    * the cleaned text of a content page (null for a redirect, which is
+    * never cleaned). The batch run and `graft.streaming.WikiStream`
+    * both call this. */
+  def splitAndClean(pages: DataFrame, removeHtml: Boolean,
+                    valid: Seq[(Int, Int)], invalid: Seq[(Int, Int)]): DataFrame = {
+    val clean = udf((t: String) => WikiText.cleanWikiBody(t, removeHtml, valid, invalid))
+      .withName("cleanWikiBody")
+    pages
+      .withColumn("rdr", regexp_extract(col("text"), WikiText.RedirectRegexSql, 1))
+      .select(col("aid"), col("title"), col("rdr"),
+        when(col("rdr") === "", clean(col("text"))).as("body"))
+  }
+
   /** @param xmlPath    pages-articles export XML (or a directory of them)
     * @param removeHtml mirror of `--remove_html` (`/root/reference/dbfy.py:55`)
     * @param valid/invalid unicode ranges (`--valid_unichrs`, A5d)
@@ -55,8 +71,6 @@ object WikiEtl {
       valid: Seq[(Int, Int)] = Nil,
       invalid: Seq[(Int, Int)] = Nil,
       limit: Option[Int] = None): EtlOutput = {
-    val clean = udf((t: String) => WikiText.cleanWikiBody(t, removeHtml, valid, invalid))
-      .withName("cleanWikiBody")
     // The scan already yields one partition per dump byte range, at
     // least one per core (WikiXml.allPages), so parse, redirect split
     // and clean all run where the bytes were read. A global limit
@@ -72,10 +86,7 @@ object WikiEtl {
     // Persisted with each content body cleaned once and the raw text
     // dropped: the dense-id sort's sampling job and its shuffle both
     // read this cache, and so does the redirect side.
-    val pages = scanned
-      .withColumn("rdr", regexp_extract(col("text"), WikiText.RedirectRegexSql, 1))
-      .select(col("title"), col("aid"), col("rdr"),
-        when(col("rdr") === "", clean(col("text"))).as("body"))
+    val pages = splitAndClean(scanned, removeHtml, valid, invalid)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Phase 1: content pages → cleaned bodies with deterministic ids.

@@ -47,14 +47,10 @@ object WikiText {
   }
 
   /** `#REDIRECT [[target]]` — anchored at the start and case-sensitive,
-    * preserving the reference's quirks (`/root/reference/dbfy.py:105,129`).
-    * Single source of truth for the pattern: SQL callers prepend `^`
-    * (regexp_extract searches anywhere), the Scala matcher uses `\A`. */
-  val RedirectRegexBody = """#REDIRECT \[\[([^\]]*)\]\]"""
-  val RedirectRegexSql: String = "^" + RedirectRegexBody
-  private val RedirectPat = ("""\A""" + RedirectRegexBody).r
-  def detectRedirect(body: String): Option[String] =
-    RedirectPat.findPrefixMatchOf(if (body == null) "" else body).map(_.group(1))
+    * preserving the reference's quirks (its `dbfy.py:105,129`):
+    * group 1 of a `regexp_extract` is the target, "" for no redirect. The
+    * ETL detects redirects with it in `WikiEtl.splitAndClean`. */
+  val RedirectRegexSql: String = """^#REDIRECT \[\[([^\]]*)\]\]"""
 
   // ---------------------------------------------------------------- A5b
 

@@ -16,8 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 connector for MediaWiki `pages-articles` export XML —
   * the full-connector form of the engine's dump ingestion (the third
-  * ingestion mode next to the batch `</page>`-delimited scan and the streaming
-  * reader, both in `graft.etl.WikiXml` / `graft.streaming.WikiStream`).
+  * ingestion mode next to the batch `</page>`-delimited scan
+  * `graft.etl.WikiXml.allPages` and the stream
+  * `graft.streaming.WikiStream.pages`).
   *
   * {{{ spark.read.format(classOf[WikiDumpSource].getName).load(dir) }}}
   *
@@ -32,14 +33,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - **Streamed records**: each file is scanned through a delimiter
   *     Scanner (`</page>` chunks), never loaded whole.
   *
-  * Parsing semantics are IDENTICAL to `WikiXml.fromRaw` by shared code
-  * (`WikiXml.unescapeXml`, same anchored regexes, same malformed-record
-  * drop, same U+FFFD deletion for A5a errors="ignore" fidelity);
-  * WikiDumpSourceSpec asserts row-for-row equality on the same dump.
+  * Each record is parsed by `WikiXml.parsePage`, the parser the batch
+  * scan and the stream call too; WikiDumpSourceSpec asserts the three
+  * modes give the same rows on the same dump, edge records included.
   */
 class WikiDumpSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    WikiDumpSource.schema
+    WikiXml.schema
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table = {
@@ -57,37 +57,6 @@ class WikiDumpSource extends TableProvider {
 }
 
 object WikiDumpSource {
-  val schema: StructType = StructType(Seq(
-    StructField("title", StringType), StructField("ns", IntegerType),
-    StructField("aid", LongType), StructField("text", StringType)))
-
-  private val TitleRe = Pattern.compile("(?s)<title>(.*?)</title>")
-  private val NsRe = Pattern.compile("(?s)<ns>(.*?)</ns>")
-  private val IdRe = Pattern.compile("(?s)<id>([0-9]+)</id>")
-  private val TextRe = Pattern.compile("(?s)<text[^>]*>(.*?)</text>")
-  private val NsDigits = Pattern.compile("^[0-9]+$")
-
-  private def extract(p: Pattern, s: String): String = {
-    val m = p.matcher(s)
-    if (m.find()) m.group(1) else ""
-  }
-
-  /** One `</page>`-delimited chunk → (title, ns, aid, text), or None
-    * for the trailing fragment / malformed records — the same
-    * skip-on-failure posture as `WikiXml.fromRaw`. With
-    * `withText = false` (column-pruned scans) the text field is never
-    * extracted or unescaped — the point of pushing pruning into the
-    * reader. */
-  def parseRecord(chunk: String, withText: Boolean = true): Option[(String, Int, Long, String)] = {
-    val rec = chunk.replace("�", "") // A5a: delete, don't replace
-    val title = extract(TitleRe, rec)
-    val ns = extract(NsRe, rec)
-    val aid = extract(IdRe, rec)
-    if (title.isEmpty || aid.isEmpty || !NsDigits.matcher(ns).matches()) None
-    else Some((WikiXml.unescapeXml(title), ns.toInt, aid.toLong,
-      if (withText) WikiXml.unescapeXml(extract(TextRe, rec)) else ""))
-  }
-
   /** Dump files under `path` (a file, or a directory scanned
     * non-recursively), sorted for deterministic partition order. */
   def listFiles(path: String): Seq[String] = {
@@ -100,7 +69,7 @@ object WikiDumpSource {
 
 class WikiDumpTable(paths: Seq[String]) extends Table with SupportsRead {
   override def name(): String = s"wikidump(`${paths.mkString(",")}`)"
-  override def schema(): StructType = WikiDumpSource.schema
+  override def schema(): StructType = WikiXml.schema
   override def capabilities(): java.util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
@@ -109,7 +78,7 @@ class WikiDumpTable(paths: Seq[String]) extends Table with SupportsRead {
 
 class WikiDumpScanBuilder(paths: Seq[String])
     extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = WikiDumpSource.schema
+  private var required: StructType = WikiXml.schema
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
   override def build(): Scan = new WikiDumpScan(paths, required)
@@ -138,24 +107,25 @@ class WikiDumpReaderFactory(required: StructType)
     new PartitionReader[InternalRow] {
       private val file = partition.asInstanceOf[WikiDumpFilePartition].file
       // Scanner streams the file in </page> chunks; the UTF-8 decoder
-      // substitutes malformed bytes with U+FFFD, which parseRecord then
+      // substitutes malformed bytes with U+FFFD, which parsePage then
       // deletes (reference errors="ignore" semantics).
       private val in = new java.io.FileInputStream(file)
       private val scanner = new java.util.Scanner(in, "UTF-8")
         .useDelimiter(Pattern.quote("</page>"))
       // which parsed field feeds each required output column
       private val fieldIdx: Array[Int] =
-        required.fieldNames.map(WikiDumpSource.schema.fieldIndex)
+        required.fieldNames.map(WikiXml.schema.fieldIndex)
       private val needText = fieldIdx.contains(3)
       private var row: InternalRow = _
 
       override def next(): Boolean = {
         row = null
         while (row == null && scanner.hasNext) {
-          WikiDumpSource.parseRecord(scanner.next(), needText).foreach { t =>
-            val full: Array[Any] = Array(
-              UTF8String.fromString(t._1), t._2, t._3, UTF8String.fromString(t._4))
-            row = new GenericInternalRow(fieldIdx.map(i => full(i)))
+          WikiXml.parsePage(scanner.next(), needText).foreach { page =>
+            row = new GenericInternalRow(fieldIdx.map(i => page.get(i) match {
+              case s: String => UTF8String.fromString(s)
+              case v => v
+            }))
           }
         }
         row != null

@@ -81,7 +81,10 @@ object StreamingJdbc {
                   batchSize: Int = 5000,
                   ledgerDdl: String => Seq[String] = derbyLedgerDdl): Long = {
     ensureLedger(url, user, password, ledger, ledgerDdl)
-    if (ledgerHas(url, user, password, ledger, target, batchId)) -1L
+    // fast-path replay check, outside the commit transaction: it only
+    // saves the staging write on the common restart path, and
+    // promoteStageLedgered re-checks inside the transaction
+    if (MySqlSink.ledgerHas(url, user, password, ledger, target, batchId)) -1L
     else {
       val stage = MySqlSink.writeStage(batch, url, user, password, target,
         stageDdl, cols, batchSize)
@@ -90,27 +93,6 @@ object StreamingJdbc {
       MySqlSink.dropBestEffort(url, user, password, stage)
       n.getOrElse(-1L)
     }
-  }
-
-  /** Fast-path replay check — a read outside the commit transaction.
-    * Correctness does NOT depend on it (promoteStageLedgered re-checks
-    * inside the transaction); it only saves the staging write on the
-    * common restart path. */
-  private def ledgerHas(url: String, user: String, password: String,
-                        ledger: String, target: String, batchId: Long): Boolean = {
-    val props = new java.util.Properties()
-    props.setProperty("user", user)
-    props.setProperty("password", password)
-    val conn = java.sql.DriverManager.getConnection(url, props)
-    try {
-      val st = conn.prepareStatement(
-        s"SELECT 1 FROM $ledger WHERE target = ? AND batch_id = ?")
-      try {
-        st.setString(1, target); st.setLong(2, batchId)
-        val rs = st.executeQuery()
-        try rs.next() finally rs.close()
-      } finally st.close()
-    } finally conn.close()
   }
 
   /** Wire a streaming frame to the exactly-once JDBC sink. The caller

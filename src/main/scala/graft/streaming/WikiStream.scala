@@ -1,10 +1,8 @@
 package graft.streaming
 
-import graft.etl.{MySqlSink, WikiText, WikiXml}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.etl.{WikiEtl, WikiXml}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.sql.Row
 
 /** Structured Streaming form of the reference's dump ETL front half:
   * dump files dropped into a directory are parsed and cleaned
@@ -12,47 +10,26 @@ import org.apache.spark.sql.Row
   * processes a single file per invocation; at 100 TB the dumps arrive
   * as a rolling set of files and ingestion should be incremental).
   *
-  * The extraction is `WikiXml.fromRaw` — the exact batch logic over a
-  * streaming text scan — so stream and batch parse identically by
-  * construction (asserted in WikiStreamSpec). Everything here is a
+  * Each record goes through `WikiXml.parsePage` and the redirect split
+  * and clean through `WikiEtl.splitAndClean`, the stages the batch ETL
+  * runs, so stream and batch give the same rows (asserted in
+  * WikiStreamSpec and WikiDumpSourceSpec). Everything here is a
   * stateless narrow map: append mode, no state store, no watermark
-  * needed; checkpointing gives exactly-once file processing.
+  * needed; checkpointing gives exactly-once file processing. The JDBC
+  * sink for a stream is `StreamingJdbc`.
   */
 object WikiStream {
 
   /** Namespace-0 pages from every dump file in `dir`, as a stream
     * (one record per `<page>` via lineSep, like the batch reader). */
   def pages(spark: SparkSession, dir: String): DataFrame =
-    WikiXml.fromRaw(
-        spark.readStream.option("lineSep", "</page>").text(dir))
+    spark.readStream.option("lineSep", "</page>").text(dir).as(Encoders.STRING)
+      .flatMap(WikiXml.parsePage(_, withText = true))(Encoders.row(WikiXml.schema))
       .filter(col("ns") === 0).drop("ns")
 
   /** Cleaned content bodies + detected redirects, streaming: the A4/A5
     * stages as a continuous transform. Redirect rows carry the target
     * in `rdr` with a null body; content rows carry the cleaned body. */
-  def cleaned(spark: SparkSession, dir: String): DataFrame = {
-    val clean = udf((t: String) => WikiText.cleanWikiBody(t))
-    pages(spark, dir)
-      .withColumn("rdr", regexp_extract(col("text"), WikiText.RedirectRegexSql, 1))
-      .select(col("aid"), col("title"), col("rdr"),
-        when(col("rdr") === "", clean(col("text"))).as("body"))
-  }
-
-  /** Streaming JDBC sink via `foreachBatch` — the continuous form of
-    * the reference's MySQL load (A8–A11): each micro-batch lands as one
-    * batched append through the same [[MySqlSink]] writer the batch ETL
-    * uses. Replay-idempotent on top of the file source's at-least-once:
-    * rows are tagged with the micro-batch id and a replayed batch
-    * DELETEs its own tag before re-appending, so checkpoint recovery
-    * never duplicates rows (the standard exactly-once recipe for
-    * transactional JDBC targets). The target table needs a `batch_id`
-    * column; the caller bootstraps DDL, as with the batch sink. */
-  def toJdbc(stream: DataFrame, url: String, table: String,
-             user: String, password: String): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      MySqlSink.bootstrap(url, user, password,
-        Seq(s"DELETE FROM $table WHERE batch_id = $id"))
-      MySqlSink.writer(batch.withColumn("batch_id", lit(id)),
-        url, table, user, password).save()
-    }
+  def cleaned(spark: SparkSession, dir: String): DataFrame =
+    WikiEtl.splitAndClean(pages(spark, dir), removeHtml = true, Nil, Nil)
 }

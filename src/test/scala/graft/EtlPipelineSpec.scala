@@ -1,6 +1,7 @@
 package graft
 
 import graft.etl.{WikiEtl, WikiXml}
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
@@ -33,6 +34,30 @@ class EtlPipelineSpec extends SparkTestBase {
     // the mini dump is far below Spark's 4 MB minimum file split
     val parts = WikiXml.pages(spark, xml).rdd.getNumPartitions
     assert(parts >= spark.sparkContext.defaultParallelism, s"$parts partitions")
+  }
+
+  test("each ingestion stage is written once in main source") {
+    // a second page parser, cleaner call or JDBC plumbing copy drifts
+    // from the first silently (two parsers once disagreed on `<ns>0\n</ns>`);
+    // comment lines do not count
+    val files = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.getFileName.toString == "WikiXml.scala"),
+      s"the walk from ${Paths.get("src/main/scala").toAbsolutePath} found no engine source")
+    val code = files.flatMap(f => Files.readAllLines(f).asScala).filterNot { l =>
+      val t = l.trim
+      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*") || t.startsWith("|")
+    }
+    def copies(frag: String): Int =
+      code.map(l => l.sliding(frag.length).count(_ == frag)).sum
+    val once = Seq(
+      "(?s)<title>(.*?)</title>", "(?s)<ns>(.*?)</ns>",
+      "(?s)<id>([0-9]+)</id>", "(?s)<text[^>]*>(.*?)</text>",
+      "WikiText.cleanWikiBody(",
+      "WHERE target = ? AND batch_id = ?", "e.addSuppressed(re)")
+    once.foreach(frag => assert(copies(frag) == 1, s"$frag: ${copies(frag)} copies, want 1"))
+    Seq("def fromRaw", "def toJdbc", "def parseRecord").foreach(frag =>
+      assert(copies(frag) == 0, s"$frag: ${copies(frag)} copies, want none"))
   }
 
   test("bodies: one clean per content page, inside the cached pages, no round-robin shuffle") {

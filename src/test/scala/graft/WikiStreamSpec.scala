@@ -1,7 +1,7 @@
 package graft
 
-import graft.etl.{WikiEtl, WikiXml, WikiText}
-import graft.streaming.WikiStream
+import graft.etl.{MySqlSink, WikiXml, WikiText}
+import graft.streaming.{StreamingJdbc, WikiStream}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.functions._
 
@@ -62,29 +62,26 @@ class WikiStreamSpec extends SparkTestBase {
   }
 
   test("streaming JDBC sink: batched appends per micro-batch, no dups across files") {
-    val dir = Files.createTempDirectory("graft-stream-jdbc").toString
+    val root = Files.createTempDirectory("graft-stream-jdbc").toString
+    val dir = s"$root/dump"
+    Files.createDirectories(Paths.get(dir))
     Files.copy(Paths.get(xml), Paths.get(dir, "dump-1.xml"),
       StandardCopyOption.REPLACE_EXISTING)
     val url = "jdbc:derby:memory:graft_stream_sink;create=true"
-    graft.etl.MySqlSink.derbyReset(url, "app", "app")
-    // stream table: content bodies + the idempotence tag
-    graft.etl.MySqlSink.bootstrap(url, "app", "app", Seq(
-      """CREATE TABLE stream_articles (
-        |  aid BIGINT NOT NULL, title VARCHAR(1027) NOT NULL,
-        |  body CLOB, batch_id BIGINT NOT NULL,
-        |  PRIMARY KEY (aid))""".stripMargin))
-    def readback() = spark.read.format("jdbc").option("url", url)
-      .option("dbtable", "stream_articles").option("user", "app")
+    val ledger = "graft_stream_ledger"
+    MySqlSink.derbyReset(url, "app", "app")
+    MySqlSink.dropBestEffort(url, "app", "app", ledger)
+    MySqlSink.bootstrap(url, "app", "app", MySqlSink.derbyDdl)
+    def read(table: String) = spark.read.format("jdbc").option("url", url)
+      .option("dbtable", table).option("user", "app")
       .option("password", "app").load()
-    val content = WikiStream.cleaned(spark, dir)
-      .filter(col("rdr") === "").select(col("aid"), col("title"), col("body"))
-    val q = WikiStream.toJdbc(content, url, "stream_articles", "app", "app").start()
+    val q = StreamingJdbc.bodiesPipeline(spark, dir, url, "app", "app", s"$root/ckpt")
     try {
       q.processAllAvailable()
       val want = WikiXml.pages(spark, xml)
         .withColumn("rdr", regexp_extract(col("text"), WikiText.RedirectRegexSql, 1))
         .filter(col("rdr") === "").count()
-      assert(readback().count() == want && want > 0)
+      assert(read("bodies").count() == want && want > 0)
 
       // a second dump file lands → next micro-batch appends, no dups
       val xml2 =
@@ -93,12 +90,14 @@ class WikiStreamSpec extends SparkTestBase {
           |</mediawiki>""".stripMargin
       Files.write(Paths.get(dir, "dump-2.xml"), xml2.getBytes("UTF-8"))
       q.processAllAvailable()
-      val rows = readback().collect()
+      val rows = read("bodies").collect()
       assert(rows.length == want + 1)
       assert(rows.map(_.getLong(0)).distinct.length == rows.length, "dup aids")
-      assert(rows.exists(r => r.getString(1) == "Late2"))
-      // at least two distinct micro-batches landed (per-batch tagging)
-      assert(readback().select("batch_id").distinct().count() >= 2)
+      assert(rows.exists(r => r.getLong(0) == 60L && r.getString(1) == "Late2 body."))
+      // at least two distinct micro-batches landed rows: the ledger
+      // holds one row per committed batch id
+      assert(read(ledger).filter(col("N_ROWS") > 0)
+        .select("BATCH_ID").distinct().count() >= 2)
     } finally q.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.etl.WikiText
+import graft.etl.{WikiEtl, WikiText}
 import org.scalacheck.{Gen, Prop, Properties}
 
 /** Property-based cleaning invariants (SURVEY.md §5.2.3), run by sbt's
@@ -53,9 +53,20 @@ object WikiTextProps extends Properties("WikiText") {
           p.forall(_.isWhitespace))
     }
 
+  /** The redirect target the ETL's split (`WikiEtl.splitAndClean`)
+    * finds in each page text, in order; None for a content page. */
+  private[graft] def redirects(texts: String*): Seq[Option[String]] = {
+    val spark = SparkTestBase.session
+    import spark.implicits._
+    val pages = texts.zipWithIndex.map { case (t, i) => (i.toLong, "t", t) }
+    val rdr = WikiEtl.splitAndClean(pages.toDF("aid", "title", "text"),
+        removeHtml = true, Nil, Nil).collect()
+      .map(r => r.getLong(0) -> Option(r.getString(2)).filter(_.nonEmpty)).toMap
+    texts.indices.map(i => rdr(i.toLong))
+  }
+
   property("redirect detection is anchored") = Prop.forAll(word) { w =>
-    WikiText.detectRedirect(s"#REDIRECT [[$w]]").contains(w) &&
-      WikiText.detectRedirect(s"x #REDIRECT [[$w]]").isEmpty
+    redirects(s"#REDIRECT [[$w]]", s"x #REDIRECT [[$w]]") == Seq(Some(w), None)
   }
 
   // ---- recursive bracket-nesting generator (VERDICT r13 #4): arbitrary

@@ -96,9 +96,12 @@ class WikiTextSpec extends AnyFunSuite {
   }
 
   test("redirect detect: anchored and case-sensitive (A4 quirks)") {
-    assert(detectRedirect("#REDIRECT [[Target]]").contains("Target"))
-    assert(detectRedirect("text #REDIRECT [[X]]").isEmpty)
-    assert(detectRedirect("#redirect [[X]]").isEmpty)
+    // through the ETL's redirect split, WikiEtl.splitAndClean
+    val Seq(target, midText, lower) = WikiTextProps.redirects(
+      "#REDIRECT [[Target]]", "text #REDIRECT [[X]]", "#redirect [[X]]")
+    assert(target.contains("Target"))
+    assert(midText.isEmpty)
+    assert(lower.isEmpty)
   }
 
   test("unclosed markup never swallows the rest of the article") {
