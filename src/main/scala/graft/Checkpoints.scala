@@ -2,7 +2,7 @@ package graft
 
 import scala.annotation.tailrec
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage truncation for iterative operators (connected-components,
@@ -11,8 +11,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   *   - [[ckpt]] truncates eagerly, [[ckptLazy]] during the first
   *     consuming action; both return a frame whose plan is one
   *     `LogicalRDD` over the persisted blocks.
-  *   - [[iterate]] runs a checkpointed loop: it frees each superseded
-  *     round and returns the last one, still persisted.
+  *   - [[iterate]] runs a checkpointed loop: each round is one eager
+  *     checkpoint that also yields the round's convergence metric, it
+  *     frees each superseded round and returns the last one, still
+  *     persisted.
   *   - [[release]] frees the checkpoint blocks a frame reads.
   *     `Dataset.unpersist` does not: it is a cache-manager call, and a
   *     checkpoint is not in the cache manager.
@@ -51,13 +53,18 @@ object Checkpoints {
     * §1.2/§2.4): the blocks are persisted DURING the first consuming
     * action instead of by a dedicated materialization job, saving one
     * full pass over the frame per checkpoint (measured 0.26 s per call
-    * on the BPE fixpoint corpus at sf0.1). Correct only under the
-    * sole-consumer contract stated on [[iterate]], which is how loop
-    * rounds reach this mode; the direct callers are the seeds and rounds
-    * that loop machinery outside `iterate` owns (hashMinLabels' seed and
-    * its lblSum, the BPE round's top-pair collect). `soleConsumer` names
-    * the single consuming action, so a refactor that adds a second
-    * concurrent consumer has to touch this call and its named contract.
+    * on the BPE fixpoint corpus at sf0.1). Correct only when that
+    * action is the frame's sole consumer and reads it through a SINGLE
+    * dependency branch (a count, a sum, a collect): with several
+    * concurrent consumer stages in one job — a self-join of the frame,
+    * say — the racing map stages each recompute the un-materialized
+    * upstream (measured: q_dedup_cluster 2.1 s → 3.2 s when its
+    * membership checkpoint went lazy); such a frame needs [[ckpt]]. The
+    * direct callers are hashMinLabels' seed, whose label sum (`lblSum`,
+    * run on the seed only) materializes it, and the BPE round's top-pair
+    * collect. `soleConsumer` names the single consuming action, so a
+    * refactor that adds a second concurrent consumer has to touch this
+    * call and its named contract.
     * Semantics are unchanged either way: persist() registers the RDD at
     * call time and LocalRDDCheckpointData fills any partitions a
     * partial first action skipped before truncating lineage. */
@@ -76,37 +83,38 @@ object Checkpoints {
     df.queryExecution.logical.collectLeaves()
       .collect { case r: LogicalRDD => r.rdd }.foreach(_.unpersist(blocking = false))
 
-  /** A checkpointed loop: round k is `ckptLazy(step(round k−1))`, round
-    * 0 being `seed`, and it stops at the first round for which
-    * `settled` holds. Returns that round, still persisted: the caller
-    * [[release]]s it once its consumers have run.
+  /** A checkpointed loop: round k is `step(round k−1)`, round 0 being
+    * `seed`, and it stops at the first round for which `settled` holds.
+    * Returns that round, still persisted: the caller [[release]]s it
+    * once its consumers have run.
     *
-    * Sole-consumer contract: `settled(next)` is the only consumer of a
-    * round before the next `step`, and must read it through a SINGLE
-    * dependency branch (a count, a sum, a collect). With several
-    * concurrent consumer stages in one job — a self-join of the round,
-    * say — the racing map stages each recompute the un-materialized
-    * upstream (measured: q_dedup_cluster 2.1 s → 3.2 s when its
-    * membership checkpoint went lazy); such a frame needs [[ckpt]]
-    * before the loop. `step` may join the previous round with itself:
-    * that round is materialized by then.
+    * A round is ONE action: the stepped frame observes `metric` (an
+    * aggregate column, through `Dataset.observe`) and is materialized
+    * by an eager checkpoint, and `settled` is handed the value that
+    * checkpoint's job observed. There is no separate convergence count
+    * or sum, with its own exchange and result jobs. `step` may read the
+    * previous round through any number of branches (join it with
+    * itself, say): that round is materialized by then.
     *
-    * Once a round is materialized (by `settled`), the round it
-    * supersedes is released. The seed is released too, but only when
-    * it is itself a checkpoint (its plan is one `LogicalRDD`); a seed
-    * that merely reads checkpoints leaves them to the caller.
+    * Once a round is materialized, the round it supersedes is released.
+    * The seed is released too, but only when it is itself a checkpoint
+    * (its plan is one `LogicalRDD`); a seed that merely reads
+    * checkpoints leaves them to the caller.
     *
+    * @param metric an aggregate over a round's rows, e.g. `count(p)`; a
+    *   round's value is `settled`'s argument (null for a null aggregate)
     * @param maxRounds the most rounds the loop may take; if round
     *   `maxRounds` is not settled, its blocks are released and an
     *   IllegalStateException naming `name` is thrown
     */
   def iterate(seed: DataFrame, maxRounds: Int, name: String)(
-      step: DataFrame => DataFrame)(settled: DataFrame => Boolean): DataFrame = {
+      step: DataFrame => DataFrame)(metric: Column)(settled: Any => Boolean): DataFrame = {
     require(maxRounds >= 1, s"$name: maxRounds must be at least 1, got $maxRounds")
     val seedIsCheckpoint = seed.queryExecution.logical.isInstanceOf[LogicalRDD]
     @tailrec def loop(prev: DataFrame, round: Int): DataFrame = {
-      val next = ckptLazy(step(prev), soleConsumer = s"$name's settled test")
-      val done = settled(next)
+      val seen = Observation(s"$name round $round")
+      val next = ckpt(step(prev).observe(seen, metric.as("metric")))
+      val done = settled(seen.get("metric"))
       if (round > 1 || seedIsCheckpoint) release(prev)
       if (done) next
       else if (round == maxRounds) {

@@ -33,32 +33,37 @@ import org.apache.spark.sql.functions._
   */
 object Redirects {
 
-  /** @param redirects (src, dst) — the redirect edges, one start row each
+  /** @param redirects (src, dst, …) — the redirect edges, one start row
+    *   each; any further columns ride along with their row
     * @param content   (title, bid) — body id per content title
-    * @return (src, bid) for every start row whose walk reaches content
+    * @return every column of `redirects` but `dst`, plus `bid`, for every
+    *   start row whose walk reaches content: (src, bid) for (src, dst)
     *
     * Pointer jumping (Wyllie's list ranking). The state is one row per
     * title, `(n, p, b, d)`: a terminal has body id `b` at `d` hops; an
-    * open row points at the title `p`, `d` hops down its walk. A round
-    * joins the state with itself on `p = n`: an open row takes its
-    * target's pointer, or its body id if the target is terminal, and
-    * adds the target's `d`; an open row whose target is gone drops. So
-    * an open row's `d` doubles every round (1, 2, 4, …). A row with
+    * open row points at the title `p`, `d` hops down its walk. A hop
+    * joins a state with the previous round's on `p = n`: an open row
+    * takes its target's pointer, or its body id if the target is
+    * terminal, and adds the target's `d`; an open row whose target is
+    * gone drops. A round is two hops against the same previous round, so
+    * an open row's `d` triples every round (1, 3, 9, …). A row with
     * `d > maxIters − 1` can serve no walk within the budget (`d` only
-    * grows) and is pruned, which is also what drains cycles. Hence at
-    * most ⌈log₂ maxIters⌉ rounds (one when maxIters ≤ 2) and a final
-    * join of the start rows against the terminals: ⌈log₂ maxIters⌉ + 1
-    * joins, whatever the chain lengths. That round count is the cap
-    * given to Checkpoints.iterate, so the cap cannot trip.
+    * grows) and is pruned after the second hop, which is also what
+    * drains cycles. Hence at most ⌈log₃ maxIters⌉ rounds (one when
+    * maxIters ≤ 3) and a final join of the start rows against the
+    * terminals: 2⌈log₃ maxIters⌉ + 1 joins, whatever the chain lengths
+    * (7 at the default budget of 20, in 3 rounds). That round count is
+    * the cap given to Checkpoints.iterate, so the cap cannot trip.
     *
     * Scale: the state holds every title of the redirect graph in every
     * round, terminals included. The rounds run under
-    * Checkpoints.iterate, so lineage stays O(1) per round, the open-row
-    * count that tests convergence is what materializes a round, and a
-    * superseded round's blocks are freed as soon as the next one is
-    * materialized. The last round's stay persisted under the returned
-    * frame: the caller frees them with `Checkpoints.release` once the
-    * result is consumed (WikiEtl.run's cleanup).
+    * Checkpoints.iterate, so lineage stays O(1) per round, each round is
+    * one eager checkpoint that also observes its open-row count (the
+    * convergence test), and a superseded round's blocks are freed as
+    * soon as the next one is materialized. The last round's stay
+    * persisted under the returned frame: the caller frees them with
+    * `Checkpoints.release` once the result is consumed (WikiEtl.run's
+    * cleanup).
     */
   def resolveTransitive(
       redirects: DataFrame,
@@ -76,20 +81,20 @@ object Redirects {
     val seed = titles.select(col("n"), when(col("b").isNull, col("p")).as("p"), col("b"),
         when(col("b").isNull, lit(1)).otherwise(lit(0)).as("d"))
       .filter(col("d") <= budget)
-    // ⌈log₂ maxIters⌉, at least 1
-    val rounds = math.max(1, 32 - Integer.numberOfLeadingZeros(maxIters - 1))
+    // the fewest rounds R with 3^R > budget, at least 1
+    val rounds = math.max(1, Iterator.iterate(1L)(_ * 3).indexWhere(_ > budget))
     val terminals = Checkpoints.iterate(seed, rounds, "Redirects.resolveTransitive") { state =>
       val target = state.select(col("n").as("t_n"), col("p").as("t_p"),
         col("b").as("t_b"), col("d").as("t_d"))
-      state.join(target, col("p") === col("t_n"), "left")
+      def hop(s: DataFrame): DataFrame = s.join(target, col("p") === col("t_n"), "left")
         .filter(col("p").isNull || col("t_n").isNotNull)
         .select(col("n"), col("t_p").as("p"), coalesce(col("b"), col("t_b")).as("b"),
           (col("d") + coalesce(col("t_d"), lit(0))).as("d"))
-        .filter(col("d") <= budget)
-    }(_.filter(col("p").isNotNull).count() == 0)
+      hop(hop(state)).filter(col("d") <= budget)
+    }(count(col("p")))(_ == 0L)
     // no open row is left: every state row is a terminal within budget
-    redirects.select(col("src"), col("dst"))
-      .join(terminals, col("dst") === col("n"))
-      .select(col("src"), col("b").as("bid"))
+    redirects.join(terminals, redirects("dst") === terminals("n"))
+      .select(redirects.columns.filter(_ != "dst").map(redirects(_)) :+
+        terminals("b").as("bid"): _*)
   }
 }

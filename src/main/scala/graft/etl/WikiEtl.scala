@@ -101,13 +101,13 @@ object WikiEtl {
     // title → body-id map; cycles/dead-ends drop (A7 semantics).
     val redirectPages = pages.filter(col("rdr") =!= "")
       .select(col("title").as("src"), col("rdr").as("dst"), col("aid").as("r_aid"))
-    val resolvedRaw = Redirects.resolveTransitive(
-        redirectPages.select(col("src"), col("dst")),
+    // each start row keeps its own r_aid, so two redirect pages that
+    // share a title each get their own walk's body
+    val resolvedRaw = Redirects.resolveTransitive(redirectPages,
         contentArticles.select(col("title"), col("body_id").as("bid")))
     // the last redirect round stays persisted under `resolvedRaw` until
     // `articles` is materialized; cleanup releases it
     val resolved = resolvedRaw
-      .join(redirectPages, "src")
       .select(col("r_aid").as("aid"), col("src").as("title"), col("bid").as("body_id"))
 
     val articles = withDenseId(

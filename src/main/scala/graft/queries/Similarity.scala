@@ -396,8 +396,8 @@ object Similarity {
     * The hops run under Checkpoints.iterate (reliable checkpoints when
     * spark.graft.checkpointDir is set) so lineage stays flat; hash-min
     * labels only ever DECREASE, so the exact-decimal label sum strictly
-    * decreases until the fixpoint — convergence is one narrow aggregate
-    * per hop, not a prev-vs-next join. */
+    * decreases until the fixpoint — convergence is a metric each hop's
+    * checkpoint observes, not a prev-vs-next join or a job of its own. */
   def hashMinLabels(memb0: DataFrame, docIds: DataFrame): DataFrame = {
     // Measured and rejected (bench, sf0.1): (a) pre-filtering to the
     // collision subgraph (buckets with ≥2 docs) and (b) keeping two
@@ -419,10 +419,8 @@ object Similarity {
     // sum over an EMPTY doc set is NULL — map it to zero so a fully
     // filtered-out corpus (possible upstream of q_pipeline_e2e's gates)
     // converges immediately instead of NPE-ing on compareTo
-    def lblSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("lbl").cast("decimal(38,0)"))).head().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = lblSum(labels0)
+    val lblSum = coalesce(sum(col("lbl").cast("decimal(38,0)")), lit(0))
+    var prevSum = labels0.agg(lblSum).head().getDecimal(0)
     // diameter bound: a 64-hop chain of DISTINCT band collisions is
     // pathological for near-dup graphs; hitting it unconverged FAILS
     // LOUDLY — a silently truncated clustering would diverge from the
@@ -437,9 +435,9 @@ object Similarity {
       labels.join(docMin, Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("lbl"))
-    } { next =>
+    }(lblSum) { observed =>
       val prev = prevSum
-      prevSum = lblSum(next)
+      prevSum = observed.asInstanceOf[java.math.BigDecimal]
       prevSum.compareTo(prev) == 0
     } finally Checkpoints.release(membC)
   }

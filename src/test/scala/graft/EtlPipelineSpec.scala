@@ -119,6 +119,27 @@ class EtlPipelineSpec extends SparkTestBase {
     assert(articles.toSeq == Seq((1L, 1L, "Alpha", 1L), (2L, 2L, "Alif", 1L), (3L, 3L, "Aleph", 1L)))
   }
 
+  test("redirect pages that share a title each get their own walk's body") {
+    // Alpha (1) and Beta (2) are content; two pages titled X (aids 3
+    // and 4) redirect to Alpha and Beta
+    def page(title: String, id: Int, text: String) =
+      s"<page><title>$title</title><ns>0</ns><id>$id</id>" +
+        s"<revision><text>$text</text></revision></page>\n"
+    val dump = Files.createTempFile("graft-dup-title", ".xml")
+    Files.write(dump, ("<mediawiki>\n" + page("Alpha", 1, "Alpha is a letter.") +
+      page("Beta", 2, "Beta is a letter.") + page("X", 3, "#REDIRECT [[Alpha]]") +
+      page("X", 4, "#REDIRECT [[Beta]]") + "</mediawiki>\n").getBytes("UTF-8"))
+    val out = WikiEtl.run(spark, dump.toString)
+    try {
+      val redirects = out.articles.collect()
+        .map(r => (r.getLong(1), r.getString(2), r.getLong(3))).filter(_._2 == "X")
+      assert(redirects.toSeq.sorted == Seq((3L, "X", 1L), (4L, "X", 2L)))
+    } finally {
+      out.cleanup()
+      Files.delete(dump)
+    }
+  }
+
   test("unicode filter flags flow through the pipeline") {
     val out = WikiEtl.run(spark, xml, removeHtml = true, valid = Seq((0x20, 0x7e)))
     assert(out.bodies.collect().head.getString(1).forall(c => c >= 0x20 && c <= 0x7e))

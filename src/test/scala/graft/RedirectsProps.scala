@@ -78,13 +78,14 @@ object RedirectsProps extends Properties("Redirects") {
   } yield (edges, content)
 
   property("random graphs: same multiset as the reference walk") =
-    Prop.forAllNoShrink(graph, Gen.oneOf(0, 1, 2, 3, 20)) { case ((edges, content), maxIters) =>
-      matchesWalk(resolved(edges, content, maxIters), edges, content, maxIters)
+    Prop.forAllNoShrink(graph, Gen.oneOf(0, 1, 2, 3, 4, 10, 20, 28)) {
+      case ((edges, content), maxIters) =>
+        matchesWalk(resolved(edges, content, maxIters), edges, content, maxIters)
     }
 
   // fixed graphs run once, when the property is checked (Prop.lzy)
   property("edge cases: budget boundary, cycles, self-loops, duplicates, nulls") =
-    Prop.lzy(Prop.all(Seq(0, 1, 2, 20).map { m =>
+    Prop.lzy(Prop.all(Seq(0, 1, 2, 4, 10, 20, 28).map { m =>
       val chains = Seq(m - 1, m, m + 1).filter(_ >= 1)
         .map(h => chain(s"c$h", h, 100L + h))
       val edges: Seq[Edge] = chains.flatMap(_._1) ++ Seq(
