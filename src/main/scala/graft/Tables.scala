@@ -1,18 +1,70 @@
 package graft
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   * Plain parquet scans: Catalyst pushes filters/column pruning into the
   * scan, so callers should select/filter as early as possible and let the
   * optimizer do the rest.
+  *
+  * Each table's schema is inferred once per session. Parquet schema
+  * inference (`ParquetUtils.inferSchema` → `mergeSchemasInParallel`) is
+  * one Spark job per read, ≈35–45 ms warm on 4 cores, and a query body
+  * loads up to six tables. So the first load of a table remembers the
+  * raw schema the read inferred, and later loads hand it to
+  * `read.schema(...)`, which only lists the files and runs no job. The
+  * memo holds its sessions weakly, and for each session one entry per
+  * table path, stamped with:
+  *  - the table's [[dataFingerprint]] (a metadata listing, no job), so a
+  *    table rewritten in place is inferred afresh;
+  *  - the session's values of the parquet confs that change inferred
+  *    types ([[InferConfs]]).
+  *
+  * It remembers the schema, not the `DataFrame`: every load is still a
+  * fresh relation with fresh expression ids, so two loads of one table
+  * join as two independent scans, with the plans they had before the
+  * memo. A remembered `DataFrame` would give both sides the same
+  * attributes and change how such self-joins resolve.
   */
 object Tables {
   def load(s: SparkSession, sfDir: String, name: String): DataFrame =
-    if (name == "events") loadEvents(s, s"$sfDir/$name.parquet")
-    else s.read.parquet(s"$sfDir/$name.parquet")
+    if (name == "events") loadEvents(s, sfDir)
+    else read(s, sfDir, name)
+
+  /** Session confs under which parquet inference can yield another type
+    * for the same file. */
+  private val InferConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong")
+
+  /** session → table path → (stamp, schema inferred under that stamp). */
+  private val schemas =
+    mutable.WeakHashMap.empty[SparkSession, mutable.Map[String, (String, StructType)]]
+
+  private def memo(s: SparkSession): mutable.Map[String, (String, StructType)] =
+    schemas.getOrElseUpdate(s, mutable.Map.empty)
+
+  /** `s.read.parquet` of one table, inferring its schema only when this
+    * session has not read the table's current files under its current
+    * [[InferConfs]]. */
+  private def read(s: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val stamp = (dataFingerprint(s, sfDir, Seq(name)) +:
+      InferConfs.map(k => s.conf.getOption(k).getOrElse(""))).mkString("|")
+    schemas.synchronized(memo(s).get(path)) match {
+      case Some((`stamp`, schema)) => s.read.schema(schema).parquet(path)
+      case _ =>
+        val df = s.read.parquet(path)
+        schemas.synchronized(memo(s)(path) = stamp -> df.schema)
+        df
+    }
+  }
 
   /** Content fingerprint of a data dir's table files — the key the
     * persisted-store probe queries (`q_bm25_probe`, `q_ann_index_probe`,
@@ -51,14 +103,17 @@ object Tables {
     * The legacy conf is captured at DataFrame creation (verified
     * empirically: execution after restore succeeds), so save/restore
     * keeps the flip scoped to THIS read instead of mutating the shared
-    * session for every later TIMESTAMP(NANOS) scan (ADVICE r1).
+    * session for every later TIMESTAMP(NANOS) scan (ADVICE r1). The flip
+    * wraps the remembered-schema read too, and the dispatch below runs on
+    * the raw `ts` type either read reports.
     */
-  private def loadEvents(s: SparkSession, path: String): DataFrame = {
+  private def loadEvents(s: SparkSession, sfDir: String): DataFrame = {
+    val path = s"$sfDir/events.parquet"
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     val prev = s.conf.getOption(key)
     s.conf.set(key, "true")
     val df =
-      try s.read.parquet(path)
+      try read(s, sfDir, "events")
       finally prev match {
         case Some(v) => s.conf.set(key, v)
         case None    => s.conf.unset(key)

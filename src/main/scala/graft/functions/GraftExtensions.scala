@@ -54,12 +54,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction((
       FunctionIdentifier("graft_qsketch"),
       new ExpressionInfo(classOf[QuantileSketch].getName, "graft_qsketch"),
-      (exprs: Seq[Expression]) => QuantileSketch(
-        exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue(),
-        exprs(2).eval(null)
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toIntArray().toSeq)))
+      QuantileSketch.build _))
     e.injectFunction((
       FunctionIdentifier("graft_lshsig_md5"),
       new ExpressionInfo(classOf[LshSigMd5].getName, "graft_lshsig_md5"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import scala.collection.mutable
 
@@ -147,13 +147,18 @@ object QuantileSketch {
     val neg: mutable.HashMap[Int, Long] = mutable.HashMap.empty
   }
 
+  /** The `graft_qsketch(col, alpha_bp, array(q_bp...))` builder, for
+    * this registry and [[GraftExtensions]]: a NULL or non-literal
+    * `alpha_bp` or quantile array is an `IllegalArgumentException`. */
+  def build(exprs: Seq[Expression]): QuantileSketch = QuantileSketch(
+    exprs.head,
+    VectorExprs.literalLong(exprs(1), "graft_qsketch", "alpha_bp").toInt,
+    VectorExprs.literalInts(exprs(2), "graft_qsketch", "quantiles"))
+
   /** Idempotently register `graft_qsketch(col, alpha_bp, array(q_bp...))`. */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.registerFunction(
       FunctionIdentifier("graft_qsketch"),
       new ExpressionInfo(classOf[QuantileSketch].getName, "graft_qsketch"),
-      (exprs: Seq[Expression]) => QuantileSketch(
-        exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue(),
-        exprs(2).eval(null).asInstanceOf[ArrayData].toIntArray().toSeq))
+      build _)
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Native Catalyst expressions for the vector hot paths (SURVEY.md §4.3
   * escalation rule: built-in functions → custom `Expression` with
@@ -430,6 +430,18 @@ object VectorExprs {
       case b: java.lang.Boolean => b.booleanValue()
       case other => throw new IllegalArgumentException(
         s"$fn: $arg must be a literal boolean, got $other")
+    }
+  }
+
+  /** [[literalLong]]'s twin for an `array(...)` of INT literals. */
+  private[functions] def literalInts(e: Expression, fn: String, arg: String): Seq[Int] = {
+    if (!e.foldable)
+      throw new IllegalArgumentException(
+        s"$fn: $arg must be a literal int array, got non-foldable expression ${e.sql}")
+    (e.dataType, e.eval(null)) match {
+      case (ArrayType(IntegerType, false), a: ArrayData) => a.toIntArray().toSeq
+      case _ => throw new IllegalArgumentException(
+        s"$fn: $arg must be a literal int array without NULLs, got ${e.sql}")
     }
   }
 

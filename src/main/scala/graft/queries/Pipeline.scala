@@ -1109,12 +1109,15 @@ object Pipeline {
     // snapshots per ingest batch — one pass over the table computing
     // per-column null counts, distinct counts, and min/max, unpivoted
     // to (column, metric) rows. One hash aggregate; the unpivot is
-    // row-local.
+    // row-local. `n_chars` is the one DISTINCT aggregate: two of them
+    // would make an `Expand` that lists their columns in either order
+    // from run to run (one plan text per run), so the low-cardinality
+    // `lang` counts the set it collects instead.
     "q_dq_profile" -> ((s, d) => {
       val agg = load(s, d, "documents").agg(
         count(lit(1)).as("n_rows"),
         count_if(col("lang").isNull).as("lang_nulls"),
-        countDistinct(col("lang")).as("lang_distinct"),
+        size(collect_set(col("lang"))).cast("long").as("lang_distinct"),
         min(col("lang")).as("lang_min"), max(col("lang")).as("lang_max"),
         count_if(col("n_chars").isNull).as("chars_nulls"),
         countDistinct(col("n_chars")).as("chars_distinct"),

@@ -71,4 +71,15 @@ class QuantileSketchSpec extends SparkTestBase {
       .collect().head.getSeq[Double](0)
     assert(math.abs(ps.head - 2.0) <= 0.02 + 1e-9, ps.mkString(","))
   }
+
+  test("a NULL or non-literal alpha_bp or quantile array is a readable IllegalArgumentException") {
+    for (call <- Seq("graft_qsketch(c, NULL, NULL)", "graft_qsketch(c, NULL, array(5000))",
+        "graft_qsketch(c, 100, NULL)", "graft_qsketch(c, 100, array(5000, NULL))",
+        "graft_qsketch(c, c, array(5000))", "graft_qsketch(c, 100, array(c))")) {
+      val e = intercept[IllegalArgumentException] {
+        spark.sql(s"SELECT $call FROM VALUES (1), (2) AS t(c)").collect()
+      }
+      assert(e.getMessage.startsWith("graft_qsketch: "), s"$call: ${e.getMessage}")
+    }
+  }
 }

@@ -7,7 +7,9 @@
 #   5. repo benchmark: its own tests (perfbench/test.py), then one run
 #      per workload (perfbench/run.py), then one traced etl_redirects run
 #      whose per-layer job counts must all be non-zero, and whose
-#      Redirects job count must not exceed its measured ceiling
+#      Redirects job count must not exceed its measured ceiling, and one
+#      traced query_mix run whose Relational job count must not exceed
+#      its measured ceiling
 # Exit nonzero on the first red step. Artifacts land under
 # /tmp/graft-closing-<ts>/ and a one-line PASS/FAIL summary per step is
 # printed at the end for the round status block.
@@ -117,6 +119,26 @@ sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 and not zero
 PY
 }
 step "perfbench-etl-layers" etl_layers_check
+
+# The traced query mix's twin: its relational control, q_tpch_q5, loads
+# six tables, and Tables.load infers a table's schema with a job only on
+# the session's first load of it. The traced seed-1 run counts 9 jobs in
+# the Relational layer per pass (15 when every load inferred its schema).
+mix_layers_check() {
+  python3 perfbench/run.py --workload query_mix --seed 1 --seconds 10 --trace 1 \
+    > "$OUT/perfbench-mix-layers.out" || return 1
+  tail -n 1 "$OUT/perfbench-mix-layers.out"
+  python3 - "$OUT/perfbench-mix-layers.out" <<'PY'
+import json, sys
+r = json.loads(open(sys.argv[1]).read().strip().splitlines()[-1])
+jobs = r.get("metrics", {}).get("Relational.jobs", {}).get("value", 0)
+relational_jobs_max = 9  # measured on seed 1; 15 before loads reused schemas
+print(json.dumps({"Relational.jobs": jobs}))
+sys.exit(0 if r.get("correct") is True and r.get("failed") == 0
+         and 0 < jobs <= relational_jobs_max else 1)
+PY
+}
+step "perfbench-mix-layers" mix_layers_check
 
 echo
 echo "=== closing summary ($OUT) ==="

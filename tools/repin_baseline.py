@@ -17,7 +17,12 @@ smallest clears the 0.3 s noise floor). Using battery-mins (each
 already min-of-3 reps) instead of raw reps separates environment drift
 across batteries from scheduler noise within one.
 
-Usage: python3 tools/repin_baseline.py [--drop-absent] bench_b1.json bench_b2.json ...
+On a new host the previous pins measured other hardware, so
+`--new-host DESCRIPTION` pins every query from the fresh batteries
+alone, re-derives every stability verdict from them, drops queries they
+did not run, and records DESCRIPTION as `_meta.host`.
+
+Usage: python3 tools/repin_baseline.py [--drop-absent] [--new-host DESC] bench_b1.json ...
 Writes BASELINE_QUERIES.json in place; prints a summary.
 """
 import argparse
@@ -57,12 +62,15 @@ def battery_mins(path):
     return {q: min(runs) for q, runs in j["runs"].items()}
 
 
-def main(paths, drop_absent=False):
+def main(paths, drop_absent=False, new_host=None):
     with open(OLD) as f:
         old = json.load(f)
     old_pins = {k: v for k, v in old.items() if k != "_meta"}
     old_unstable = set(old.get("_meta", {}).get("unstable", []))
     old_spread = old.get("_meta", {}).get("spread_pct", {})
+    host = new_host or old.get("_meta", {}).get("host", "local[32]")
+    if new_host:
+        old_pins, old_unstable, old_spread, drop_absent = {}, set(), {}, True
 
     batteries = [battery_mins(p) for p in paths]
     names = sorted(set().union(*[set(b) for b in batteries]))
@@ -116,19 +124,22 @@ def main(paths, drop_absent=False):
     total = round(sum(pins.values()), 3)
     meta = {
         "pinned_from": (
-            "elementwise min over (the prior pin, which chains back "
-            "through every earlier pinned battery) and "
-            f"{len(paths)} fresh grouped batteries (noop sink, "
-            "per-query warmup, min-of-3, sf0.1, local[32], fresh JVM "
+            ("fresh batteries only, on a new host: " if new_host else
+             "elementwise min over (the prior pin, which chains back "
+             "through every earlier pinned battery) and ")
+            + f"{len(paths)} fresh grouped batteries (noop sink, "
+            f"per-query warmup, min-of-3, sf0.1, {host}, fresh JVM "
             "per battery)."
             + (" Fresh-only (implementation changed since last pin): "
-               + ", ".join(sorted(FRESH_ONLY)) + "." if FRESH_ONLY else "")
+               + ", ".join(sorted(FRESH_ONLY)) + "."
+               if FRESH_ONLY and not new_host else "")
             + (" Stability carried forward (absent or < 2 fresh "
                "observations this re-pin): "
                + ", ".join(sorted(set(carried_stability))) + "."
                if carried_stability else "")
         ),
         "date": date.today().isoformat(),
+        "host": host,
         "total_sec": total,
         "total_sec_note": "total_sec is the sum of the rounded per-query "
                           "values; validators should compare with tolerance 1e-3.",
@@ -169,5 +180,8 @@ if __name__ == "__main__":
     ap.add_argument("--drop-absent", action="store_true",
                     help="drop old pins for queries absent from the fresh "
                          "batteries (registry shrank)")
+    ap.add_argument("--new-host", metavar="DESCRIPTION",
+                    help="pin from the fresh batteries alone: the previous "
+                         "pins were measured on other hardware")
     args = ap.parse_args()
-    main(args.batteries, drop_absent=args.drop_absent)
+    main(args.batteries, drop_absent=args.drop_absent, new_host=args.new_host)
