@@ -2,11 +2,9 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -55,9 +53,10 @@ case class CountMinSketch(
   // Declared input contract (ADVICE r15): a wrongly-typed key/count
   // becomes an ANALYSIS error instead of the blind UTF8String cast in
   // update() dying mid-task with an opaque ClassCastException.
+  // A NULL key or count (NullType) is accepted: update() skips its rows.
   override def checkInputDataTypes(): TypeCheckResult = keyExpr.dataType match {
-    case StringType => cntExpr.dataType match {
-      case LongType | IntegerType | ShortType | ByteType =>
+    case StringType | NullType => cntExpr.dataType match {
+      case LongType | IntegerType | ShortType | ByteType | NullType =>
         TypeCheckResult.TypeCheckSuccess
       case other => TypeCheckResult.TypeCheckFailure(
         s"graft_cms: cnt must be an integral type, got ${other.simpleString}")
@@ -133,14 +132,4 @@ object CountMinSketch {
     val v = (((dig(0) >> 4) & 0xf) << 8) | ((dig(0) & 0xf) << 4) | ((dig(1) >> 4) & 0xf)
     v % width
   }
-
-  /** Idempotently register `graft_cms(key, cnt, depth, width)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_cms"),
-      new ExpressionInfo(classOf[CountMinSketch].getName, "graft_cms"),
-      (exprs: Seq[Expression]) => CountMinSketch(
-        exprs.head, exprs(1),
-        VectorExprs.literalLong(exprs(2), "graft_cms", "depth").toInt,
-        VectorExprs.literalLong(exprs(3), "graft_cms", "width").toInt))
 }

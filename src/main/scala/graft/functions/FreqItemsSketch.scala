@@ -1,10 +1,8 @@
 package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -111,15 +109,4 @@ case class FreqItemsSketch(
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
     copy(child = c.head)
   override def prettyName: String = "graft_freq_items"
-}
-
-object FreqItemsSketch {
-  /** Idempotently register `graft_freq_items(col, k)` on a session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_freq_items"),
-      new ExpressionInfo(classOf[FreqItemsSketch].getName, "graft_freq_items"),
-      (exprs: Seq[Expression]) => FreqItemsSketch(
-        exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue()))
 }

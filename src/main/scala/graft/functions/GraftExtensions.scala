@@ -1,11 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** SparkSessionExtensions entry point — the configuration-driven way to
-  * install the engine's native expressions on any session:
+/** SparkSessionExtensions entry point, and the one route by which the
+  * engine's `graft_*` SQL functions reach a session:
   *
   * {{{
   *   SparkSession.builder()
@@ -13,135 +18,108 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   // or: --conf spark.sql.extensions=graft.functions.GraftExtensions
   * }}}
   *
-  * Query code that can't control session construction uses
-  * `VectorExprs.register(spark)` instead; both routes install the same
-  * expression builders.
+  * Every function is one entry of [[GraftExtensions.functions]]; the
+  * extension installs the whole table into each session it builds, the
+  * way MySQL declares a loadable function once in one catalog table.
+  * A session built without the extension fails loudly with
+  * `UNRESOLVED_ROUTINE` on the first `graft_*` call.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("graft_ldot"),
-      new ExpressionInfo(classOf[LongDot].getName, "graft_ldot"),
-      (exprs: Seq[Expression]) => LongDot(exprs.head, exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_quantize"),
-      new ExpressionInfo(classOf[QuantizeVec].getName, "graft_quantize"),
-      (exprs: Seq[Expression]) => QuantizeVec(exprs.head,
-        VectorExprs.literalLong(exprs(1), "graft_quantize", "scale"))))
-    e.injectFunction((
-      FunctionIdentifier("graft_maxsim"),
-      new ExpressionInfo(classOf[MaxSim].getName, "graft_maxsim"),
-      (exprs: Seq[Expression]) => MaxSim(exprs.head, exprs(1),
-        VectorExprs.literalLong(exprs(2), "graft_maxsim", "subDim").toInt)))
-    e.injectFunction((
-      FunctionIdentifier("graft_lshsig"),
-      new ExpressionInfo(classOf[LshSig].getName, "graft_lshsig"),
-      (exprs: Seq[Expression]) => LshSig(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_rollminhash"),
-      new ExpressionInfo(classOf[RollingMinHash].getName, "graft_rollminhash"),
-      (exprs: Seq[Expression]) => RollingMinHash(
-        exprs.head,
-        VectorExprs.literalLong(exprs(1), "graft_rollminhash", "width").toInt)))
-    e.injectFunction((
-      FunctionIdentifier("graft_try_long"),
-      new ExpressionInfo(classOf[TryLong].getName, "graft_try_long"),
-      (exprs: Seq[Expression]) => TryLong(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_tokcount"),
-      new ExpressionInfo(classOf[TokenCount].getName, "graft_tokcount"),
-      (exprs: Seq[Expression]) => TokenCount(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_qsketch"),
-      new ExpressionInfo(classOf[QuantileSketch].getName, "graft_qsketch"),
-      QuantileSketch.build _))
-    e.injectFunction((
-      FunctionIdentifier("graft_lshsig_md5"),
-      new ExpressionInfo(classOf[LshSigMd5].getName, "graft_lshsig_md5"),
-      (exprs: Seq[Expression]) => LshSigMd5(exprs.head,
-        VectorExprs.literalLong(exprs(1), "graft_lshsig_md5", "nPlanes").toInt)))
-    e.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_cdc_starts"),
-      new ExpressionInfo(classOf[CdcStarts].getName, "graft_cdc_starts"),
-      (exprs: Seq[Expression]) => CdcStarts(
-        exprs.head,
-        VectorExprs.literalLong(exprs(1), "graft_cdc_starts", "gram").toInt)))
-    e.injectFunction((
-      FunctionIdentifier("graft_collapse_ws"),
-      new ExpressionInfo(classOf[CollapseWs].getName, "graft_collapse_ws"),
-      (exprs: Seq[Expression]) => CollapseWs(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_char_filter"),
-      new ExpressionInfo(classOf[CharFilter].getName, "graft_char_filter"),
-      (exprs: Seq[Expression]) => CharFilter(
-        exprs.head,
-        VectorExprs.literalString(exprs(1), "graft_char_filter", "spec"),
-        VectorExprs.literalBool(exprs(2), "graft_char_filter", "keepInside"))))
-    e.injectFunction((
-      FunctionIdentifier("graft_paren_toks"),
-      new ExpressionInfo(classOf[ParenToks].getName, "graft_paren_toks"),
-      (exprs: Seq[Expression]) => ParenToks(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_pretok_gpt2"),
-      new ExpressionInfo(classOf[PretokGpt2].getName, "graft_pretok_gpt2"),
-      (exprs: Seq[Expression]) => PretokGpt2(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_letter_counts"),
-      new ExpressionInfo(classOf[LetterCounts].getName, "graft_letter_counts"),
-      (exprs: Seq[Expression]) => LetterCounts(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_paren_pairs"),
-      new ExpressionInfo(classOf[ParenPairs].getName, "graft_paren_pairs"),
-      (exprs: Seq[Expression]) => ParenPairs(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_gram_md5s"),
-      new ExpressionInfo(classOf[GramMd5s].getName, "graft_gram_md5s"),
-      (exprs: Seq[Expression]) => GramMd5s(exprs.head,
-        VectorExprs.literalLong(exprs(1), "graft_gram_md5s", "n").toInt)))
-    e.injectFunction((
-      FunctionIdentifier("graft_grams"),
-      new ExpressionInfo(classOf[Grams].getName, "graft_grams"),
-      (exprs: Seq[Expression]) => Grams(exprs.head,
-        VectorExprs.literalLong(exprs(1), "graft_grams", "n").toInt)))
-    e.injectFunction((
-      FunctionIdentifier("graft_word_counts"),
-      new ExpressionInfo(classOf[WordCounts].getName, "graft_word_counts"),
-      (exprs: Seq[Expression]) => WordCounts(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_minhash8"),
-      new ExpressionInfo(classOf[MinHash8].getName, "graft_minhash8"),
-      (exprs: Seq[Expression]) => MinHash8(exprs.head,
-        VectorExprs.literalLong(exprs(1), "graft_minhash8", "n").toInt)))
-    e.injectFunction((
-      FunctionIdentifier("graft_sort_join"),
-      new ExpressionInfo(classOf[SortJoin].getName, "graft_sort_join"),
-      (exprs: Seq[Expression]) => SortJoin(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_count_in"),
-      new ExpressionInfo(classOf[CountIn].getName, "graft_count_in"),
-      (exprs: Seq[Expression]) => CountIn(exprs.head,
-        VectorExprs.literalString(exprs(1), "graft_count_in", "spec"))))
-    e.injectFunction((
-      FunctionIdentifier("graft_len_sum"),
-      new ExpressionInfo(classOf[LenSum].getName, "graft_len_sum"),
-      (exprs: Seq[Expression]) => LenSum(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_toks"),
-      new ExpressionInfo(classOf[Toks].getName, "graft_toks"),
-      (exprs: Seq[Expression]) => Toks(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_cms"),
-      new ExpressionInfo(classOf[CountMinSketch].getName, "graft_cms"),
-      (exprs: Seq[Expression]) => CountMinSketch(
-        exprs.head, exprs(1),
-        VectorExprs.literalLong(exprs(2), "graft_cms", "depth").toInt,
-        VectorExprs.literalLong(exprs(3), "graft_cms", "width").toInt)))
+    GraftExtensions.functions.foreach { f =>
+      e.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.className, f.name), f.checkedBuild))
+    }
     // Operator-optimization batch: rewrite the canonical
     // size∘filter∘split token-count tree into the primitive scan.
     e.injectOptimizerRule(_ => TokenCountRewrite)
   }
+}
+
+object GraftExtensions {
+  /** The argument list of one call to function `name`. A literal
+    * parameter is checked when the call is resolved: a NULL, a value of
+    * the wrong kind, or a non-foldable expression (a column, a subquery)
+    * is an `IllegalArgumentException` that starts with the function's
+    * name, where `eval(null)` would die with an opaque NPE or
+    * ClassCastException inside function resolution. */
+  final class Args(name: String, exprs: Seq[Expression]) {
+    def apply(i: Int): Expression = exprs(i)
+    def long(i: Int, arg: String): Long =
+      literal(i, arg, "number") { case (_, n: Number) => n.longValue() }
+    def int(i: Int, arg: String): Int = long(i, arg).toInt
+    def string(i: Int, arg: String): String =
+      literal(i, arg, "string") { case (_, s: UTF8String) => s.toString }
+    def bool(i: Int, arg: String): Boolean =
+      literal(i, arg, "boolean") { case (_, b: java.lang.Boolean) => b.booleanValue() }
+    def ints(i: Int, arg: String): Seq[Int] =
+      literal(i, arg, "int array without NULLs") {
+        case (ArrayType(IntegerType, false), a: ArrayData) => a.toIntArray().toSeq
+      }
+
+    private def literal[T](i: Int, arg: String, kind: String)(
+        read: PartialFunction[(DataType, Any), T]): T = {
+      val e = exprs(i)
+      def bad(got: String) =
+        new IllegalArgumentException(s"$name: $arg must be a literal $kind, got $got")
+      if (!e.foldable) throw bad(s"non-foldable expression ${e.sql}")
+      read.applyOrElse((e.dataType, e.eval(null)), (_: (DataType, Any)) => throw bad(e.sql))
+    }
+  }
+
+  /** One SQL function: its name, its argument count, the class of the
+    * expression it builds, and the builder. */
+  final case class Fn(name: String, arity: Int, className: String,
+                      build: Args => Expression) {
+    /** [[build]] behind the arity check: a wrong argument count is
+      * Spark's own `WRONG_NUM_ARGS` analysis error, never an index
+      * error from inside the builder. */
+    def checkedBuild(args: Seq[Expression]): Expression = {
+      if (args.length != arity)
+        throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+          "functionName" -> s"`$name`", "expectedNum" -> arity.toString,
+          "actualNum" -> args.length.toString,
+          "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
+      build(new Args(name, args))
+    }
+  }
+
+  private def fn[T <: Expression](name: String, arity: Int)(build: Args => T)(
+      implicit ct: ClassTag[T]): Fn = Fn(name, arity, ct.runtimeClass.getName, build)
+
+  val functions: Seq[Fn] = Seq(
+    // vectors
+    fn("graft_ldot", 2)(a => LongDot(a(0), a(1))),
+    fn("graft_quantize", 2)(a => QuantizeVec(a(0), a.long(1, "scale"))),
+    fn("graft_maxsim", 3)(a => MaxSim(a(0), a(1), a.int(2, "subDim"))),
+    fn("graft_lshsig", 1)(a => LshSig(a(0))),
+    fn("graft_lshsig_md5", 2)(a => LshSigMd5(a(0), a.int(1, "nPlanes"))),
+    // text
+    fn("graft_rollminhash", 2)(a => RollingMinHash(a(0), a.int(1, "width"))),
+    fn("graft_winnow", 3)(a => WinnowFingerprints(a(0), a.int(1, "width"), a.int(2, "window"))),
+    fn("graft_dhash_text", 1)(a => DHashText(a(0))),
+    fn("graft_hamming64", 2)(a => Hamming64(a(0), a(1))),
+    fn("graft_simhash", 1)(a => SimHash64(a(0))),
+    fn("graft_collapse_ws", 1)(a => CollapseWs(a(0))),
+    fn("graft_char_filter", 3)(a => CharFilter(a(0), a.string(1, "spec"), a.bool(2, "keepInside"))),
+    fn("graft_paren_toks", 1)(a => ParenToks(a(0))),
+    fn("graft_pretok_gpt2", 1)(a => PretokGpt2(a(0))),
+    fn("graft_paren_pairs", 1)(a => ParenPairs(a(0))),
+    fn("graft_gram_md5s", 2)(a => GramMd5s(a(0), a.int(1, "n"))),
+    fn("graft_grams", 2)(a => Grams(a(0), a.int(1, "n"))),
+    fn("graft_word_counts", 1)(a => WordCounts(a(0))),
+    fn("graft_minhash8", 2)(a => MinHash8(a(0), a.int(1, "n"))),
+    fn("graft_letter_counts", 1)(a => LetterCounts(a(0))),
+    fn("graft_sort_join", 1)(a => SortJoin(a(0))),
+    fn("graft_count_in", 2)(a => CountIn(a(0), a.string(1, "spec"))),
+    fn("graft_len_sum", 1)(a => LenSum(a(0))),
+    fn("graft_toks", 1)(a => Toks(a(0))),
+    fn("graft_tokcount", 1)(a => TokenCount(a(0))),
+    fn("graft_cdc_starts", 2)(a => CdcStarts(a(0), a.int(1, "gram"))),
+    fn("graft_try_long", 1)(a => TryLong(a(0))),
+    // aggregates
+    fn("graft_cms", 4)(a => CountMinSketch(a(0), a(1), a.int(2, "depth"), a.int(3, "width"))),
+    fn("graft_qsketch", 3)(a => QuantileSketch(a(0), a.int(1, "alpha_bp"), a.ints(2, "quantiles"))),
+    fn("graft_freq_items", 2)(a => FreqItemsSketch(a(0), a.int(1, "k"))),
+    fn("graft_topk", 3)(a => TopKSketch(a(0), a(1), a.int(2, "k"))))
 }

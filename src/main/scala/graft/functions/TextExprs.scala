@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -120,7 +118,7 @@ case class Hamming64(left: Expression, right: Expression)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.TextExprs.hamming64($a, $b);")
+      s"${ev.value} = graft.functions.TextExprs.hamming64((UTF8String) $a, (UTF8String) $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -1131,104 +1129,6 @@ object TextExprs {
       i += 1
     }
     false
-  }
-
-  /** Idempotently register on a session (same route as VectorExprs). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_rollminhash"),
-      new ExpressionInfo(classOf[RollingMinHash].getName, "graft_rollminhash"),
-      (exprs: Seq[Expression]) => RollingMinHash(
-        exprs.head,
-        VectorExprs.literalLong(exprs(1), "graft_rollminhash", "width").toInt))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName, "graft_winnow"),
-      (exprs: Seq[Expression]) => WinnowFingerprints(
-        exprs.head,
-        VectorExprs.literalLong(exprs(1), "graft_winnow", "width").toInt,
-        VectorExprs.literalLong(exprs(2), "graft_winnow", "window").toInt))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_dhash_text"),
-      new ExpressionInfo(classOf[DHashText].getName, "graft_dhash_text"),
-      (exprs: Seq[Expression]) => DHashText(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_hamming64"),
-      new ExpressionInfo(classOf[Hamming64].getName, "graft_hamming64"),
-      (exprs: Seq[Expression]) => Hamming64(exprs.head, exprs(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_collapse_ws"),
-      new ExpressionInfo(classOf[CollapseWs].getName, "graft_collapse_ws"),
-      (exprs: Seq[Expression]) => CollapseWs(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_char_filter"),
-      new ExpressionInfo(classOf[CharFilter].getName, "graft_char_filter"),
-      (exprs: Seq[Expression]) => CharFilter(
-        exprs.head,
-        VectorExprs.literalString(exprs(1), "graft_char_filter", "spec"),
-        VectorExprs.literalBool(exprs(2), "graft_char_filter", "keepInside")))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_paren_toks"),
-      new ExpressionInfo(classOf[ParenToks].getName, "graft_paren_toks"),
-      (exprs: Seq[Expression]) => ParenToks(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_pretok_gpt2"),
-      new ExpressionInfo(classOf[PretokGpt2].getName, "graft_pretok_gpt2"),
-      (exprs: Seq[Expression]) => PretokGpt2(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_paren_pairs"),
-      new ExpressionInfo(classOf[ParenPairs].getName, "graft_paren_pairs"),
-      (exprs: Seq[Expression]) => ParenPairs(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_gram_md5s"),
-      new ExpressionInfo(classOf[GramMd5s].getName, "graft_gram_md5s"),
-      (exprs: Seq[Expression]) => GramMd5s(exprs.head,
-        VectorExprs.literalLong(exprs(1), "graft_gram_md5s", "n").toInt))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_grams"),
-      new ExpressionInfo(classOf[Grams].getName, "graft_grams"),
-      (exprs: Seq[Expression]) => Grams(exprs.head,
-        VectorExprs.literalLong(exprs(1), "graft_grams", "n").toInt))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_word_counts"),
-      new ExpressionInfo(classOf[WordCounts].getName, "graft_word_counts"),
-      (exprs: Seq[Expression]) => WordCounts(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_minhash8"),
-      new ExpressionInfo(classOf[MinHash8].getName, "graft_minhash8"),
-      (exprs: Seq[Expression]) => MinHash8(exprs.head,
-        VectorExprs.literalLong(exprs(1), "graft_minhash8", "n").toInt))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_letter_counts"),
-      new ExpressionInfo(classOf[LetterCounts].getName, "graft_letter_counts"),
-      (exprs: Seq[Expression]) => LetterCounts(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_sort_join"),
-      new ExpressionInfo(classOf[SortJoin].getName, "graft_sort_join"),
-      (exprs: Seq[Expression]) => SortJoin(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_count_in"),
-      new ExpressionInfo(classOf[CountIn].getName, "graft_count_in"),
-      (exprs: Seq[Expression]) => CountIn(exprs.head,
-        VectorExprs.literalString(exprs(1), "graft_count_in", "spec")))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_len_sum"),
-      new ExpressionInfo(classOf[LenSum].getName, "graft_len_sum"),
-      (exprs: Seq[Expression]) => LenSum(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_toks"),
-      new ExpressionInfo(classOf[Toks].getName, "graft_toks"),
-      (exprs: Seq[Expression]) => Toks(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_cdc_starts"),
-      new ExpressionInfo(classOf[CdcStarts].getName, "graft_cdc_starts"),
-      (exprs: Seq[Expression]) => CdcStarts(
-        exprs.head,
-        VectorExprs.literalLong(exprs(1), "graft_cdc_starts", "gram").toInt))
   }
 
   /** Unicode White_Space=Yes — the exact predicate of `(?U)\s` (Java

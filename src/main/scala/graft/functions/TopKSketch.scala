@@ -1,10 +1,8 @@
 package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -111,15 +109,4 @@ case class TopKSketch(
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
     copy(itemExpr = c(0), scoreExpr = c(1))
   override def prettyName: String = "graft_topk"
-}
-
-object TopKSketch {
-  /** Idempotently register `graft_topk(item, score, k)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[TopKSketch].getName, "graft_topk"),
-      (exprs: Seq[Expression]) => TopKSketch(
-        exprs.head, exprs(1),
-        exprs(2).eval(null).asInstanceOf[Number].intValue()))
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.types.{DataType, LongType, NullType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `graft_try_long(str)` — STRING → BIGINT, NULL instead of error, with a
@@ -40,7 +38,7 @@ case class TryLong(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
-      case StringType =>
+      case StringType | NullType => // graft_try_long(NULL) is NULL
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
@@ -62,13 +60,14 @@ case class TryLong(child: Expression) extends UnaryExpression {
       "org.apache.spark.unsafe.types.UTF8String.LongWrapper", "graftTryLongWrapper",
       v => s"$v = new org.apache.spark.unsafe.types.UTF8String.LongWrapper();")
     // childGen.isNull is the literal "false" for non-nullable children,
-    // so one template covers both cases
+    // so one template covers both cases; the cast lets a NULL-typed
+    // child's `Object` value compile
     val code =
       code"""
          |${childGen.code}
          |boolean ${ev.isNull} = true;
          |long ${ev.value} = -1L;
-         |if (!${childGen.isNull} && ${childGen.value}.trimAll().toLong($wrapper)) {
+         |if (!${childGen.isNull} && ((UTF8String) ${childGen.value}).trimAll().toLong($wrapper)) {
          |  ${ev.isNull} = false;
          |  ${ev.value} = $wrapper.value;
          |}
@@ -80,13 +79,4 @@ case class TryLong(child: Expression) extends UnaryExpression {
   // foldable like any pure function of its child.
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object TryExprs {
-  /** Idempotently register on a session (same route as VectorExprs). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_try_long"),
-      new ExpressionInfo(classOf[TryLong].getName, "graft_try_long"),
-      (exprs: Seq[Expression]) => TryLong(exprs.head))
 }

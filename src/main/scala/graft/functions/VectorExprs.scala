@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native Catalyst expressions for the vector hot paths (SURVEY.md §4.3
   * escalation rule: built-in functions → custom `Expression` with
@@ -43,8 +41,8 @@ case class LongDot(left: Expression, right: Expression)
       val i = ctx.freshName("i")
       val s = ctx.freshName("s")
       s"""
-         |long[] $xs = $a.toLongArray();
-         |long[] $ys = $b.toLongArray();
+         |long[] $xs = ((ArrayData) $a).toLongArray();
+         |long[] $ys = ((ArrayData) $b).toLongArray();
          |int $n = java.lang.Math.min($xs.length, $ys.length);
          |long $s = 0L;
          |for (int $i = 0; $i < $n; $i++) { $s += $xs[$i] * $ys[$i]; }
@@ -113,8 +111,8 @@ case class MaxSim(left: Expression, right: Expression, subDim: Int)
       val best = ctx.freshName("best")
       val total = ctx.freshName("total")
       s"""
-         |long[] $xs = $a.toLongArray();
-         |long[] $ys = $b.toLongArray();
+         |long[] $xs = ((ArrayData) $a).toLongArray();
+         |long[] $ys = ((ArrayData) $b).toLongArray();
          |int $nq = $xs.length / $subDim;
          |int $nd = $ys.length / $subDim;
          |long $total = 0L;
@@ -170,7 +168,8 @@ case class QuantizeVec(child: Expression, scale: Long) extends UnaryExpression {
     child.dataType match {
       case org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.FloatType |
-            org.apache.spark.sql.types.DoubleType, _) =>
+            org.apache.spark.sql.types.DoubleType, _) |
+          org.apache.spark.sql.types.NullType => // graft_quantize(NULL, s) is NULL
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
@@ -180,8 +179,7 @@ case class QuantizeVec(child: Expression, scale: Long) extends UnaryExpression {
   private def elemIsFloat: Boolean = child.dataType match {
     case org.apache.spark.sql.types.ArrayType(t, _) =>
       t == org.apache.spark.sql.types.FloatType
-    case other =>
-      throw new IllegalArgumentException(s"graft_quantize expects an array, got $other")
+    case _ => false // NullType: no value is ever read
   }
 
   override def nullSafeEval(a: Any): Any = {
@@ -202,13 +200,15 @@ case class QuantizeVec(child: Expression, scale: Long) extends UnaryExpression {
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
+    nullSafeCodeGen(ctx, ev, a0 => {
+      val a = ctx.freshName("a")
       val getter = if (elemIsFloat) s"(double) $a.getFloat" else s"$a.getDouble"
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
       val out = ctx.freshName("out")
       val d = ctx.freshName("d")
       s"""
+         |ArrayData $a = (ArrayData) $a0;
          |int $n = $a.numElements();
          |long[] $out = new long[$n];
          |for (int $i = 0; $i < $n; $i++) {
@@ -390,86 +390,5 @@ object LshSig {
       val i = k % Dims
       math.floorMod(mix(j * 1000003L + i), 2001L) - 1000L
     }
-  }
-}
-
-object VectorExprs {
-  /** Resolution-time guard for literal scalar arguments: a non-foldable
-    * expression (column, subquery) would otherwise hit `eval(null)` and
-    * die with an opaque ClassCastException/NPE inside function
-    * resolution. Shared by this registry and [[GraftExtensions]]. */
-  private[functions] def literalLong(e: Expression, fn: String, arg: String): Long = {
-    if (!e.foldable)
-      throw new IllegalArgumentException(
-        s"$fn: $arg must be a literal number, got non-foldable expression ${e.sql}")
-    e.eval(null) match {
-      case n: Number => n.longValue()
-      case other => throw new IllegalArgumentException(
-        s"$fn: $arg must be a literal number, got $other")
-    }
-  }
-
-  /** [[literalLong]]'s string twin. */
-  private[functions] def literalString(e: Expression, fn: String, arg: String): String = {
-    if (!e.foldable)
-      throw new IllegalArgumentException(
-        s"$fn: $arg must be a literal string, got non-foldable expression ${e.sql}")
-    e.eval(null) match {
-      case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-      case other => throw new IllegalArgumentException(
-        s"$fn: $arg must be a literal string, got $other")
-    }
-  }
-
-  /** [[literalLong]]'s boolean twin. */
-  private[functions] def literalBool(e: Expression, fn: String, arg: String): Boolean = {
-    if (!e.foldable)
-      throw new IllegalArgumentException(
-        s"$fn: $arg must be a literal boolean, got non-foldable expression ${e.sql}")
-    e.eval(null) match {
-      case b: java.lang.Boolean => b.booleanValue()
-      case other => throw new IllegalArgumentException(
-        s"$fn: $arg must be a literal boolean, got $other")
-    }
-  }
-
-  /** [[literalLong]]'s twin for an `array(...)` of INT literals. */
-  private[functions] def literalInts(e: Expression, fn: String, arg: String): Seq[Int] = {
-    if (!e.foldable)
-      throw new IllegalArgumentException(
-        s"$fn: $arg must be a literal int array, got non-foldable expression ${e.sql}")
-    (e.dataType, e.eval(null)) match {
-      case (ArrayType(IntegerType, false), a: ArrayData) => a.toIntArray().toSeq
-      case _ => throw new IllegalArgumentException(
-        s"$fn: $arg must be a literal int array without NULLs, got ${e.sql}")
-    }
-  }
-
-  /** Idempotently register the expressions on a session so `expr(...)` /
-    * SQL can call them. Safe to call per query. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_ldot"),
-      new ExpressionInfo(classOf[LongDot].getName, "graft_ldot"),
-      (exprs: Seq[Expression]) => LongDot(exprs.head, exprs(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_quantize"),
-      new ExpressionInfo(classOf[QuantizeVec].getName, "graft_quantize"),
-      (exprs: Seq[Expression]) => QuantizeVec(exprs.head,
-        literalLong(exprs(1), "graft_quantize", "scale")))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_maxsim"),
-      new ExpressionInfo(classOf[MaxSim].getName, "graft_maxsim"),
-      (exprs: Seq[Expression]) => MaxSim(exprs.head, exprs(1),
-        literalLong(exprs(2), "graft_maxsim", "subDim").toInt))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_lshsig"),
-      new ExpressionInfo(classOf[LshSig].getName, "graft_lshsig"),
-      (exprs: Seq[Expression]) => LshSig(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_lshsig_md5"),
-      new ExpressionInfo(classOf[LshSigMd5].getName, "graft_lshsig_md5"),
-      (exprs: Seq[Expression]) => LshSigMd5(exprs.head,
-        literalLong(exprs(1), "graft_lshsig_md5", "nPlanes").toInt))
   }
 }

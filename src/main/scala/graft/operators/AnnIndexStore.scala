@@ -403,7 +403,6 @@ object AnnIndexStore {
   def ensurePqCodebook(spark: SparkSession, vectors: DataFrame,
                        storePath: String, iters: Int = 3): Unit = {
     if (storeExists(spark, pqCodebookPath(storePath))) return
-    graft.functions.VectorExprs.register(spark)
     val (m, ksub) = ensurePqMeta(spark, storePath)
     requirePqDim(vectors, m)
     val rs = Checkpoints.ckpt(
@@ -449,7 +448,6 @@ object AnnIndexStore {
     * discipline as [[appendBatch]]. The raw vectors are NOT stored. */
   def appendBatchPq(spark: SparkSession, vectors: DataFrame, storePath: String,
                     batchId: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val (m, _) = pqParams(spark, storePath)
     def encodePlan(): DataFrame = {
       val cb = readCodebook(spark, storePath)
@@ -497,7 +495,6 @@ object AnnIndexStore {
   def probePq(spark: SparkSession, queries: DataFrame, source: DataFrame,
               storePath: String, nprobe: Int = 2, k: Int = 3,
               shortlist: Int = 32): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val (m, _) = pqParams(spark, storePath)
     val cb = readCodebook(spark, storePath)
     val probes = Similarity.rankCells(queries, cb.select(col("c_id"), col("qc"), col("nc")),

@@ -238,8 +238,6 @@ object Aggregates {
     // top-20 exact grams, their min-of-3-cells estimates (never
     // under-estimates, over_bp is the audited collision error).
     "q_agg_cms" -> ((s, d) => {
-      graft.functions.CountMinSketch.register(s)
-      graft.functions.TextExprs.register(s) // graft_grams in fourGramSql (r21)
       val grams = load(s, d, "documents")
         .withColumn("toks", expr(tokens))
         .select(explode(expr(Shingles.fourGramSql(distinct = false))).as("word"))
@@ -280,7 +278,6 @@ object Aggregates {
     // types, so no eviction happens and the sketch is exact →
     // oracle-able; eviction behavior is spec-tested separately.
     "q_freq_items" -> ((s, d) => {
-      graft.functions.FreqItemsSketch.register(s)
       load(s, d, "events")
         .agg(expr("graft_freq_items(event_type, 8)").as("sk"))
         .select(posexplode(col("sk")))
@@ -336,7 +333,6 @@ object Aggregates {
     // error against exact rank elements; no oracle by design (the
     // estimate is the sketch's, not SQL-expressible).
     "q_agg_qsketch" -> ((s, d) => {
-      graft.functions.QuantileSketch.register(s)
       load(s, d, "lineitem")
         .withColumn("cents", expr("CAST(ROUND(l_extendedprice * 100) AS BIGINT)"))
         .groupBy(col("l_returnflag"))
@@ -356,7 +352,6 @@ object Aggregates {
     // every group's full row set. Oracled against the window form:
     // identical rows, different physical shape.
     "q_topk_agg" -> ((s, d) => {
-      graft.functions.TopKSketch.register(s)
       load(s, d, "customer")
         .withColumn("cents", expr("CAST(ROUND(c_acctbal * 100) AS BIGINT)"))
         .groupBy(col("c_mktsegment"))

@@ -38,7 +38,6 @@ object Pipeline {
     // r21: graft_gram_md5s hashes every positioned 4-gram in one pass
     // with a reused digest — bit-equal to the transform+array_join+md5
     // form (TextExprsSpec); position semantics of posexplode unchanged
-    graft.functions.TextExprs.register(s)
     // r22 (guide §2.3 narrower types, VERDICT r21 #4): the shingle hash
     // is equality-keyed ONLY (shared-marking aggregate + join-back) and
     // never reaches any output, so carry it as the 16-BYTE unhex of the
@@ -145,7 +144,6 @@ object Pipeline {
     * re-running the dominant tokenize/shingle CPU work. */
   private def corpusGrams(s: SparkSession, d: String): DataFrame = {
     // r21: one-pass gram hashing (see substringRuns)
-    graft.functions.TextExprs.register(s)
     Checkpoints.ckpt(load(s, d, "documents")
       .withColumn("toks", expr(tokens))
       .select(col("doc_id"),
@@ -447,7 +445,6 @@ object Pipeline {
     // stopword term's corpus-sized posting list; relevance counts are
     // map-side-combining aggregates on the same tf frame.
     "q_eval_mrr" -> ((s, d) => {
-      graft.functions.TopKSketch.register(s)
       val tf = load(s, d, "documents")
         .select(col("doc_id"), explode(expr(tokens)).as("word"))
         .groupBy(col("word"), col("doc_id")).agg(count(lit(1)).as("tf"))
@@ -516,7 +513,6 @@ object Pipeline {
     // state; a Zipf-heavy hot gram skews only the df aggregate, which
     // partial aggregation absorbs.
     "q_dup_ngrams" -> ((s, d) => {
-      graft.functions.TextExprs.register(s) // graft_grams (r21)
       val occ = load(s, d, "documents")
         .withColumn("toks", expr(tokens))
         .select(col("doc_id"), explode(expr("graft_grams(toks, 3)")).as("g"))
@@ -537,7 +533,6 @@ object Pipeline {
     // Corpus-wide top-20 word bigrams WITH multiplicity (collocation
     // counts) — explode + one hash agg + TakeOrderedAndProject.
     "q_ngram_top" -> ((s, d) => {
-      graft.functions.TextExprs.register(s) // graft_grams (r21)
       load(s, d, "documents")
         .withColumn("toks", expr(tokens))
         .select(explode(expr("graft_grams(toks, 2)")).as("bg"))
@@ -561,7 +556,6 @@ object Pipeline {
     // tables are both map-side-combining aggs; the bigram side joins
     // the unigram table twice on word keys; scalars broadcast.
     "q_pmi_colloc" -> ((s, d) => {
-      graft.functions.TextExprs.register(s) // graft_grams (r21)
       val docs = load(s, d, "documents").withColumn("toks", expr(tokens))
       val uni = docs.select(explode(col("toks")).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("c"))
@@ -921,7 +915,6 @@ object Pipeline {
     // measured 6.1 s at sf0.1 (interpreted HOF + full hex render per
     // position), the fold sub-second; CdcSpec pins fold == HOF form.
     "q_cdc_chunks" -> ((s, d) => {
-      graft.functions.TextExprs.register(s)
       load(s, d, "documents")
         .select(col("doc_id"), expr("substring(text, 1, 240)").as("p"))
         .filter(length(col("p")) >= 8)
@@ -959,7 +952,6 @@ object Pipeline {
     // n_docs/total_chars are plain map-side-combining aggregates in the
     // SAME hash agg — one shuffle of ≤|sources| combined partials.
     "q_contrib_cap" -> ((s, d) => {
-      graft.functions.TopKSketch.register(s)
       load(s, d, "documents")
         .select(col("source"),
           concat(md5(col("doc_id").cast("string").cast("binary")), lit("#"),
@@ -991,7 +983,6 @@ object Pipeline {
     // two map-side-combining hash aggs — (lang, gram) then lang — the
     // canonical two-level vocabulary rollup that scales to any corpus.
     "q_lexical_stats" -> ((s, d) => {
-      graft.functions.TextExprs.register(s) // graft_grams (r21)
       load(s, d, "documents")
         .select(col("lang"), expr(tokens).as("toks"))
         .select(col("lang"), explode(expr("graft_grams(toks, 2)")).as("gram"))
@@ -1059,7 +1050,6 @@ object Pipeline {
     // driver.
     "q_substring_strip" -> ((s, d) => {
       // r21: one-pass gram hashing (see substringRuns)
-      graft.functions.TextExprs.register(s)
       val docs = load(s, d, "documents").withColumn("toks", expr(tokens))
       // r22: 16-byte binary gh — same narrowing as substringRuns (the
       // hash is internal equality-only; unhex is a bijection)
@@ -1330,7 +1320,6 @@ object Pipeline {
       // 2. decontamination: same eval split + 4-gram hashes as
       // q_decontaminate; eval docs AND any train doc sharing a gram drop
       // r21: one-pass gram hashing (see substringRuns)
-      graft.functions.TextExprs.register(s)
       val grams = Checkpoints.ckpt(toksDf
         .select(col("doc_id"),
           explode(expr("graft_gram_md5s(toks, 4)")).as("gh")))
@@ -1443,7 +1432,6 @@ object Pipeline {
     // two map-side-combining aggregates, (doc,gram) then doc — the only
     // wire traffic is partial counts.
     "q_rep_bigram" -> ((s, d) => {
-      graft.functions.TextExprs.register(s)
       load(s, d, "documents")
         .withColumn("toks", expr(tokens))
         .filter(size(col("toks")) >= 2)

@@ -52,7 +52,6 @@ object Reference {
     // Not oracled (imperative fixpoint) — golden/property tests in
     // WikiTextSpec pin the semantics instead.
     "q_wiki_clean" -> ((s, d) => {
-      graft.functions.TextExprs.register(s)
       val clean = udf((t: String) => WikiText.cleanWikiBodyPreCollapse(t))
       wrapped(s, d)
         .select(col("doc_id"), clean(col("wikitext")).as("pre"))
@@ -68,7 +67,6 @@ object Reference {
     // modes are plain codepoint-class deletes, so DuckDB expresses them
     // as regex classes and the outputs hash-match exactly.
     "q_wiki_clean_ranged" -> ((s, d) => {
-      graft.functions.TextExprs.register(s)
       wrapped(s, d)
         .select(col("doc_id"),
           expr("graft_char_filter(wikitext, '10-10,32-126', true)").as("kept"),

@@ -47,7 +47,6 @@ object Scalars {
     // codegen, so dirty rows cost the same as clean ones. Oracled via
     // DuckDB's NULLIF/TRY_CAST equivalents.
     "q_try_funcs" -> ((s, d) => {
-      graft.functions.TryExprs.register(s)
       // r21: sort the raw scan, project above the Sort (q_project_expr
       // pattern) — the range exchange's sampling pass no longer
       // evaluates the try/parse expressions twice
@@ -207,7 +206,6 @@ object Scalars {
       // rescanning the token array per distinct token (TextExprsSpec
       // pins output equality); the map HOF consumers below are the
       // query's declared surface and stay untouched
-      graft.functions.TextExprs.register(s)
       load(s, d, "documents")
         .withColumn("toks", expr(tokens))
         .withColumn("wc", expr("graft_word_counts(toks)"))

@@ -64,7 +64,6 @@ object Similarity {
     * (graft.functions.LongDot) — the interpreted higher-order
     * `aggregate(zip_with(...))` was the similarity bottleneck. */
   private[graft] def quantized(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     load(s, d, "embeddings")
       .select(col("vec_id"), col("label"),
         expr("graft_quantize(embedding, 100000000)").as("qv"))
@@ -249,7 +248,6 @@ object Similarity {
     * (TextExprsSpec pins signature equality for n = 1 and n = 4).
     * Takes the (doc_id, toks) frame of [[docToks]]. */
   private def minhashSigsLocal(toks: DataFrame, gramN: Int): DataFrame = {
-    graft.functions.TextExprs.register(toks.sparkSession)
     toks.select(col("doc_id"), expr(s"graft_minhash8(toks, $gramN)").as("ms"))
       .filter(col("ms").isNotNull)
       .select((col("doc_id") +: (0 until 8).map(i =>
@@ -289,7 +287,6 @@ object Similarity {
   /** distinct 4-token shingles per document — the near-dup unit
     * (unigram sets merge the whole corpus into one component). */
   def fourGramShingles(docs: DataFrame): DataFrame = {
-    graft.functions.TextExprs.register(docs.sparkSession)
     docs
       .withColumn("toks", expr(tokens))
       .select(col("doc_id"),
@@ -329,7 +326,6 @@ object Similarity {
     * fold on the subtree the checkpoint otherwise hides behind a
     * `Scan ExistingRDD` in the consuming queries' plans. */
   private[graft] def simhashBandsFrame(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TextExprs.register(s)
     load(s, d, "documents")
       .select(col("doc_id"), expr("graft_simhash(text)").as("hb"))
       .filter(col("hb").isNotNull)
@@ -1468,7 +1464,6 @@ object Similarity {
       // the size >= 2 guard matters: sequence(1, 0) runs DESCENDING in
       // Spark and element_at(toks, 0) throws (DuckDB's RANGE is just
       // empty) — a <2-token doc must yield no bigrams, not an error
-      graft.functions.TextExprs.register(s) // graft_grams (r21)
       val bigrams = load(s, d, "documents")
         .filter(col("doc_id") < 40)
         .withColumn("toks", expr(tokens))

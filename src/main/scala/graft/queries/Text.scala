@@ -146,7 +146,6 @@ object Text {
     // (functions/TextExprs.scala), bit-identical, short texts → NULL
     // like DuckDB's empty RANGE → LIST_MIN.
     "q_fingerprint_rolling" -> ((s, d) => {
-      graft.functions.TextExprs.register(s)
       load(s, d, "documents")
         .select(col("doc_id"), expr("graft_rollminhash(text, 8)").as("rfp"))
         .orderBy("doc_id")
@@ -213,7 +212,6 @@ object Text {
       // round): pre-aggregating to (doc, w1, w2, k) before the joins —
       // bigrams inside a doc are mostly unique on this corpus, so the
       // extra shuffle+agg bought nothing and cost 0.65 s → 0.98 s.
-      graft.functions.TextExprs.register(s)
       val inst = graft.Checkpoints.ckpt(t
         .select(col("doc_id"), explode(expr("graft_grams(toks, 2)")).as("bg"))
         .select(col("doc_id"),
@@ -246,7 +244,6 @@ object Text {
     // sort for the same answer (6.3 s → sub-second at sf0.1). ZERO
     // shuffles before the presentation sort.
     "q_winnow" -> ((s, d) => {
-      graft.functions.TextExprs.register(s)
       load(s, d, "documents")
         .select(col("doc_id"), expr("graft_winnow(text, 8, 4)").as("fps"))
         .filter(col("fps").isNotNull)
@@ -269,7 +266,6 @@ object Text {
     // equi-join on the fingerprint key — never all-pairs; overlap is
     // reported in ppm of the smaller fingerprint set (containment).
     "q_winnow_pairs" -> ((s, d) => {
-      graft.functions.TextExprs.register(s)
       val fps = load(s, d, "documents").filter(col("doc_id") < 100)
         .select(col("doc_id"), expr("graft_winnow(text, 8, 4)").as("fps"))
         .filter(col("fps").isNotNull)
@@ -337,7 +333,6 @@ object Text {
       // r21: graft_letter_counts is the one-byte-scan twin of the
       // 26× replace-diff transform (which allocated 26 full copies of
       // every document per row) — element-equal (TextExprsSpec)
-      graft.functions.TextExprs.register(s)
       load(s, d, "documents")
         .withColumn("cnts", expr("graft_letter_counts(text)"))
         .withColumn("n_letters", expr("aggregate(cnts, 0L, (a, x) -> a + x)"))
@@ -369,7 +364,6 @@ object Text {
     // TakeOrdered — at 100 TB the only data crossing the wire is the
     // partial pair counts.
     "q_bpe_step" -> ((s, d) => {
-      graft.functions.TextExprs.register(s) // graft_grams (r21)
       load(s, d, "documents")
         .withColumn("toks", expr(tokens))
         .select(explode(expr("graft_grams(toks, 2)")).as("pair"))
@@ -415,7 +409,7 @@ object Text {
         .select(col("doc_id"),
           // r21: graft_paren_toks is the one-byte-scan twin of
           // regexp_extract_all(enc, '\(([^()]+)\)', 1) — bit-equal
-          // (TextExprsSpec), registered by bpeDispatch's encoder pass
+          // (TextExprsSpec)
           expr("graft_paren_toks(enc)").as("toks"))
         .select(col("doc_id"),
           expr("CAST(size(toks) AS BIGINT)").as("n_tokens"),
@@ -434,7 +428,6 @@ object Text {
     // 100 TB the full (uncapped) index would stream to a term-bucketed
     // sink instead of capping; the plan shape is identical.
     "q_inverted_index" -> ((s, d) => {
-      graft.functions.TopKSketch.register(s)
       val tf = load(s, d, "documents")
         .select(col("doc_id"), explode(expr(tokens)).as("word"))
         .groupBy(col("word"), col("doc_id")).agg(count(lit(1)).as("tf"))
@@ -490,7 +483,6 @@ object Text {
     // retrieval/stats query that reads it; this row proves the
     // read path under the hash oracle.
     "q_inverted_index_probe" -> ((s, d) => {
-      graft.functions.TopKSketch.register(s)
       val store = java.nio.file.Paths.get(
         sys.props("java.io.tmpdir"), "graft_inv_index",
         graft.Tables.dataFingerprint(s, d, Seq("documents"))).toString
@@ -599,7 +591,6 @@ object Text {
   : org.apache.spark.sql.Column = pretokMode(s) match {
     case "letters" => expr("filter(split(text, ' '), x -> x rlike '^[a-z]+$')")
     case "gpt2" =>
-      graft.functions.TextExprs.register(s)
       val guarded = when(
         col("text").contains(ParenL) || col("text").contains(ParenR),
         raise_error(lit("bpe pretokenizer: input text contains the " +

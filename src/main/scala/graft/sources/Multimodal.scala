@@ -466,7 +466,6 @@ object Multimodal {
     * machinery is oracled end-to-end — the decode-path query then only
     * needs the hash function itself spec-covered. */
   def imageNearDupDet(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TextExprs.register(s)
     val docs = load(s, d, "documents")
     val base = docs.select(col("doc_id").as("media_id"),
       expr("rpad(substring(text, 1, 72), 72, ' ')").as("p"))

@@ -15,8 +15,8 @@ object AsOfJoinProps extends Properties("AsOfJoin") {
 
   private lazy val spark = SparkTestBase.session
 
-  private case class L(k: Option[Long], t: Option[Long], lid: Long)
-  private case class R(k: Option[Long], t: Option[Long], rid: Long)
+  case class L(k: Option[Long], t: Option[Long], lid: Long)
+  case class R(k: Option[Long], t: Option[Long], rid: Long)
 
   private val keyGen: Gen[Option[Long]] =
     Gen.frequency(9 -> Gen.chooseNum(0L, 3L).map(Some(_)), 1 -> Gen.const(None))

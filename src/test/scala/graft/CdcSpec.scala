@@ -15,7 +15,6 @@ class CdcSpec extends SparkTestBase {
       " ELSE CAST(array() AS ARRAY<INT>) END)"
 
   test("graft_cdc_starts == the declarative HOF form on the corpus") {
-    graft.functions.TextExprs.register(spark)
     val both = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), expr("substring(text, 1, 240)").as("p"))
       .filter(length(col("p")) >= 8)
@@ -29,7 +28,6 @@ class CdcSpec extends SparkTestBase {
 
   test("edge semantics: sub-gram NULL, exact-gram single chunk, boundary rate sane") {
     import spark.implicits._
-    graft.functions.TextExprs.register(spark)
     val rows = Seq("", "short", "exactly8", "a" * 240)
       .toDF("p").select(expr("graft_cdc_starts(p, 8)").as("s")).collect()
     assert(rows(0).isNullAt(0) && rows(1).isNullAt(0), "sub-gram must be NULL")
@@ -42,7 +40,6 @@ class CdcSpec extends SparkTestBase {
 
   test("non-ASCII positions follow char (code point) semantics like substring") {
     import spark.implicits._
-    graft.functions.TextExprs.register(spark)
     // 2-byte chars: a byte-indexed loop would slice grams differently
     // from the char-indexed HOF form
     val p = "é" * 20 + "plaintext tail for boundaries " * 3

@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.GraftTestHooks
+import org.apache.spark.SparkTestHooks
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -177,7 +177,7 @@ class CheckpointsSpec extends SparkTestBase {
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
         actions.add(s"failed $funcName")
     }
-    GraftTestHooks.drainListenerBus(spark.sparkContext)
+    SparkTestHooks.drainListenerBus(spark.sparkContext)
     spark.listenerManager.register(listener)
     var rounds = 0
     val last = try {
@@ -185,7 +185,7 @@ class CheckpointsSpec extends SparkTestBase {
         rounds += 1
         halve(df)
       }(maxV)(isZero)
-      GraftTestHooks.drainListenerBus(spark.sparkContext)
+      SparkTestHooks.drainListenerBus(spark.sparkContext)
       out
     } finally spark.listenerManager.unregister(listener)
     assert(rounds == 7)

@@ -17,7 +17,6 @@ class CmsSpec extends SparkTestBase {
     .selectExpr(s"explode(${Shingles.fourGramSql(distinct = false)}) AS word")
 
   private def sketch(depth: Int, width: Int, parts: Int): Seq[Long] = {
-    CountMinSketch.register(spark)
     val g = if (parts == 1) grams.coalesce(1) else grams.repartition(parts)
     g.agg(expr(s"graft_cms(word, CAST(1 AS BIGINT), $depth, $width)").as("m"))
       .head().getSeq[Long](0)
@@ -100,7 +99,6 @@ class CmsSpec extends SparkTestBase {
 
   test("wrongly-typed arguments fail at analysis, not mid-task (ADVICE r15)") {
     import spark.implicits._
-    graft.functions.CountMinSketch.register(spark)
     val df = Seq(("a", 1L)).toDF("k", "c")
     df.createOrReplaceTempView("cms_in")
     // integer key: analysis-time type-check failure, not a task CCE

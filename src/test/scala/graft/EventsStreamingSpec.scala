@@ -441,7 +441,6 @@ class EventsStreamingSpec extends SparkTestBase {
     // state store and merge across micro-batches — the property that
     // makes the sketch family (topk/qsketch/freq_items/HLL) usable for
     // production streaming monitoring, not just batch.
-    graft.functions.TopKSketch.register(spark)
     val input = MemoryStream[Ev](spark)
     val agg = input.toDF()
       .withWatermark("ts", "1 hour")

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.FreqItemsSketch
 import org.apache.spark.sql.functions._
 
 /** Misra–Gries sketch: exactness when k ≥ distinct values, the heavy-
@@ -9,7 +8,6 @@ class FreqItemsSpec extends SparkTestBase {
   import spark.implicits._
 
   test("exact when k >= distinct values, sorted count-desc") {
-    FreqItemsSketch.register(spark)
     val got = Tables.load(spark, sfDir, "events")
       .agg(expr("graft_freq_items(event_type, 8)").as("sk"))
       .select(explode(col("sk"))).select("col.item", "col.cnt")
@@ -22,7 +20,6 @@ class FreqItemsSpec extends SparkTestBase {
   }
 
   test("heavy hitters survive eviction across many partitions") {
-    FreqItemsSketch.register(spark)
     // 10k rows: 'hot' 40%, 'warm' 25%, and 35% spread over 700 cold keys
     val df = spark.range(10000).repartition(16)
       .selectExpr("CASE WHEN id % 10 < 4 THEN 'hot' WHEN id % 10 < 6 THEN 'warm' " +

@@ -34,7 +34,6 @@ class IterativeOpsSpec extends SparkTestBase {
   }
 
   test("q_kmeans_multi equals a 2-iteration Lloyd driver recomputation") {
-    graft.functions.VectorExprs.register(spark)
     val vecs = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), expr("graft_quantize(embedding, 100000000)").as("qv"))
       .collect()

@@ -103,7 +103,7 @@ class JoinStrategiesSpec extends SparkTestBase {
         spark.sparkContext.addSparkListener(listener)
         try {
           df.write.mode("overwrite").format("noop").save()
-          org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
+          org.apache.spark.SparkTestHooks.drainListenerBus(spark.sparkContext)
         } finally spark.sparkContext.removeSparkListener(listener)
         max.get
       }

@@ -16,7 +16,6 @@ class QuantileSketchSpec extends SparkTestBase {
     .selectExpr("l_returnflag", "CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS cents")
 
   test("merged partials == one-shot sketch, bit-exact, any partitioning") {
-    QuantileSketch.register(spark)
     // one partition = a single sequential update stream; 32 partitions =
     // a full partial-aggregation merge tree. Counter-addition merge must
     // make them identical to the last bit.
@@ -30,7 +29,6 @@ class QuantileSketchSpec extends SparkTestBase {
   }
 
   test("estimates within alpha relative error of exact rank elements") {
-    QuantileSketch.register(spark)
     val got = cents.groupBy("l_returnflag").agg(expr(qexpr).as("ps"))
       .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
     val byFlag = cents.collect().map(r => r.getString(0) -> r.getLong(1))
@@ -45,7 +43,6 @@ class QuantileSketchSpec extends SparkTestBase {
   }
 
   test("negative values, zeros, and empty input") {
-    QuantileSketch.register(spark)
     val df = spark.range(0, 201)
       .selectExpr("'k' AS g", "CAST(id - 100 AS BIGINT) AS cents") // -100..100
     val ps = df.groupBy("g")

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions.{col, element_at, explode, expr, lit, md5,
 class TextExprsSpec extends SparkTestBase {
 
   test("rolling minhash == HOF form on ASCII, non-ASCII, and astral input") {
-    graft.functions.TextExprs.register(spark)
     import spark.implicits._
     val fixtures = Seq(
       "the quick brown fox jumps",
@@ -31,7 +30,6 @@ class TextExprsSpec extends SparkTestBase {
   }
 
   test("graft_winnow == declarative window-min form, incl. astral input and short-text null") {
-    graft.functions.TextExprs.register(spark)
     import spark.implicits._
     val fixtures = Seq(
       "the quick brown fox jumps over the lazy dog",
@@ -59,7 +57,6 @@ class TextExprsSpec extends SparkTestBase {
   }
 
   test("graft_dhash_text == declarative double-substring form on the real corpus") {
-    graft.functions.TextExprs.register(spark)
     // the exact SQL it replaced in imageNearDupDet, over every document's
     // rpad'd 72-byte pseudo-raster at sf0.001 (pure-ASCII corpus — the
     // expression's documented precondition)
@@ -78,7 +75,6 @@ class TextExprsSpec extends SparkTestBase {
   }
 
   test("graft_hamming64 == aggregate(sequence) form, incl. unequal lengths") {
-    graft.functions.TextExprs.register(spark)
     import spark.implicits._
     val pairs = Seq(
       ("0" * 64, "0" * 64), ("0" * 64, "1" * 64),
@@ -93,7 +89,6 @@ class TextExprsSpec extends SparkTestBase {
   }
 
   test("graft_simhash == the explode + 64-column majority formulation on the real corpus") {
-    graft.functions.TextExprs.register(spark)
     // reference: the SQL-expressible formulation q_simhash_pairs shipped
     // before the fold (and that its DuckDB oracle still mirrors) —
     // distinct 4-token shingles, ±1 by md5-hex-digit bit (j/4, j%4),
@@ -134,7 +129,6 @@ class TextExprsSpec extends SparkTestBase {
 
   test("graft_collapse_ws through the SQL/codegen path == the Scala scan " +
     "== the reference regex, on the real corpus") {
-    graft.functions.TextExprs.register(spark)
     val got = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), expr("graft_collapse_ws(text)").as("c"))
       .orderBy("doc_id").collect().map(r => r.getLong(0) -> r.getString(1))
@@ -149,7 +143,6 @@ class TextExprsSpec extends SparkTestBase {
   }
 
   test("graft_char_filter through the SQL/codegen path == WikiText.filterChars") {
-    graft.functions.TextExprs.register(spark)
     val whitelist = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
         expr("graft_char_filter(text, '97-122,32-32', true)").as("c"))
@@ -169,7 +162,6 @@ class TextExprsSpec extends SparkTestBase {
   }
 
   test("graft_paren_toks == regexp_extract_all on well-formed AND degenerate input") {
-    graft.functions.TextExprs.register(spark)
     import spark.implicits._
     val fixtures = Seq(
       "(a)(b)(c)",                       // canonical encoding
@@ -201,7 +193,6 @@ class TextExprsSpec extends SparkTestBase {
   }
 
   test("graft_pretok_gpt2 == regexp_extract_all(PretokRe) incl. unicode classes") {
-    graft.functions.TextExprs.register(spark)
     import spark.implicits._
     val fixtures = Seq(
       "Hello, World! 42 times",
@@ -231,7 +222,6 @@ class TextExprsSpec extends SparkTestBase {
   }
 
   test("graft_paren_pairs == zip_with-over-slices pair extraction") {
-    graft.functions.TextExprs.register(spark)
     val enc = graft.queries.Text.bpeEncode(spark, sfDir)
     val zipForm = "CASE WHEN size(toks) >= 2 THEN" +
       " zip_with(slice(toks, 1, size(toks) - 1), slice(toks, 2, size(toks) - 1)," +
@@ -255,7 +245,6 @@ class TextExprsSpec extends SparkTestBase {
   }
 
   test("graft_gram_md5s == transform+array_join+md5 on the real corpus") {
-    graft.functions.TextExprs.register(spark)
     val refExpr = "CASE WHEN size(toks) >= 4 THEN " +
       "transform(transform(sequence(1, size(toks) - 3)," +
       " k -> array_join(slice(toks, k, 4), ' ')), g -> md5(CAST(g AS BINARY)))" +
@@ -274,7 +263,6 @@ class TextExprsSpec extends SparkTestBase {
   }
 
   test("graft_minhash8 == exploded 8-column min-aggregate signature, n=1 and n=4") {
-    graft.functions.TextExprs.register(spark)
     val docs = Tables.load(spark, sfDir, "documents")
     def refSigs(gramElems: String): Map[Long, Seq[String]] = {
       val dw = docs
@@ -310,7 +298,6 @@ class TextExprsSpec extends SparkTestBase {
   }
 
   test("graft_grams == transform+array_join(slice) for n = 2, 3, 4") {
-    graft.functions.TextExprs.register(spark)
     val docs = Tables.load(spark, sfDir, "documents")
       .withColumn("toks", expr("filter(split(text, ' '), x -> x <> '')"))
     for (n <- Seq(2, 3, 4)) {
@@ -331,7 +318,6 @@ class TextExprsSpec extends SparkTestBase {
   }
 
   test("graft_toks == filter(split(t, ' '), x -> x <> '') on corpus and edge fixtures") {
-    graft.functions.TextExprs.register(spark)
     import spark.implicits._
     // Reference computed DRIVER-side (Java split semantics are the
     // HOF form's exactly: regex-split on the literal space, limit -1,
@@ -357,7 +343,6 @@ class TextExprsSpec extends SparkTestBase {
   }
 
   test("graft_len_sum == aggregate length fold, incl. astral (code-point) lengths") {
-    graft.functions.TextExprs.register(spark)
     import spark.implicits._
     val fixtures = Seq(
       "the quick brown fox", "", " ", "héllo wörld",
@@ -375,7 +360,6 @@ class TextExprsSpec extends SparkTestBase {
   }
 
   test("graft_sort_join == array_join(transform(array_sort(collect_list(struct))))") {
-    graft.functions.TextExprs.register(spark)
     import spark.implicits._
     // adversarial: out-of-order keys, duplicate keys (tie broken by the
     // string in unsigned byte order), empty strings, non-ASCII, one
@@ -413,7 +397,6 @@ class TextExprsSpec extends SparkTestBase {
   }
 
   test("graft_count_in == size(filter(toks, x IN set)) on the corpus") {
-    graft.functions.TextExprs.register(spark)
     import spark.implicits._
     val fixtures = Seq("the a the of xx", "", "  ", "thea the THE the")
     val corpus = Tables.load(spark, sfDir, "documents")
@@ -426,7 +409,6 @@ class TextExprsSpec extends SparkTestBase {
   }
 
   test("graft_word_counts == map_from_arrays(array_distinct, per-word rescan) form") {
-    graft.functions.TextExprs.register(spark)
     val hofWc = "map_from_arrays(array_distinct(toks)," +
       " transform(array_distinct(toks), w -> size(filter(toks, x -> x = w))))"
     def derived(wc: String) = Seq(
@@ -448,7 +430,6 @@ class TextExprsSpec extends SparkTestBase {
   }
 
   test("graft_letter_counts == 26x replace-diff transform") {
-    graft.functions.TextExprs.register(spark)
     import spark.implicits._
     val refExpr = "transform(sequence(97, 122)," +
       " c -> CAST(length(t) - length(replace(t, char(c), '')) AS BIGINT))"

@@ -12,7 +12,6 @@ import org.apache.spark.sql.functions._
 class TryExprsSpec extends SparkTestBase {
 
   private def tryLong(s: String): Option[Long] = {
-    graft.functions.TryExprs.register(spark)
     import spark.implicits._
     val r = Seq(Option(s)).toDF("s")
       .select(expr("graft_try_long(s)").as("v")).collect()(0)
@@ -45,7 +44,6 @@ class TryExprsSpec extends SparkTestBase {
   }
 
   test("agrees with try_cast on every integral-or-garbage lineitem value") {
-    graft.functions.TryExprs.register(spark)
     val li = Tables.load(spark, sfDir, "lineitem")
       .select(concat(lit("x"), col("l_partkey").cast("string")).as("bad"),
         col("l_partkey").cast("string").as("good"))
@@ -61,7 +59,6 @@ class TryExprsSpec extends SparkTestBase {
   test("projection stays inside whole-stage codegen") {
     // over a parquet scan, not a literal relation — ConvertToLocalRelation
     // would pre-evaluate the latter on the driver and hide the plan
-    graft.functions.TryExprs.register(spark)
     val df = Tables.load(spark, sfDir, "lineitem")
       .select(expr("graft_try_long(concat('x', CAST(l_partkey AS STRING)))").as("v"))
     val plan = df.queryExecution.executedPlan.toString
@@ -72,7 +69,6 @@ class TryExprsSpec extends SparkTestBase {
   }
 
   test("non-string input fails analysis with a clear message") {
-    graft.functions.TryExprs.register(spark)
     import spark.implicits._
     val e = intercept[Exception] {
       Seq(1L).toDF("n").select(expr("graft_try_long(n)")).collect()

@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # One-command closing evidence for a round (VERDICT r13 #8):
-#   1. full scalatest suite
+#   1. full scalatest suite, which must log no codegen compile failure
 #   2. tri-scale graft.Verify dump (sf0.001 / sf0.01 / sf0.1)
 #   3. DuckDB differential oracle over each dump (tools/check_oracle.py)
 #   4. EtlBench throughput gate
@@ -41,9 +41,22 @@ step() { # name cmd...
 # and a fixed Spark scratch dir.
 TIER1_CPUS=$(env -u OMP_NUM_THREADS nproc)
 TIER1_MEM=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)
+# The suite must also log no codegen compile failure: Spark then falls
+# back to interpreted evaluation and only logs an ERROR, so a main-path
+# expression that stops compiling would show as a slowdown and nothing else.
+sbt_test() {
+  env SPARK_GRAFT_CPUS="$TIER1_CPUS" SPARK_DRIVER_MEM="$TIER1_MEM" \
+    SPARK_LOCAL_DIRS=/tmp/spark-local sbt -batch test > "$OUT/sbt-test.raw" 2>&1
+  local rc=$?
+  cat "$OUT/sbt-test.raw"
+  [[ $rc -eq 0 ]] || return 1
+  local n
+  n=$(grep -c "Failed to compile" "$OUT/sbt-test.raw")
+  echo "codegen compile failures: $n"
+  [[ $n -eq 0 ]]
+}
 if [[ "${1:-}" != "--skip-tests" ]]; then
-  step "sbt-test" env SPARK_GRAFT_CPUS="$TIER1_CPUS" SPARK_DRIVER_MEM="$TIER1_MEM" \
-    SPARK_LOCAL_DIRS=/tmp/spark-local sbt -batch test
+  step "sbt-test" sbt_test
 fi
 
 for sf in 0.001 0.01 0.1; do
